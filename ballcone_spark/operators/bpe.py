@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ballcone_spark.plans.barriers import checkpoint
 from ballcone_spark.queries import _query, load_table
 
 __all__ = ["word_freqs", "train_bpe", "bpe_corpus_stats", "encode_docs"]
@@ -87,9 +88,9 @@ def train_bpe(
     the k×d kmeans centroid collect); ``encoded`` is the word table with
     its final symbol sequences (word, freq, syms) — the corpus
     tokenization under the learned vocab, still distributed."""
-    cur = words.select(
-        "word", "freq", _chars(F.col("word")).alias("syms")
-    ).localCheckpoint()
+    cur = checkpoint(
+        words.select("word", "freq", _chars(F.col("word")).alias("syms")), eager=True
+    )
 
     merges: list[tuple[int, str, str, str, int]] = []
     for rank in range(n_merges):
@@ -128,9 +129,9 @@ def train_bpe(
         c = best[0]["c"]
         ab = a + b
         merges.append((rank, a, b, ab, c))
-        cur = cur.withColumn(
-            "syms", _merge_fold(F.col("syms"), a, b, ab)
-        ).localCheckpoint()
+        cur = checkpoint(
+            cur.withColumn("syms", _merge_fold(F.col("syms"), a, b, ab)), eager=True
+        )
     return merges, cur
 
 
@@ -224,7 +225,6 @@ def encode_docs(
     # + md5 of the token stream) against an independent pure-Python
     # BPE train+apply on the same corpus
     driver=False,
-    cacheable=False,  # training runs driver-side jobs at build time
 )
 def docs_bpe_encoded_corpus(spark, sf_dir):
     """Corpus tokenized under the corpus-trained BPE vocab: per doc,
@@ -241,7 +241,6 @@ def docs_bpe_encoded_corpus(spark, sf_dir):
     # cross-checks the full merge list against an independent pure-Python
     # BPE reference on the same corpus (tests/test_operators.py)
     driver=False,
-    cacheable=False,  # training runs driver-side jobs at build time
 )
 def docs_bpe_train_merges(spark, sf_dir):
     """BPE merge table learned from the documents corpus: (rank, left,

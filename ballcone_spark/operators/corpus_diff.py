@@ -99,7 +99,6 @@ _B = f"{duck_hash32('CAST(doc_id AS VARCHAR)')} % 100"
     FROM j GROUP BY change ORDER BY change
     """,
     driver=False,  # registry at the 50 cap; oracle-checked locally
-    cacheable=("documents",),  # max(doc_id) driver job at plan build
 )
 def docs_corpus_diff(spark, sf_dir):
     """Snapshot diff demonstrated against a deterministic v2 derived

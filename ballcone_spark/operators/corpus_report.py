@@ -33,6 +33,7 @@ from ballcone_spark.operators.lm_quality import (
     boilerplate_spans,
     quality_lm_signals_np,
 )
+from ballcone_spark.plans.barriers import checkpoint
 from ballcone_spark.queries import _query, load_table
 
 __all__ = ["corpus_report"]
@@ -55,21 +56,23 @@ def corpus_report(docs: DataFrame) -> DataFrame:
         # per-doc join spine, the dominant-language count, AND (r16)
         # the boilerplate denominator — without it the merged kernel
         # would re-tokenize the corpus once per consumer.
-        base = quality_lm_signals_np(
-            docs, logp, extra_cols=("source", "lang", "n_chars")
-        ).select(
-            "doc_id",
-            "source",
-            "lang",
-            "n_chars",
-            "n_tokens",
-            F.round(
-                F.col("n_uniq_tokens").cast("double") / F.col("n_tokens"), 4
-            ).alias("uniq_ratio"),
-            "fp",
-            "n_tokens_sp",
-            "ppl",
-        ).localCheckpoint(eager=False)
+        base = checkpoint(
+            quality_lm_signals_np(
+                docs, logp, extra_cols=("source", "lang", "n_chars")
+            ).select(
+                "doc_id",
+                "source",
+                "lang",
+                "n_chars",
+                "n_tokens",
+                F.round(
+                    F.col("n_uniq_tokens").cast("double") / F.col("n_tokens"), 4
+                ).alias("uniq_ratio"),
+                "fp",
+                "n_tokens_sp",
+                "ppl",
+            )
+        )
         lm = None  # ppl rides base — identical values, no join
         bp = boilerplate_spans(
             docs,
@@ -83,19 +86,21 @@ def corpus_report(docs: DataFrame) -> DataFrame:
         # base + shuffle-join LM scorer + boilerplate's own denominator
         from ballcone_spark.operators.text_analysis import quality_signals_np
 
-        base = quality_signals_np(
-            docs, extra_cols=("source", "lang", "n_chars")
-        ).select(
-            "doc_id",
-            "source",
-            "lang",
-            "n_chars",
-            "n_tokens",
-            F.round(
-                F.col("n_uniq_tokens").cast("double") / F.col("n_tokens"), 4
-            ).alias("uniq_ratio"),
-            "fp",
-        ).localCheckpoint(eager=False)
+        base = checkpoint(
+            quality_signals_np(
+                docs, extra_cols=("source", "lang", "n_chars")
+            ).select(
+                "doc_id",
+                "source",
+                "lang",
+                "n_chars",
+                "n_tokens",
+                F.round(
+                    F.col("n_uniq_tokens").cast("double") / F.col("n_tokens"), 4
+                ).alias("uniq_ratio"),
+                "fp",
+            )
+        )
         lm = bigram_lm_scores_np(docs).select("doc_id", "ppl")
         bp = boilerplate_spans(docs).select(
             "doc_id", F.col("boilerplate").cast("int").alias("bp")
@@ -204,9 +209,6 @@ ORDER BY a.source
     # promoted to driver r7 (VERDICT r6 #5): the dataset card a curator
     # ships — the most production-shaped composition in the corpus
     # family; slot freed by demoting the tpch_q14 echo
-    # r15: the checkpointed per-doc signal frame is baked state — reuse
-    # the plan only while the documents parquet is unchanged
-    cacheable=("documents",),
 )
 def docs_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dataset card: per-source doc/token mass, exact-dup count,

@@ -47,7 +47,7 @@ from ballcone_spark.functions.text import (
     shingles_of,
     tokens,
 )
-from ballcone_spark.plans.barriers import checkpoint_fresh_stats
+from ballcone_spark.plans.barriers import checkpoint, checkpoint_fresh_stats
 from ballcone_spark.queries import _query, load_table
 
 __all__ = [
@@ -441,16 +441,18 @@ def exact_jaccard_on_pairs(
         # Lineage barrier: both join sides reference this frame, so
         # without it the kernel runs twice (A/B at sf10: verify 26 s →
         # 19.7 s behind the barrier)
-        sets = shingle_sets_np(docs, n=n).localCheckpoint(eager=False)
+        sets = checkpoint(shingle_sets_np(docs, n=n))
     else:
         # same barrier as the Arrow branch (r16): both join sides below
         # reference this frame — un-checkpointed, the JVM shingle-set
         # projection (the HOF tokenize+distinct chain) ran twice per
         # execution. The construction itself is byte-identical; only
         # the second evaluation is gone.
-        sets = docs.withColumn("toks", tokens(F.col("text"))).select(
-            "doc_id", shingles_of(F.col("toks"), n=n).alias("sh")
-        ).localCheckpoint(eager=False)
+        sets = checkpoint(
+            docs.withColumn("toks", tokens(F.col("text"))).select(
+                "doc_id", shingles_of(F.col("toks"), n=n).alias("sh")
+            )
+        )
     if hashed:
         # injective by caller contract ⇒ distinctness and every set
         # cardinality survive the mapping; Jaccard values are identical
@@ -504,10 +506,10 @@ def jaccard_pairs(
     exhaustive inverted index.
 
     Plan-build cost: one count() plus one df-histogram collect (both
-    corpus scans). The registered query caches the built plan keyed on
-    the documents parquet's fingerprint (``cacheable=("documents",)``)
-    — repeat calls on unchanged data skip both collects, and a data
-    change re-derives the cut, so neither can go stale."""
+    corpus scans). The registered query's plan is cached per documents
+    generation (``plans/stages.py``) — repeat calls on unchanged data
+    skip both collects, and a data change re-derives the cut, so
+    neither can go stale."""
     cand, inj = _rare_shingle_candidates(docs, n, max_df, pair_budget)
     # vectorized=False by default: an A/B at sf10 showed the jaccard
     # wall is candidate-generation-bound (238.5 vs 234.3 s — noise), so
@@ -546,7 +548,7 @@ def _rare_shingle_candidates(
     # registered callers (ngram_jaccard, containment) are
     # fingerprint-cached on the documents parquet, so the baked blocks
     # can never go stale against a data change.
-    e = shingle_rows(docs, n=n).localCheckpoint(eager=False)
+    e = checkpoint(shingle_rows(docs, n=n))
     # One aggregation over the distinct shingle space licenses the
     # hashed paths: if xxhash64 is injective on THIS corpus's shingles
     # (it always has been; 2⁻⁶⁴ per pair of shingles), the inverted
@@ -606,11 +608,6 @@ def _rare_shingle_candidates(
     WHERE shared * 1.0 / (na + nb - shared) >= {_JACCARD_THRESHOLD}
     ORDER BY a_id, b_id
     """,
-    # plan (incl. the baked count/df-cut/injectivity literals) is reused
-    # while the documents parquet fingerprint is unchanged; a data
-    # change re-derives the cut (VERDICT r6 #4 — build-time collects
-    # made steady ≈ cold on the family's most expensive operator)
-    cacheable=("documents",),
 )
 def dedup_ngram_jaccard(spark, sf_dir):
     """Near-duplicate pairs with word-3-gram Jaccard ≥ 0.8 (the corpus
@@ -664,7 +661,7 @@ def containment_pairs(
     # mirrors exact_jaccard_on_pairs — both join sides reference this
     # one frame, and without the lineage barrier the Arrow shingle
     # kernel runs twice per execution (sf10 A/B: 26 → 19.7 s, ADVICE r7)
-    sets = shingle_sets_np(docs, n=n).localCheckpoint(eager=False)
+    sets = checkpoint(shingle_sets_np(docs, n=n))
     if inj:
         sets = sets.select(
             "doc_id", F.transform("sh", lambda x: F.xxhash64(x)).alias("sh")
@@ -701,7 +698,6 @@ def containment_pairs(
     ORDER BY a_id, b_id
     """,
     driver=False,  # registry at the 50 cap; oracle-checked locally
-    cacheable=("documents",),  # df-cut collects at plan build
 )
 def dedup_containment(spark, sf_dir):
     """Subset/truncation duplicates: pairs whose max-direction shingle
@@ -898,9 +894,6 @@ _MINHASH_LSH_ORACLE = f"""
     driver=False,  # demoted r7: the vectorized twin (same oracle
     # VERBATIM, bit-identical at oracle SFs) is the driver entry; this
     # pure-JVM path stays the cross-check twin, hash-checked locally
-    # r16: the verify's shingle-set frame is checkpointed now — baked
-    # state, so the plan must rebuild when the source parquet changes
-    cacheable=("documents",),
 )
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash(16) + LSH(4 bands × 4 rows) candidate generation, verified
@@ -917,7 +910,6 @@ def dedup_minhash_lsh(spark, sf_dir):
     # the floor 4×4 and the Arrow signatures are bit-identical to the
     # JVM/DuckDB derivation, so the full candidate→verify pipeline gets
     # hash verification, not rows-only
-    cacheable=("documents",),  # adaptive_band_rows counts at plan build
 )
 def dedup_minhash_lsh_vectorized(spark, sf_dir):
     """MinHash + LSH with the r7 scale path: Arrow signature kernel
@@ -1069,10 +1061,6 @@ def minhash_lsh_pairs(docs: DataFrame, vectorized: bool = False) -> DataFrame:
     ORDER BY source_a, source_b
     """,
     driver=False,  # registry capped at 50; oracle-checked locally
-    # minhash_lsh_pairs(vectorized=True) bakes count-derived band
-    # geometry into the plan at build — invalidate on data change like
-    # every other query on that path (ADVICE r7)
-    cacheable=("documents",),
 )
 def docs_cross_source_dups(spark, sf_dir):
     """Cross-source contamination matrix: near-dup pair counts (and mean
@@ -1393,7 +1381,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
 
     for _ in range(max_iters):
         # large-star: (u, v>u) → (v, m(u))
-        sym = _sym(edges).localCheckpoint(eager=False)
+        sym = checkpoint(_sym(edges))
         large = _canonize(
             sym.where(F.col("v") > F.col("u"))
             .join(_mins(sym), "u")
@@ -1401,8 +1389,8 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
         )
         edges_l = checkpoint_fresh_stats(large)
         # small-star: (u, v<u) → (v, m(u)), plus (u, m(u))
-        sym2 = _sym(edges_l).localCheckpoint(eager=False)
-        mins2 = _mins(sym2).localCheckpoint(eager=False)
+        sym2 = checkpoint(_sym(edges_l))
+        mins2 = checkpoint(_mins(sym2))
         small = _canonize(
             sym2.where(F.col("v") < F.col("u"))
             .join(mins2, "u")
@@ -1496,11 +1484,6 @@ def _clusters_oracle() -> str:
 @_query(
     "docs_dedup_clusters",
     _clusters_oracle(),
-    # dedup_clusters iterates with eager checkpoints at plan build; the
-    # converged plan (anchoring those session-lived RDDs) is reused
-    # while the documents parquet fingerprint is unchanged — a data
-    # change re-runs the propagation (VERDICT r6 #4 pattern)
-    cacheable=("documents",),
 )
 def docs_dedup_clusters(spark, sf_dir):
     """Near-dup cluster resolution, independently checked (VERDICT r4
@@ -1618,7 +1601,6 @@ def dedup_keep_best(
     # sf0.01/0.1, sf1 row-identity vs the recursive closure, sf10
     # measured, planted keep-rule test, windowless-argmax plan gate);
     # demoted tpch_q6_forecast_revenue, a covered scan-agg echo
-    cacheable=("documents",),  # iterative cluster build at plan time
 )
 def docs_dedup_keep_best(spark, sf_dir):
     """Quality-aware dedup: MinHash-LSH pairs → connected components →
@@ -1731,7 +1713,6 @@ def curation_keep_best(docs: DataFrame, text_col: str = "text") -> DataFrame:
     GROUP BY q.source, q.lang ORDER BY q.source, q.lang
     """,
     driver=False,  # registry at the 50 cap; oracle-checked locally
-    cacheable=("documents",),  # iterative cluster build at plan time
 )
 def docs_curation_keep_best(spark, sf_dir):
     """Filter → near-dup cluster → keep-BEST curation, composed and
@@ -1850,10 +1831,9 @@ def split_leakage_audit(docs: DataFrame) -> DataFrame:
     consumed it, and un-checkpointed that re-ran the whole
     shingle/signature/band/verify pipeline a second time at action
     time (a review pass caught the double execution)."""
-    pairs = (
-        minhash_lsh_pairs(docs, vectorized=True)
-        .select("a_id", "b_id")
-        .localCheckpoint(eager=True)
+    pairs = checkpoint(
+        minhash_lsh_pairs(docs, vectorized=True).select("a_id", "b_id"),
+        eager=True,
     )
     clusters = dedup_clusters(pairs)
     asg = (
@@ -1907,7 +1887,6 @@ def split_leakage_audit(docs: DataFrame) -> DataFrame:
             JOIN asg b ON b.doc_id = vp.b_id
     """,
     driver=False,  # registry at the 50 cap; oracle-checked locally
-    cacheable=("documents",),  # iterative cluster build at plan time
 )
 def docs_split_leakage_audit(spark, sf_dir):
     """Split-safety audit, independently verified: the oracle recomputes
@@ -2055,11 +2034,11 @@ def fuzzy_decontamination(
     # Same trade the span family measured at sf10-sf30: materialized
     # gram rows are ~token-stream-sized, far cheaper to store once than
     # to recompute per consumer.
-    c = shingle_rows(docs, n=n).localCheckpoint(eager=False)
-    b = (
-        shingle_rows(benchmark, n=n)
-        .select(F.col("doc_id").alias("bench_id"), "s")
-        .localCheckpoint(eager=False)
+    c = checkpoint(shingle_rows(docs, n=n))
+    b = checkpoint(
+        shingle_rows(benchmark, n=n).select(
+            F.col("doc_id").alias("bench_id"), "s"
+        )
     )
     cut, _ = adaptive_df_cut(
         c.select("s").unionAll(b.select("s")).select("s"), max_df, pair_budget
@@ -2160,8 +2139,6 @@ def fuzzy_decontamination(
     # promoted to driver r9 (VERDICT r8 #2): the oracle replays the
     # adaptive cut, so it stays exact on both sides of the budget
     # boundary; slot freed by demoting the orders_priority_matrix echo
-    # the adaptive cut bakes count-derived literals at plan build
-    cacheable=("documents",),
 )
 def docs_fuzzy_decontamination(spark, sf_dir):
     """Fuzzy-decontamination demo on the synthetic corpus (src0 as the

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ballcone_spark.operators.similarity import _dot, cosine
+from ballcone_spark.plans.barriers import checkpoint
 from ballcone_spark.queries import _query, load_table
 
 __all__ = [
@@ -244,9 +245,6 @@ def embedding_near_dup_pairs(
     """,
     driver=False,  # vacuous at sf0.01 (no pairs ≥0.9 exist); the driver-
     # checked quality gate is dedup_embedding_cosine_recall below
-    # adaptive n_planes runs a count() at plan build — cached while the
-    # embeddings parquet fingerprint is unchanged (VERDICT r6 #4)
-    cacheable=("embeddings",),
 )
 def dedup_embedding_cosine(spark, sf_dir):
     """Embedding near-dup pairs (cos ≥ 0.9): the production API, with
@@ -394,10 +392,10 @@ def ivf_ann(
     # cells): scoring 59.7 s fused vs 0.4 s behind the barrier, with
     # the barrier'd corpus side at 2.0 s. Materializing the assignment
     # is also what a production IVF does — the cell index IS the
-    # materialized routing. eager=False keeps plan-build free; the
+    # materialized routing. The lazy checkpoint keeps plan-build free; the
     # query-side assign (a handful of rows) stays inline so the plan
     # gate still sees the fold.
-    corpus = assign(emb, "embedding").localCheckpoint(eager=False)
+    corpus = checkpoint(assign(emb, "embedding"))
     q = assign(
         queries.select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
@@ -558,9 +556,6 @@ def embeddings_ann_ivf(spark, sf_dir):
       ON b.query_id = a.query_id AND b.neighbor_id = a.neighbor_id
     GROUP BY b.query_id ORDER BY b.query_id
     """,
-    # query rows collected at plan build (Arrow truth side) — cache
-    # keyed on the embeddings parquet fingerprint
-    cacheable=("embeddings",),
 )
 def embeddings_ann_ivf_recall(spark, sf_dir):
     """recall@5 of IVF ANN vs the exact brute-force top-5, per query —

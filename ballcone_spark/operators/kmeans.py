@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ballcone_spark.operators.similarity import cosine
+from ballcone_spark.plans.barriers import checkpoint
 from ballcone_spark.queries import _query, load_table
 
 __all__ = ["train_ivf_codebook", "assign_cells", "kmeans_inertia"]
@@ -108,7 +109,7 @@ def train_ivf_codebook(
     # in (and iters× rebuilds of any broadcast inside it; the r4
     # CollapseProject / r7 sf10 loop lessons). Gated by
     # test_iterative_loops_read_checkpointed_input.
-    emb = emb.localCheckpoint(eager=False)
+    emb = checkpoint(emb)
     for _ in range(iters):
         assigned = assign_cells(emb, _codebook_df(spark, cents))
         new_rows = (
@@ -136,7 +137,7 @@ def kmeans_inertia(emb: DataFrame, centroids: DataFrame) -> float:
     return assign_cells(emb, centroids).agg(F.avg("_sim")).first()[0]
 
 
-@_query("embeddings_ivf_codebook_trained", None, driver=False, cacheable=False)
+@_query("embeddings_ivf_codebook_trained", None, driver=False)
 def embeddings_ivf_codebook_trained(spark, sf_dir):
     """Cell-size profile of a trained (k=10, 3-iteration) codebook —
     rows-only by necessity: the iterative trainer collects data-dependent

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ballcone_spark.operators.repetition import _ngrams
+from ballcone_spark.plans.barriers import checkpoint
 from ballcone_spark.queries import _query, load_table
 
 __all__ = ["bigram_lm_scores", "boilerplate_spans"]
@@ -406,9 +407,7 @@ def boilerplate_spans(
     # one codegen gram pass, materialized lazily: both consumers below
     # (the frequency aggregate and the occurrence semi-join) reference
     # it — un-checkpointed, each re-ran the gram construction
-    grams = _grams(docs, text_col, SPAN_N, vectorized).localCheckpoint(
-        eager=False
-    )
+    grams = checkpoint(_grams(docs, text_col, SPAN_N, vectorized))
     frequent = (
         grams.groupBy("g")
         .agg(F.countDistinct("doc_id").alias("nd"))
@@ -593,16 +592,15 @@ def quality_percentile_filter(
     Cost SLA (same as ranking._ranked_with_total): two driver-blocking
     jobs at plan-build (quantile probe, bucket-count pass; the collect
     is bounded by #sources × num_buckets rows) + the final execution.
-    The scored (source, ppl) projection is localCheckpoint()ed so the
+    The scored (source, ppl) projection is checkpointed so the
     Arrow LM kernel runs ONCE, not once per pass."""
     from pyspark.sql import Window
 
     spark = docs.sparkSession
     scores = bigram_lm_scores_np(docs, text_col)
-    r = (
-        scores.join(docs.select("doc_id", "source"), "doc_id")
-        .select("source", "ppl")
-        .localCheckpoint()
+    r = checkpoint(
+        scores.join(docs.select("doc_id", "source"), "doc_id").select("source", "ppl"),
+        eager=True,
     )
 
     fracs = [i / num_buckets for i in range(1, num_buckets)]
@@ -686,9 +684,6 @@ def quality_percentile_filter(
     FROM r GROUP BY source ORDER BY source NULLS FIRST
     """,
     driver=False,  # registry at the 50 cap; oracle-checked locally
-    # the plan embeds data-derived literals (quantile boundaries, bucket
-    # offsets) — rebuild when the source table changes
-    cacheable=("documents",),
 )
 def docs_quality_percentile_filter(spark, sf_dir):
     """Percentile-threshold quality curation per source (keep the

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ballcone_spark.plans import stages
+from ballcone_spark.plans.barriers import checkpoint
 from ballcone_spark.queries import _query, load_table
 
 __all__ = [
@@ -74,12 +76,14 @@ def pack_sequences(
     # text to count tokens (plan: 2 parquet scans; now 1). The
     # materialized rows are 4 narrow columns per doc — tens of bytes —
     # against a full re-tokenization of the text column.
-    base = docs.select(
-        "doc_id",
-        F.size(F.split(F.col(text_col), " ")).cast("long").alias("n_tokens"),
-        h.alias("_h"),
-        F.substring(h, 1, 2).alias("_bucket"),
-    ).localCheckpoint(eager=False)
+    base = checkpoint(
+        docs.select(
+            "doc_id",
+            F.size(F.split(F.col(text_col), " ")).cast("long").alias("n_tokens"),
+            h.alias("_h"),
+            F.substring(h, 1, 2).alias("_bucket"),
+        )
+    )
     # Phase 1+2: per-bucket inclusive cumsum. Ordering by (_bucket, _h)
     # refines ordering by _h, so per-bucket prefix sums + bucket offsets
     # recompose the global prefix sum exactly.
@@ -268,10 +272,6 @@ packed AS (
     # promoted to driver r8 (VERDICT r7 #4): the most production-shaped
     # packing query — the bucketed two-phase prefix sum vs the oracle's
     # naive global window; slot freed by demoting the tpch_q18 echo
-    # r15: pack_sequences checkpoints its token-count projection — baked
-    # state, so reuse the plan only while the documents parquet is
-    # unchanged
-    cacheable=("documents",),
 )
 def docs_pack_sequences(spark, sf_dir):
     """Concat-and-chunk packing map at 512 tokens/block. The oracle is
@@ -304,7 +304,6 @@ def docs_pack_sequences(spark, sf_dir):
     ORDER BY block_id
     """,
     driver=False,
-    cacheable=("documents",),  # r15: pack_sequences bakes a checkpoint
 )
 def docs_pack_block_stats(spark, sf_dir):
     """Block occupancy of the 512-token packing: every block's doc
@@ -343,7 +342,6 @@ _BLOCKS_PER_SHARD = 16
     ORDER BY shard_id
     """,
     driver=False,
-    cacheable=("documents",),  # r15: pack_sequences bakes a checkpoint
 )
 def docs_pack_shard_manifest(spark, sf_dir):
     """Shard-level manifest of the 512-token packing at 16 blocks per
@@ -690,14 +688,10 @@ def chunk_semantic_pairs(
         if chunks is not None
         else chunk_documents(docs, window, stride, text_col, with_tokens=True)
     )
-    dch = (
-        ch.select("chunk_fp", "chunk_toks")
-        .distinct()
-        .localCheckpoint(eager=False)
+    dch = checkpoint(ch.select("chunk_fp", "chunk_toks").distinct())
+    emb = checkpoint(
+        chunk_embeddings(docs, window, stride, dim, text_col, distinct_chunks=dch)
     )
-    emb = chunk_embeddings(
-        docs, window, stride, dim, text_col, distinct_chunks=dch
-    ).localCheckpoint(eager=False)
     grams = chunk_gram_rows(dch)
     rare = (
         grams.groupBy("g")
@@ -714,7 +708,7 @@ def chunk_semantic_pairs(
     # genuinely scale with the corpus: a per-partition hash map OOMs
     # where a merge join spills (measured: shuffle_hash died building
     # the hash map at sf10 under local-mode memory).
-    gr = grams.join(rare.hint("merge"), "g").localCheckpoint(eager=False)
+    gr = checkpoint(grams.join(rare.hint("merge"), "g"))
     cand = (
         gr.select(F.col("chunk_fp").alias("a_fp"), "g")
         .join(
@@ -846,10 +840,6 @@ def _duck_chunk_pairs(dim: int, tau: float) -> str:
     # bearing, sf30-measured, merge-pinned with a plan gate; the freed
     # slot came from tpch_q5_regional_revenue (multi-join+agg skeleton
     # covered by q3/q13/orders_lineitem_bucketed)
-    # the plan anchors lazily-checkpointed RDDs (dch/emb/gr) — rebuild
-    # when the source parquet changes, or a stale checkpoint would
-    # serve the OLD corpus
-    cacheable=("documents",),
 )
 def docs_chunk_semantic_pairs(spark, sf_dir):
     """Chunk-level semantic near-dup pairs (the RAG-loop closure,
@@ -935,46 +925,23 @@ def _duck_chunk_alias(dim: int, tau: float) -> str:
     """
 
 
-#: (applicationId, sf_dir) → (documents fingerprint, chunk-cluster
-#: frame). Cold-path cut (r16, VERDICT r15 #6): the driver's cold bench
-#: attributed ~31 s of its 92 s sf0.1 total to the THREE registered
-#: alias queries (map 11.4 s, arrival 10.0 s, resolve 11.4 s), each of
-#: which independently replayed the chunk pair pipeline (chunker →
-#: embeddings → gram self-join → exact-cosine verify) AND the
-#: star-alternation closure's driver-job rounds at plan build. The
-#: closure output is one frame all three derive from — memoize it with
-#: the same fingerprint guard (and superseded-checkpoint cleanup) the
-#: plan cache uses. Steady is untouched: each query's own cached plan
-#: already reused its frames; this shares the BUILD.
-_CHUNK_CLUSTERS_MEMO: dict = {}
-
-
 def _chunk_clusters_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id=chunk_fp, cluster_id=component-min fp) over the default-
     geometry chunk semantic pairs — the shared core of the three alias
-    queries, built once per documents fingerprint."""
+    queries, built once per documents generation in the build cache
+    instead of once per query (r16: the pair pipeline and the closure's
+    driver-job rounds were ~2/3 of the trio's cold build)."""
     from ballcone_spark.operators.dedup import dedup_clusters
-    from ballcone_spark.queries import (
-        _table_fingerprints,
-        _unpersist_plan_checkpoints,
-    )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    fp = _table_fingerprints(sf_dir, ("documents",))
-    hit = _CHUNK_CLUSTERS_MEMO.get(key)
-    if hit is None or hit[0] != fp:
-        if hit is not None:
-            _unpersist_plan_checkpoints(hit[1])
-        docs = load_table(spark, sf_dir, "documents")
-        pairs = chunk_semantic_pairs(docs)
-        clusters = dedup_clusters(
+    def build() -> DataFrame:
+        pairs = chunk_semantic_pairs(load_table(spark, sf_dir, "documents"))
+        return dedup_clusters(
             pairs.select(
                 F.col("a_fp").alias("a_id"), F.col("b_fp").alias("b_id")
             )
         )
-        hit = (fp, clusters)
-        _CHUNK_CLUSTERS_MEMO[key] = hit
-    return hit[1]
+
+    return stages.memo(spark, sf_dir, "chunk_clusters", build)
 
 
 @_query(
@@ -982,7 +949,6 @@ def _chunk_clusters_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     _duck_chunk_alias(CHUNK_EMB_DIM, CHUNK_COS_T),
     # promoted r11 (VERDICT r10 #1): the vector-store redirect table with a
     # recursive-closure oracle; dedup_embedding_cosine_recall demoted
-    cacheable=("documents",),  # checkpointed chunk pipeline under it
 )
 def docs_chunk_alias_map(spark, sf_dir):
     """Vector-store alias map (r10): WHICH chunk each semantic near-dup
@@ -1072,7 +1038,6 @@ def _duck_alias_resolve(dim: int, tau: float) -> str:
     # driver CORRECTNESS row; events_overview demoted (its shape is
     # inside events_grouping_sets_profile, the events_dashboard
     # argument from r9)
-    cacheable=("documents",),
 )
 def docs_chunk_alias_resolve(spark, sf_dir):
     """The alias map's APPLY side as an oracle-bearing batch query
@@ -1090,7 +1055,7 @@ def docs_chunk_alias_resolve(spark, sf_dir):
     own shuffle-free chunker over the scan, checkpointed so the rollup
     branches don't re-run it."""
     docs = load_table(spark, sf_dir, "documents")
-    ch = chunk_documents(docs, with_tokens=True).localCheckpoint(eager=False)
+    ch = checkpoint(chunk_documents(docs, with_tokens=True))
     refs = ch.select("doc_id", "chunk_fp")
     clusters = _chunk_clusters_cached(spark, sf_dir)
     alias_map = clusters.select(

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ballcone_spark.plans.barriers import checkpoint
 from ballcone_spark.queries import _query, load_table
 
 __all__ = [
@@ -117,7 +118,7 @@ def train_quality_classifier(
     (d+1)-float collect, a driver-side weight update. ``feats`` is
     checkpointed once up front; every round's aggregate reads the
     checkpoint, never the upstream projection."""
-    d = feats.select("label", *FEATURES).localCheckpoint(eager=True)
+    d = checkpoint(feats.select("label", *FEATURES), eager=True)
     n = d.count()
     if n == 0:
         raise ValueError("empty feature frame")
@@ -200,7 +201,6 @@ def quality_classifier_report(
     # (X, y) and pins the weights to float tolerance, plus separation
     # and loss-decrease properties
     driver=False,
-    cacheable=False,  # training runs driver-side jobs at build time
 )
 def docs_quality_classifier_report(spark, sf_dir):
     """Learned quality filter, end to end: distill the curation gate
@@ -429,7 +429,6 @@ def _curation_budget_oracle(w: list[float], budget: int) -> str:
     _curation_budget_oracle(FROZEN_W, _LEARNED_BUDGET),
     # promoted r11 (VERDICT r10 #1): the full production curation order in
     # one oracle-replayed query; docs_simhash demoted to make the slot
-    cacheable=("documents",),  # iterative cluster build at plan time
 )
 def docs_curation_budget_mix(spark, sf_dir):
     """The production pipeline END-TO-END: gate → near-dup cluster →

@@ -292,7 +292,6 @@ GROUP BY b.query_id ORDER BY b.query_id
     # is 23× slower than the ADC-LUT Arrow path at 20 k vectors; the
     # vectorized twin (same oracle VERBATIM) is the driver entry and
     # this stays as the pure-JVM cross-check, hash-checked locally
-    cacheable=("embeddings",),  # seed collect at plan build
 )
 def embeddings_pq_ann_recall(spark, sf_dir):
     """recall@5 of compressed-domain PQ ANN vs the exact brute-force
@@ -300,9 +299,9 @@ def embeddings_pq_ann_recall(spark, sf_dir):
     vec_ids' subvectors — so DuckDB derives the identical codebooks from
     the table and the whole encode → reconstruct → score → top-k path is
     hash-verified (VERDICT r3 #3; non-vacuous: measured recall 0.2–0.4
-    vs ~0.0025 chance at sf0.01). ``cacheable=False`` because the seed
-    collect runs at plan build (same class as the jaccard df-cut).
-    Recall counts neighbor-ID membership only — immune to last-ulp
+    vs ~0.0025 chance at sf0.01). The seed collect runs at plan build
+    (same class as the jaccard df-cut), so the plan is cached per
+    embeddings generation. Recall counts neighbor-ID membership only — immune to last-ulp
     similarity differences between engines."""
     from ballcone_spark.operators.similarity import knn_bruteforce
 
@@ -526,9 +525,6 @@ def pq_ann_np(
     # promoted to driver r7 (VERDICT r6 #1): this IS the path you'd ship
     # at 100 TB — the JVM HOF twin is bounded at ~6 µs per interpreted
     # dot (CodegenFallback) however expressed
-    # seed collect at plan build — cached while the embeddings parquet
-    # fingerprint is unchanged (VERDICT r6 #4 pattern)
-    cacheable=("embeddings",),
 )
 def embeddings_pq_ann_recall_vectorized(spark, sf_dir):
     """recall@5 of the ADC-LUT vectorized PQ path vs exact brute force —

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ballcone_spark.plans.barriers import checkpoint
 from ballcone_spark.queries import _query, load_table
 
 __all__ = ["overlap_pairs", "sessions_with_bounds"]
@@ -217,9 +218,6 @@ sessions AS (
     GROUP BY a.user_id, b.user_id
     ORDER BY user_a, user_b
     """,
-    # the checkpointed session frame is baked state: reuse the plan only
-    # while the events parquet is unchanged (r15)
-    cacheable=("events",),
 )
 def events_session_overlaps(spark, sf_dir):
     """Co-activity: for user pairs, how many of their session
@@ -235,7 +233,7 @@ def events_session_overlaps(spark, sf_dir):
     # window + groupBy re-ran once per reference (plan: 6 parquet scans;
     # now 1). The session frame is tiny (≤ users × sessions rows), so
     # materializing it once is strictly cheaper at any scale.
-    sess = sessions_with_bounds(ev, _MAX_USER).localCheckpoint(eager=False)
+    sess = checkpoint(sessions_with_bounds(ev, _MAX_USER))
     pairs = overlap_pairs(sess, sess, on=[], start="start", end="end")
     return (
         pairs.where(F.col("a_user_id") < F.col("b_user_id"))

@@ -46,11 +46,12 @@ def _ranked_with_total(
     plan build (the percentile probe and the bucket-count pass) plus the
     final execution — ~3 input scans per invocation. That is the price
     of exact global ranks with correct staleness semantics: the offsets
-    are data-dependent literals, so callers register with
-    ``cacheable=False`` (ADVICE r2) and every call re-derives them. Fine
-    at an analytics daemon's query rate; for a hot path, precompute the
-    offsets once per ingest batch and reuse, or accept approximate
-    ranks (percentile_approx only) and skip the count pass."""
+    are data-dependent literals, so a registered caller's plan is cached
+    per source generation (``plans/stages.py``, ADVICE r2) and a data
+    change re-derives them. Fine at an analytics daemon's query rate;
+    for a hot path, precompute the offsets once per ingest batch and
+    reuse, or accept approximate ranks (percentile_approx only) and
+    skip the count pass."""
     fracs = [i / num_buckets for i in range(1, num_buckets)]
     bounds_row = df.select(
         F.percentile_approx(order_col, fracs, 10_000).alias("b")

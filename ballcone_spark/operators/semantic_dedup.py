@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ballcone_spark.operators.similarity import _dot, _norm
+from ballcone_spark.plans.barriers import checkpoint
 from ballcone_spark.queries import _query, load_table
 
 __all__ = [
@@ -240,7 +241,7 @@ def semantic_dedup_trained(
     ids = np.array([int(r["cell_id"]) for r in cents])
     cmat = np.array([r["centroid"] for r in cents], dtype=np.float64)
     cmat = (cmat / np.sqrt((cmat * cmat).sum(axis=1))[:, None]).T
-    return _report_from_assign(_route_np(emb, ids, cmat).localCheckpoint())
+    return _report_from_assign(checkpoint(_route_np(emb, ids, cmat), eager=True))
 
 
 def semantic_dedup_report(
@@ -259,10 +260,10 @@ def semantic_dedup_report(
     both paths to identical output, and the DuckDB oracle checks the
     vectorized path row-for-row)."""
     if vectorized:
-        return _report_from_assign(_assign_np(emb, k).localCheckpoint())
+        return _report_from_assign(checkpoint(_assign_np(emb, k), eager=True))
     # materialize the routing once: three consumers (sizes + both pair
     # legs) would otherwise re-run the n×k argmax map each
-    assign = _assign(emb, k).localCheckpoint()
+    assign = checkpoint(_assign(emb, k), eager=True)
     a = assign.select(
         F.col("cluster_id"),
         F.col("vec_id").alias("a_id"),
@@ -351,10 +352,6 @@ ORDER BY n.cluster_id
     # promoted to driver r7 (VERDICT r6 #5): the published web-scale
     # semantic-dedup method (Abbas et al.), vectorized route/pair
     # kernels; slot freed by demoting the tpch_q8 echo
-    # adaptive_k runs a count() at plan build — cached (with the
-    # checkpointed routing it anchors) while the embeddings parquet
-    # fingerprint is unchanged (VERDICT r6 #4 pattern)
-    cacheable=("embeddings",),
 )
 def docs_semantic_dedup(spark, sf_dir):
     """SemDeDup over the embeddings table with deterministic seed
@@ -378,7 +375,6 @@ def docs_semantic_dedup(spark, sf_dir):
     # every kernel downstream of the centroid source is oracle-checked
     # through docs_semantic_dedup's seeded twin
     driver=False,
-    cacheable=False,  # training runs driver-side jobs at build time
 )
 def docs_semantic_dedup_trained(spark, sf_dir):
     """SemDeDup with a Lloyd's-trained codebook (the production
@@ -398,7 +394,7 @@ def semantic_dedup_keep(
     removed vectors dropped — (vec_id, cluster_id, e) of survivors.
     Same vectorized route/pair kernels; the removed set anti-joins the
     assignment (hash join on vec_id, no second scoring pass)."""
-    assign = _assign_np(emb, k).localCheckpoint()
+    assign = checkpoint(_assign_np(emb, k), eager=True)
     removed = _removed_np(assign).select("vec_id")
     return assign.join(removed, "vec_id", "left_anti").select(
         "vec_id", "cluster_id", "e"

@@ -203,9 +203,6 @@ _KNN_ORACLE = f"""
     # actually run at 100 TB — queries broadcast as a numpy matrix, one
     # corpus scan, per-batch BLAS (2.7× the interpreted-HOF twin here,
     # and the gap grows with corpus size)
-    # query-vector collect at plan build — cached while the embeddings
-    # parquet fingerprint is unchanged (VERDICT r6 #4 pattern)
-    cacheable=("embeddings",),
 )
 def embeddings_knn_bruteforce_vectorized(spark, sf_dir):
     """Exact cosine top-5 via the Arrow matmul twin."""
@@ -340,9 +337,6 @@ def _duck_bucket_expr(vec: str) -> str:
       ON b.query_id = a.query_id AND b.neighbor_id = a.neighbor_id
     GROUP BY b.query_id ORDER BY b.query_id
     """,
-    # query rows collected at plan build (Arrow truth side) — cache
-    # keyed on the embeddings parquet fingerprint
-    cacheable=("embeddings",),
 )
 def embeddings_ann_lsh_recall(spark, sf_dir):
     """recall@5 of hyperplane-LSH ANN vs the exact brute-force top-5, per

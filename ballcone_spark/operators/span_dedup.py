@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ballcone_spark.operators.lm_quality import _gram_rows
+from ballcone_spark.plans.barriers import checkpoint
 from ballcone_spark.queries import _query, load_table
 
 __all__ = [
@@ -136,9 +137,9 @@ def _qualifying_spans(
     # sf10 (the pair self-join dominates — BASELINE §6j), kept because
     # it deletes three corpus-wide window shuffles from the plan, the
     # term that grows with document length
-    gi = (
+    gi = checkpoint(
         g.select("doc_id", "pos", F.xxhash64("g").alias("g")) if inj else g
-    ).localCheckpoint(eager=False)
+    )
     from ballcone_spark.operators.dedup import adaptive_df_cut
 
     cut, _collapsed = adaptive_df_cut(
@@ -424,9 +425,6 @@ ORDER BY w.doc_id
     # by oracle at sf0.01 + sf1, brute-force fuzz, a binding-budget SQL
     # replay test, and an sf10 measurement; slot freed by demoting the
     # tpch_q10 echo
-    # the adaptive cut bakes count-derived literals at plan build —
-    # invalidate on data change (the docs_cross_source_dups lesson)
-    cacheable=("documents",),
 )
 def docs_exact_span_dups(spark, sf_dir):
     """Span-level (ExactSubstr) duplicate report over the documents
@@ -444,7 +442,6 @@ def docs_exact_span_dups(spark, sf_dir):
     # promoted to driver r9 (VERDICT r8 #2): the Lee et al. deletion
     # signal — the actionable per-doc output of the span family; slot
     # freed by demoting the events_dashboard echo
-    cacheable=("documents",),  # same baked-literal invalidation rule
 )
 def docs_dup_span_coverage(spark, sf_dir):
     """Per-document duplicated-span exposure: tokens inside ≥ 1
@@ -480,7 +477,6 @@ FROM sizes GROUP BY 1 ORDER BY 1
     "docs_span_dedup_clusters",
     _SPAN_CLUSTERS_ORACLE,
     driver=False,  # registry at the 50 cap; oracle-checked locally
-    cacheable=("documents",),  # count-derived cut + iterative build
 )
 def docs_span_dedup_clusters(spark, sf_dir):
     """Cluster resolution over the SPAN pair list — the span family
@@ -555,7 +551,12 @@ def span_deduped_corpus(
     w_ord = Window.partitionBy("doc_id").orderBy("s", "e")
     pmax = F.max("e").over(w_ord.rowsBetween(Window.unboundedPreceding, -1))
     is_new = F.when(pmax.isNull() | (F.col("s") > pmax + 1), 1).otherwise(0)
-    merged = (
+    # materialize ONCE: merged feeds before/tail/removed/assembled —
+    # without the barrier the whole span pipeline (gram self-join +
+    # islands) re-executes once per derived join side (~3×; the
+    # iterative-loop checkpoint lesson). Size is bounded by the
+    # merged-interval count ≪ span pairs.
+    merged = checkpoint(
         iv.withColumn(
             "_g",
             F.sum(is_new).over(
@@ -564,12 +565,6 @@ def span_deduped_corpus(
         )
         .groupBy("doc_id", "_g")
         .agg(F.min("s").alias("s"), F.max("e").alias("e"))
-        # materialize ONCE: merged feeds before/tail/removed/assembled —
-        # without the barrier the whole span pipeline (gram self-join +
-        # islands) re-executes once per derived join side (~3×; the
-        # iterative-loop checkpoint lesson). Size is bounded by the
-        # merged-interval count ≪ span pairs.
-        .localCheckpoint(eager=False)
     )
 
     # materialize ONCE (r16): base is referenced THREE ways below (the
@@ -577,10 +572,12 @@ def span_deduped_corpus(
     # projection is shuffle-free, so without a barrier each reference
     # re-scanned the corpus and re-split every text (plan: 3 parquet
     # scans; now 0 visible). Registered caller is fingerprint-cached.
-    base = docs.where(F.col(text_col).isNotNull()).select(
-        "doc_id",
-        F.split(F.col(text_col), " ").alias("_w"),
-    ).localCheckpoint(eager=False)
+    base = checkpoint(
+        docs.where(F.col(text_col).isNotNull()).select(
+            "doc_id",
+            F.split(F.col(text_col), " ").alias("_w"),
+        )
+    )
     n_in = F.size("_w").cast("long")
 
     # kept pieces: before each merged interval (from prev end+1 to s-1)
@@ -719,7 +716,6 @@ ORDER BY w.doc_id
     # rewritten bytes oracle-pinned); the freed slot came from
     # events_running_visits (frame-spec window shape covered by
     # events_day_over_day)
-    cacheable=("documents",),  # count-derived cut baked at plan build
 )
 def docs_span_deduped_corpus(spark, sf_dir):
     """The deduped-corpus writer's audit view (VERDICT r8 #6): per doc

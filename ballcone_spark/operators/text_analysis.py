@@ -18,6 +18,7 @@ from ballcone_spark.functions.text import (
     tokens,
     uniq_token_ratio,
 )
+from ballcone_spark.plans.barriers import checkpoint
 from ballcone_spark.queries import _query, load_table
 
 _DUCK_TOKENS = "string_split_regex(trim(text), '\\s+')"
@@ -516,9 +517,6 @@ scored AS (SELECT t.doc_id, t.term,
     FROM ranked WHERE rank <= {_TFIDF_TOPK}
     ORDER BY doc_id, rank
     """,
-    # the checkpointed (doc_id, term) aggregate is baked state: reuse
-    # the plan only while the documents parquet is unchanged (r15)
-    cacheable=("documents",),
 )
 def docs_tfidf_top_terms(spark, sf_dir):
     """Top-3 TF-IDF terms per document (smoothed IDF:
@@ -551,11 +549,7 @@ def docs_tfidf_top_terms(spark, sf_dir):
     # now read the materialized aggregate, and TF's per-doc filter runs
     # over it too — same rows, since TF of a doc never depends on other
     # docs. Plan: 3 parquet scans → 1.
-    tf_counts = (
-        tok.groupBy("doc_id", "term")
-        .agg(F.count("*").alias("f"))
-        .localCheckpoint(eager=False)
-    )
+    tf_counts = checkpoint(tok.groupBy("doc_id", "term").agg(F.count("*").alias("f")))
     w_doc = Window.partitionBy("doc_id")
     tf = tf_counts.withColumn("tf", F.col("f") / F.sum("f").over(w_doc))
     df = tf_counts.groupBy("term").agg(F.count("*").alias("df"))

@@ -36,7 +36,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-__all__ = ["checkpoint_fresh_stats"]
+from ballcone_spark.plans import stages
+
+__all__ = ["checkpoint", "checkpoint_fresh_stats"]
+
+
+def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager)``, pinned to the build running on
+    this thread so the build cache releases its blocks with the entry
+    (``plans/stages.py``). Lazy by default: most barriers here only stop
+    a frame's consumers from re-running its lineage."""
+    ck = df.localCheckpoint(eager=eager)
+    stages.pin(ck)
+    return ck
 
 
 def checkpoint_fresh_stats(df: DataFrame) -> DataFrame:
@@ -51,7 +63,7 @@ def checkpoint_fresh_stats(df: DataFrame) -> DataFrame:
     absent or the JVM call fails, return the plain localCheckpoint —
     correct, just carrying the snapshotted stats (slower planning on
     deep iteration, never wrong results)."""
-    ck = df.localCheckpoint(eager=True)
+    ck = checkpoint(df, eager=True)
     spark = df.sparkSession
     if not hasattr(spark, "_jsparkSession") or not hasattr(ck, "_jdf"):
         return ck  # Spark Connect / no py4j surface: stats stay inherited

@@ -21,10 +21,18 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ballcone_spark.plans import stages
+
 __all__ = ["bucketize", "ensure_bucketed", "ensure_sorted"]
+
+_REPO_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 
 def bucketize(
@@ -43,6 +51,47 @@ def bucketize(
     w.format("parquet").saveAsTable(name)
 
 
+def _layout_copy(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    name: str,
+    write: Callable[[str], None],
+) -> str:
+    """Path of the on-disk copy ``name`` of a testdata table, (re)written
+    by ``write(path)`` unless it holds the current source generation.
+    Memoized in the build cache (``plans/stages.py``), so an in-session
+    source change reaches the copy like any other build. On disk, the
+    committer's ``_SUCCESS`` marks a complete write (ADVICE r3: a crash
+    mid-commit leaves a partial file set that is not authoritative) and
+    ``_SOURCE_FP`` the source fingerprint it was written from (r5: the
+    driver regenerated the testdata under a persisted warehouse, so a
+    copy from a previous generation would silently serve stale rows).
+    Anything else is discarded and rewritten, never inherited."""
+
+    def build() -> str:
+        fp = stages.source(sf_dir, table)
+        path = os.path.join(_REPO_ROOT, "spark-warehouse", name)
+        fp_file = os.path.join(path, "_SOURCE_FP")
+        if os.path.exists(os.path.join(path, "_SUCCESS")) and os.path.exists(
+            fp_file
+        ):
+            with open(fp_file) as f:
+                if f.read().strip() == fp:
+                    return path
+        shutil.rmtree(path, ignore_errors=True)
+        write(path)
+        with open(fp_file, "w") as f:
+            f.write(fp)
+        return path
+
+    return stages.memo(spark, sf_dir, name, build)
+
+
+def _sf_key(sf_dir: str) -> str:
+    return re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+
+
 def ensure_bucketed(
     spark: SparkSession,
     sf_dir: str,
@@ -52,61 +101,35 @@ def ensure_bucketed(
 ) -> str:
     """Idempotently materialize a bucketed copy of a testdata table and
     return its catalog name (``bkt_<table>_<sf>``). The write-once
-    shuffle runs only when the session hasn't registered the table yet —
-    every later equi-join on ``keys`` against another table bucketed with
-    the same count is exchange-free. The copy is a snapshot of the source
-    at bucketize time (the same immutable-input contract the testdata
-    parquet itself has)."""
+    shuffle runs only when no copy of the current source generation
+    exists — every later equi-join on ``keys`` against another table
+    bucketed with the same count is exchange-free."""
     from ballcone_spark.queries import load_table
 
-    sf_key = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
     # bucket count is part of the identity: re-registration binds
     # CLUSTERED BY metadata to existing files, which is only sound when
     # the spec matches what was written — a different count must land in
     # a different table/path, never inherit stale buckets
-    name = f"bkt_{table}_{sf_key}_b{n_buckets}"
-    if spark.catalog.tableExists(name):
-        return name
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    path = os.path.join(repo_root, "spark-warehouse", name)
-    fp_file = os.path.join(path, "_SOURCE_FP")
-    fp = _source_fingerprint(sf_dir, table)
-    if os.path.isdir(path) and not os.path.exists(
-        os.path.join(path, "_SUCCESS")
-    ):
-        # ADVICE r3: a bucketize that crashed mid-commit leaves a partial
-        # file set; without the committer's _SUCCESS marker the directory
-        # is not authoritative — discard and rewrite below.
-        import shutil
+    name = f"bkt_{table}_{_sf_key(sf_dir)}_b{n_buckets}"
 
-        shutil.rmtree(path)
-    if os.path.isdir(path):
-        # Stale-source guard (r5 lesson: the driver regenerated the
-        # testdata under a persisted warehouse — re-registering buckets
-        # written from a PREVIOUS generation would silently serve stale
-        # rows). The fingerprint (source size + mtime) recorded at
-        # bucketize time must match the current source; a missing or
-        # mismatched marker means rewrite, never inherit.
-        stale = True
-        if os.path.exists(fp_file):
-            with open(fp_file) as f:
-                stale = f.read().strip() != fp
-        if stale:
-            import shutil
+    def write(path: str) -> None:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        bucketize(load_table(spark, sf_dir, table), name, keys, n_buckets, path=path)
 
-            shutil.rmtree(path)
-    if os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path)
-    ):
+    exists = spark.catalog.tableExists(name)
+    if not exists:
+        # the catalog forgot the table (a fresh session, or a drop):
+        # re-check the files on disk instead of trusting the memo
+        stages.evict_plan(name)
+    path = _layout_copy(spark, sf_dir, table, name, write)
+    if not exists and not spark.catalog.tableExists(name):
         # A previous session already paid the bucketize shuffle — the
         # default in-memory catalog forgot the metadata, not the data.
         # Re-register an external bucketed table over the existing files
         # (bucket ids live in the part-file names, so the spec must match
         # what bucketize wrote: same keys, same count). Saves the ~6 s
-        # rewrite per fresh session; the fingerprint check above pins the
-        # files to the exact source generation they were written from.
+        # rewrite per fresh session; _layout_copy pins the files to the
+        # exact source generation they were written from.
         ddl = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}"
             for f in load_table(spark, sf_dir, table).schema.fields
@@ -117,10 +140,6 @@ def ensure_bucketed(
             f"CLUSTERED BY ({key_list}) SORTED BY ({key_list}) "
             f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
         )
-        return name
-    bucketize(load_table(spark, sf_dir, table), name, keys, n_buckets, path=path)
-    with open(fp_file, "w") as f:
-        f.write(fp)
     return name
 
 
@@ -145,8 +164,7 @@ def ensure_sorted(
     0.296 s → 0.195 s steady for `events_scan_window`; the sort+write
     is ~6 s once). This is the single-column analog of
     :func:`ensure_bucketed` — write-once layout work amortized over
-    every later query — with the same crash-safety (_SUCCESS) and
-    stale-source (fingerprint) guards."""
+    every later query — behind the same copy guard."""
     from ballcone_spark.queries import load_table
 
     if n_files is None:
@@ -160,32 +178,11 @@ def ensure_sorted(
         # measured slower than 32).
         st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
         n_files = min(32, max(8, st.st_size // (5 << 20)))
-    sf_key = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
     # file count is part of the copy's identity: a granularity change
     # must land in a new path, never inherit the old layout
-    name = f"srt_{table}_{sf_key}_{col}_f{n_files}"
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    path = os.path.join(repo_root, "spark-warehouse", name)
-    fp_file = os.path.join(path, "_SOURCE_FP")
-    fp = _source_fingerprint(sf_dir, table)
-    if os.path.isdir(path) and not os.path.exists(
-        os.path.join(path, "_SUCCESS")
-    ):
-        import shutil
+    name = f"srt_{table}_{_sf_key(sf_dir)}_{col}_f{n_files}"
 
-        shutil.rmtree(path)  # partial commit is not authoritative
-    if os.path.isdir(path):
-        stale = True
-        if os.path.exists(fp_file):
-            with open(fp_file) as f:
-                stale = f.read().strip() != fp
-        if stale:
-            import shutil
-
-            shutil.rmtree(path)  # stale source generation — rewrite
-    if not os.path.isdir(path):
+    def write(path: str) -> None:
         (
             load_table(spark, sf_dir, table)
             .repartitionByRange(n_files, col)
@@ -193,14 +190,5 @@ def ensure_sorted(
             .write.mode("overwrite")
             .parquet(path)
         )
-        with open(fp_file, "w") as f:
-            f.write(fp)
-    return spark.read.parquet(path)
 
-
-def _source_fingerprint(sf_dir: str, table: str) -> str:
-    """Identity of the source parquet a bucketed copy was written from:
-    byte size + mtime_ns. Regenerated testdata always changes mtime;
-    size alone would miss same-sized regenerations."""
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    return f"{st.st_size}:{st.st_mtime_ns}"
+    return spark.read.parquet(_layout_copy(spark, sf_dir, table, name, write))

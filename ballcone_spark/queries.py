@@ -46,7 +46,13 @@ from typing import NamedTuple, Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-__all__ = ["QUERIES", "EXTRA_QUERIES", "QuerySpec", "load_table", "flagship"]
+from ballcone_spark.plans import stages
+from ballcone_spark.plans.barriers import checkpoint
+from ballcone_spark.plans.stages import evict_plan
+
+__all__ = [
+    "QUERIES", "EXTRA_QUERIES", "QuerySpec", "evict_plan", "load_table", "flagship"
+]
 
 TABLES = [
     "region",
@@ -81,14 +87,6 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
         return []
 
 
-#: (applicationId, sf_dir, name) → DataFrame. DataFrames are immutable
-#: plan descriptions, so handing the same object to every caller is safe;
-#: without this, each query build re-reads the parquet footer (pyarrow)
-#: and re-runs Spark schema inference — measured 0.68 s of pure build
-#: time for a 6-table join. This is the engine's tiny "catalog" cache.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 #: Sessions already known to carry the nanosAsLong conf (session.get_spark
 #: sets it at build time; this guard covers foreign sessions, e.g. the
 #: driver's own, with exactly one conf RPC per session instead of one per
@@ -97,15 +95,17 @@ _NANOS_CONF_SET: set[str] = set()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    path = f"{sf_dir}/{name}.parquet"
-    nanos = _nanos_timestamp_cols(path)
-    if not nanos:
-        df = spark.read.parquet(path)
-    else:
+    """The table's frame, memoized per source generation: each query
+    build would otherwise re-read the parquet footer (pyarrow) and re-run
+    Spark schema inference — measured 0.68 s of pure build time for a
+    6-table join."""
+
+    def build() -> DataFrame:
+        stages.source(sf_dir, name)
+        path = f"{sf_dir}/{name}.parquet"
+        nanos = _nanos_timestamp_cols(path)
+        if not nanos:
+            return spark.read.parquet(path)
         app_id = spark.sparkContext.applicationId
         if app_id not in _NANOS_CONF_SET:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -115,24 +115,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # integer `div`, not `/`: ns values exceed 2^53, double
             # division would round the last microsecond digit
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    _TABLE_CACHE[key] = df
-    return df
+        return df
+
+    return stages.memo(spark, sf_dir, f"{name}.parquet", build)
 
 
-#: (applicationId, view name) → sf_dir currently backing that temp view.
-#: createOrReplaceTempView is a catalog RPC per call; hoisting it out of
-#: the per-query path (it used to run on EVERY query build) shaves fixed
-#: cost, while re-registering on an sf_dir switch keeps the driver's
-#: multi-SF flow (sf0.001 smoke → sf0.01 correctness → sf0.1 bench) correct.
-_VIEWS_REGISTERED: dict[tuple[str, str], str] = {}
+#: (applicationId, view name) → the frame currently backing that temp
+#: view. createOrReplaceTempView is a catalog RPC per call; hoisting it
+#: out of the per-query path (it used to run on EVERY query build) shaves
+#: fixed cost, while re-registering whenever ``load_table`` hands back a
+#: different frame — an sf_dir switch (the driver's sf0.001 smoke →
+#: sf0.01 correctness → sf0.1 bench flow) or a new source generation —
+#: keeps every view on the current data.
+_VIEWS_REGISTERED: dict[tuple[str, str], DataFrame] = {}
 
 
 def _register_views(spark: SparkSession, sf_dir: str, names: list[str]) -> None:
     app_id = spark.sparkContext.applicationId
     for n in names:
-        if _VIEWS_REGISTERED.get((app_id, n)) != sf_dir:
-            load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-            _VIEWS_REGISTERED[(app_id, n)] = sf_dir
+        df = load_table(spark, sf_dir, n)
+        if _VIEWS_REGISTERED.get((app_id, n)) is not df:
+            df.createOrReplaceTempView(n)
+            _VIEWS_REGISTERED[(app_id, n)] = df
 
 
 class QuerySpec(NamedTuple):
@@ -143,123 +147,23 @@ class QuerySpec(NamedTuple):
 
 QUERIES: dict[str, QuerySpec] = {}
 
-#: (applicationId, sf_dir, query name) → (fingerprint, built DataFrame).
-#: Prepared-plan cache: a DataFrame is an immutable plan description and
-#: its parse/analyze/optimize work is memoized inside the object, so
-#: handing the same object back on a repeated call skips Python
-#: expression-tree construction AND Catalyst analysis — the
-#: prepared-statement semantics a resident analytics daemon has (the
-#: reference's DuckDB connection likewise reuses its catalog state
-#: across requests). Execution is NOT cached: every collect() re-runs
-#: the physical plan against storage — EXCEPT for builds that run
-#: driver-side jobs at plan time and bake the results in as literals
-#: (the distributed exact-ntile's bucket offsets, data-dependent
-#: df-cuts, collected query vectors): those pass either
-#: ``cacheable=False`` (rebuild every call) or — better, VERDICT r6
-#: #4 — ``cacheable=(table, ...)``: the plan is reused while the named
-#: source parquets' fingerprints (size + mtime_ns, the
-#: ``plans/bucketing.py`` pattern) are unchanged, and a data change
-#: re-derives every baked literal. Stale literals can never be served
-#: either way (ADVICE r2).
-_PLAN_CACHE: dict[tuple[str, str, str], tuple[tuple, DataFrame]] = {}
-
-
-def _table_fingerprints(sf_dir: str, tables: tuple[str, ...]) -> tuple:
-    out = []
-    for t in tables:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        try:
-            st = os.stat(path)
-            if os.path.isdir(path):
-                # directory-style parquet (ADVICE r15 #1): the dir
-                # entry's own size/mtime does not change when a part
-                # file is rewritten in place — fingerprint the sorted
-                # per-file (relpath, size, mtime_ns) listing instead,
-                # so any part-file change rebuilds the plan (and its
-                # baked checkpoints/literals)
-                parts = []
-                for root, _dirs, files in os.walk(path):
-                    for f in sorted(files):
-                        fp = os.path.join(root, f)
-                        fst = os.stat(fp)
-                        parts.append(
-                            f"{os.path.relpath(fp, path)}:"
-                            f"{fst.st_size}:{fst.st_mtime_ns}"
-                        )
-                out.append(f"{t}:dir:" + ",".join(sorted(parts)))
-            else:
-                out.append(f"{t}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            out.append(f"{t}:missing")
-    return tuple(out)
-
-
-def _unpersist_plan_checkpoints(df: DataFrame) -> None:
-    """Best-effort release of a superseded cached plan's materialized
-    localCheckpoint blocks (ADVICE r15 #2): on a fingerprint-miss
-    replacement the old DataFrame's checkpointed RDDs otherwise stay
-    pinned until GC + ContextCleaner get around to them — repeated
-    data-change cycles in a resident daemon accumulate dead blocks.
-    Every lineage barrier surfaces as a LogicalRDD LEAF of the analyzed
-    plan, so walking the leaves finds exactly this plan's checkpoints.
-
-    Safe because a replaced entry is never served again, and any OTHER
-    cached query sharing one of these frames is (by the r15 convention)
-    fingerprint-keyed on the same source tables, so it rebuilds on its
-    next call rather than re-executing over the released blocks."""
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            if leaf.getClass().getSimpleName() == "LogicalRDD":
-                leaf.rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — cleanup must never fail a query
-        pass
-
 
 def _plan_cached(
     name: str,
     build: Callable[[SparkSession, str], DataFrame],
-    cacheable: bool | tuple = True,
+    cacheable: bool = True,
 ):
+    """``build`` behind the build cache (``plans/stages.py``)."""
+
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        if cacheable is False:
+        if not cacheable:
             return build(spark, sf_dir)
-        fp: tuple = ()
-        if cacheable is not True:  # tuple of source tables to fingerprint
-            fp = _table_fingerprints(sf_dir, cacheable)
-        key = (spark.sparkContext.applicationId, sf_dir, name)
-        hit = _PLAN_CACHE.get(key)
-        if hit is None or hit[0] != fp:
-            if hit is not None:
-                # fingerprint miss: release the superseded plan's
-                # checkpoint blocks instead of waiting on GC (ADVICE
-                # r15 #2)
-                _unpersist_plan_checkpoints(hit[1])
-            hit = (fp, build(spark, sf_dir))
-            _PLAN_CACHE[key] = hit
-        return hit[1]
+        return stages.memo(spark, sf_dir, name, lambda: build(spark, sf_dir))
 
     fn.__name__ = getattr(build, "__name__", name)
     fn.__doc__ = build.__doc__
     return fn
 
-
-def evict_plan(name: str) -> int:
-    """Drop every cached plan for ``name`` (all apps/sf_dirs) and
-    release its checkpoint blocks. Escape hatch for ADVICE r15 #3: a
-    localCheckpoint cuts lineage, so on a CLUSTER an executor loss
-    makes a cached plan's materialized blocks unrecoverable and every
-    later execution fails until the plan is rebuilt — the fingerprint
-    guard alone never notices, because the source parquet is unchanged.
-    A serving layer that catches a checkpoint-block-lost failure should
-    call this and retry once. In the shipped local-mode deployments
-    (one JVM, static executor) the failure class cannot occur — which
-    is why eviction is an escape hatch, not an automatic wrapper."""
-    gone = [k for k in _PLAN_CACHE if k[2] == name]
-    for k in gone:
-        _unpersist_plan_checkpoints(_PLAN_CACHE.pop(k)[1])
-    return len(gone)
 
 #: Operators kept callable + pytest-covered but NOT exported to the driver
 #: registry. The driver's correctness harness checks the first 50 entries
@@ -276,7 +180,7 @@ def _query(
     oracle: Optional[str],
     doc: str = "",
     driver: bool = True,
-    cacheable: bool | tuple = True,
+    cacheable: bool = True,
 ):
     def deco(fn):
         target = QUERIES if driver else EXTRA_QUERIES
@@ -311,9 +215,6 @@ _R4 = lambda c: F.round(c, 4)  # noqa: E731
     WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-05' AND DATE '2024-01-10'
     ORDER BY ts, event_id LIMIT 100
     """,
-    # the plan reads the ts-sorted copy — rebuild (and re-sort, via
-    # ensure_sorted's own fingerprint guard) when the source changes
-    cacheable=("events",),
 )
 def events_scan_window(spark, sf_dir):
     """Q2: ordered/limited scan with inclusive date bounds (reference
@@ -1328,11 +1229,6 @@ _sql_query(
     SELECT decile, count(*) AS n, round(sum(rev), 4) AS revenue
     FROM scored GROUP BY decile ORDER BY decile
     """,
-    # exact_ntile bakes data-dependent bucket offsets into the plan as
-    # literals — cached while the lineitem parquet fingerprint is
-    # unchanged; a data change re-derives them (ADVICE r2 + VERDICT r6
-    # #4's fingerprint pattern)
-    cacheable=("lineitem",),
 )
 def lineitem_decile_revenue(spark, sf_dir):
     """ntile(10) decile revenue analysis — Spark side uses the distributed
@@ -1584,9 +1480,6 @@ ORDER BY step_idx
     "aggregate joined to the previous stage — hash-partitioned on "
     "user_id throughout, partial aggregation map-side, no window over "
     "the full event stream.",
-    # r15: the checkpointed stage frames are baked state — reuse the
-    # plan only while the events parquet is unchanged
-    cacheable=("events",),
 )
 def events_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataFrame twin of the funnel SQL (the oracle keeps the SQL
@@ -1595,24 +1488,22 @@ def events_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinatorially: v is referenced by c and by its own count, c by p
     and its count — the physical plan scanned events SIX times (1 view +
     2 click-side v replays + 3 purchase-side replays). Each per-user
-    stage frame is now localCheckpoint()ed, so every stage scans events
+    stage frame is now checkpointed, so every stage scans events
     exactly once (pushed event_type filter intact) and later stages read
     the materialized frame — 6 scans → 3, identical rows per stage."""
     ev = _events(spark, sf_dir)
     half_day = F.expr("INTERVAL 12 HOUR")
-    v = (
+    v = checkpoint(
         ev.where(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .localCheckpoint(eager=False)
     )
-    c = (
+    c = checkpoint(
         ev.where(F.col("event_type") == "click")
         .join(v, "user_id")
         .where((F.col("ts") > F.col("t1")) & (F.col("ts") <= F.col("t1") + half_day))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .localCheckpoint(eager=False)
     )
     p = (
         ev.where(F.col("event_type") == "purchase")

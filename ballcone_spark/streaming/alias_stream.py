@@ -573,7 +573,6 @@ def _duck_alias_arrival(dim: int, tau: float) -> str:
     _duck_alias_arrival(CHUNK_EMB_DIM, CHUNK_COS_T),
     # promoted r12 (VERDICT r11 #1): the streaming alias surface gets a
     # driver CORRECTNESS row; events_rollup_daily_types freed the slot
-    cacheable=("documents",),
 )
 def docs_chunk_alias_arrival(spark, sf_dir):
     """The streaming alias map's FIRST-SEEN canonical election replayed
