@@ -7,7 +7,7 @@
 CPUS ?= $(shell nproc)
 WORKLOADS ?= ingest corpus
 
-.PHONY: test bench bench-sf1 oracle-sweep perfbench
+.PHONY: test bench bench-sf1 oracle-sweep perfbench stream-profile
 
 # The tier-1 suite exactly as ROADMAP.md states it.
 test:
@@ -38,3 +38,11 @@ perfbench:
 	for w in $(WORKLOADS); do \
 		python3 perfbench/run.py --workload $$w --seed 901 --seconds 6 || exit 1; \
 	done
+
+# The streams' state-layer check in one command: jobs and FS-helper
+# calls per trigger for the decon and semantic streams, then the dedup
+# stream's per-batch wall against batch count with and without folds.
+stream-profile:
+	python tools/trigger_profile.py --arm decon --waves 6
+	python tools/trigger_profile.py --arm semantic --waves 6
+	python tools/state_fold_bench.py --batches 200

@@ -13,7 +13,7 @@ general form: declare the pipeline as named stages, each stage
 materializes to parquet behind an atomic manifest, and a crashed or
 killed run RESUMES — completed stages are read back, not recomputed.
 
-Durability protocol (same family as ``dedup_stream.compact_index``):
+Durability protocol (same family as ``streaming.state.fold``):
 
 1. A stage writes its output to ``<root>/<name>/data-<token>/`` (a
    fresh token per attempt), then commits by atomically replacing
@@ -38,14 +38,14 @@ store with atomic rename (the manifest is one small JSON — HDFS and
 most cluster filesystems qualify; S3 needs a pointer object instead,
 documented boundary).
 
-Single-writer assumption (same as ``compact_index``): one runner per
+Single-writer assumption (same as ``state.fold``): one runner per
 pipeline root at a time. Readers (``stage_output``) resolve through the
 committed manifest only, and get the fold protocol's deferred-garbage
 grace: when a re-run RETIRES a previously committed data dir, the dir
 is recorded as manifest garbage and deleted on the NEXT run, not at
 commit — a reader that resolved the old token keeps scanning intact
 files (contract: a read completes within one run interval, the
-``compact_index`` rule). Precisely (ADVICE r12): the grace runs from
+``state.fold`` rule). Precisely (ADVICE r12): the grace runs from
 the retiring run's commit to the next run's FIRST sweep of that stage
 — the pre-run sweep deletes grace-expired garbage BEFORE the
 (possibly hours-long) rebuild, so back-to-back launches shrink the

@@ -48,10 +48,10 @@ canonical NAMING differs — first-seen (earliest batch, then min fp)
 instead of global lexicographic min. This is the documented
 arrival-order difference every streaming index here carries.
 
-**Replay safety** (inherited from dedup_stream): every read filters
-``batch_id < current`` and every write overwrites its own
-``batch_id=<n>`` partition, so a crashed-and-replayed batch sees
-byte-identical history and rewrites identical output.
+**Replay safety** (the :mod:`~ballcone_spark.streaming.state`
+protocol): every read filters ``batch_id < current`` and every write
+overwrites its own ``batch_id=<n>`` partition, so a crashed-and-replayed
+batch sees byte-identical history and rewrites identical output.
 
 **100 TB shape**: per-batch cost is (batch chunks × their grams) joined
 against the posting index — the probe side is bounded by the batch; the
@@ -65,11 +65,10 @@ rewrites semi-join the alias table on the remapped canonicals only.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ballcone_spark.streaming import state
 from ballcone_spark.streaming.dedup_stream import (
     SPOOL_MAX_FILES_PER_TRIGGER,
 )
@@ -91,72 +90,11 @@ __all__ = [
     "process_alias_batch",
     "read_alias_map",
     "resolve_chunk_aliases",
-    "compact_alias_state",
 ]
 
 
-def _read_state(spark: SparkSession, root: str, batch_id: int):
-    """All state rows with ``batch_id < current`` (replay safety), or
-    None before the first batch. Delegates to dedup_stream's
-    manifest-aware ``read_index`` (which is schema-agnostic): the
-    manifest's fold dir plus per-batch dirs with ``batch_id >
-    folded_hi``; superseded dirs are excluded even while still on disk,
-    so a read racing a fold never double-counts."""
-    from ballcone_spark.streaming.dedup_stream import read_index
-
-    idx = read_index(spark, root)
-    if idx is None:
-        return None
-    return idx.where(F.col("batch_id") < F.lit(batch_id))
-
-
-def compact_alias_state(
-    spark: SparkSession,
-    state_dir: str,
-    every: int = 64,
-    latest_wins_key: str | None = None,
-    sweep_when: str = "always",
-) -> bool:
-    """Fold per-batch partition dirs of ONE alias-stream state dir
-    (chunks / grams / alias) — dedup_stream's manifest-pointer fold
-    protocol verbatim (never fold the newest live batch, manifest
-    rename is the only commit point, retired dirs deleted on the next
-    run), schema-agnostic, with no sort column (the alias state has no
-    probe key to cluster row groups by).
-
-    ``latest_wins_key`` (use ``"chunk_fp"`` for the ALIAS dir only):
-    additionally drop superseded rows — read-equivalent because
-    latest-batch-wins resolution ignores them and the newest batch is
-    never folded; keeps the resident alias state at O(current redirect
-    table) instead of O(total updates ever). Returns True if it
-    compacted."""
-    from ballcone_spark.streaming.dedup_stream import compact_index
-
-    return compact_index(
-        spark,
-        state_dir,
-        every=every,
-        sort_col=None,
-        latest_wins_key=latest_wins_key,
-        sweep_when=sweep_when,
-    )
-
-
-def _overwrite(
-    df: DataFrame, root: str, batch_id: int, n_rows: int | None = None
-) -> None:
-    """Idempotent per-batch write — dedup_stream's writer verbatim
-    (row-scaled file count so a backfill batch's posting write is not
-    single-writer-bottlenecked)."""
-    from ballcone_spark.streaming.dedup_stream import (
-        _overwrite_batch_partition,
-    )
-
-    _overwrite_batch_partition(df, root, batch_id, n_rows)
-
-
 def read_alias_map(
-    spark: SparkSession, alias_dir: str, before_batch: int = 1 << 62
+    spark: SparkSession, alias_dir: str, before_batch: int | None = None
 ) -> DataFrame | None:
     """The redirect table as of ``before_batch`` (exclusive):
     latest-batch row per chunk_fp → (chunk_fp, canonical_fp,
@@ -167,7 +105,7 @@ def read_alias_map(
     to a self-edge and the replay overwrites the partition empty,
     silently losing the redirect (review r11 finding #1; pinned by
     ``test_alias_stream_batch_replay_idempotent``)."""
-    upd = _read_state(spark, alias_dir, before_batch)
+    upd = state.read(spark, alias_dir, before=before_batch)
     if upd is None:
         return None
     w = Window.partitionBy("chunk_fp").orderBy(F.col("batch_id").desc())
@@ -227,7 +165,7 @@ def process_alias_batch(
         .localCheckpoint(eager=True)
     )
 
-    hist_chunks = _read_state(spark, chunks_dir, batch_id)
+    hist_chunks = state.read(spark, chunks_dir, before=batch_id)
     if hist_chunks is not None:
         new_dch = dch.join(
             hist_chunks.select("chunk_fp").hint("merge"),
@@ -243,7 +181,7 @@ def process_alias_batch(
     grams_new = chunk_gram_rows(new_dch).localCheckpoint(eager=True)
 
     # ---- candidates: new × (history ∪ new) through shared rare grams.
-    hist_grams = _read_state(spark, grams_dir, batch_id)
+    hist_grams = state.read(spark, grams_dir, before=batch_id)
     posting = (
         grams_new
         if hist_grams is None
@@ -348,7 +286,7 @@ def process_alias_batch(
     if not mapped.take(1):
         # no new merges: still index the batch's chunks/grams
         _write_indices(emb_new, grams_new, chunks_dir, grams_dir, batch_id, dim)
-        _overwrite(
+        state.write_batch(
             spark.createDataFrame(
                 [],
                 "chunk_fp string, canonical_fp string, is_canonical boolean",
@@ -414,7 +352,7 @@ def process_alias_batch(
     # coalesce(1) has no shuffle boundary and would collapse the rewrite
     # join into one task (the ingest.py coalesce pitfall; review r11 #4)
     updates = updates.localCheckpoint(eager=True)
-    _overwrite(updates, alias_dir, batch_id, n_rows=updates.count())
+    state.write_batch(updates, alias_dir, batch_id, n_rows=updates.count())
     _write_indices(emb_new, grams_new, chunks_dir, grams_dir, batch_id, dim)
 
 
@@ -427,13 +365,13 @@ def _write_indices(
     dim: int,
 ) -> None:
     # counts are cheap: both frames are eagerly checkpointed upstream
-    _overwrite(
+    state.write_batch(
         emb_new.select("chunk_fp", *[f"v{j}" for j in range(dim)]),
         chunks_dir,
         batch_id,
         n_rows=emb_new.count(),
     )
-    _overwrite(grams_new, grams_dir, batch_id, n_rows=grams_new.count())
+    state.write_batch(grams_new, grams_dir, batch_id, n_rows=grams_new.count())
 
 
 def start_chunk_alias_stream(
@@ -457,11 +395,15 @@ def start_chunk_alias_stream(
     dedup_stream input shape). Returns the StreamingQuery.
 
     ``compact_every`` (r12): fold each state dir's per-batch partition
-    dirs through :func:`compact_alias_state` when the live dir count
-    reaches this many — previously the fold existed but nothing in the
-    production loop CALLED it, so a 5 s-trigger deployment accumulated
-    ~17 k dirs/day/state-dir and every history read paid the listing.
-    The alias dir folds latest-wins (superseded redirect rows dropped);
+    dirs through :func:`~ballcone_spark.streaming.state.fold` when the
+    live dir count reaches this many — previously the fold existed but
+    nothing in the production loop CALLED it, so a 5 s-trigger
+    deployment accumulated ~17 k dirs/day/state-dir and every history
+    read paid the listing. No sort column: the alias state has no probe
+    key to cluster row groups by. The alias dir folds latest-wins
+    (superseded redirect rows dropped — read-equivalent for
+    :func:`read_alias_map`, and the resident alias state stays
+    O(current redirect table) instead of O(total updates ever));
     chunks/grams fold as-is. Reads are bit-identical before/after
     (``test_alias_state_fold_preserves_reads``), crash points covered
     by ``test_compact_alias_state_crash_recovery``. ``None`` disables."""
@@ -492,10 +434,10 @@ def start_chunk_alias_stream(
             # per-trigger cadence: sweep only at fold time (full
             # compaction interval of reader grace — review r12 #2)
             for d in (chunks_dir, grams_dir):
-                compact_alias_state(spark, d, every=compact_every,
-                                    sweep_when="fold")
-            compact_alias_state(
-                spark, alias_dir, every=compact_every,
+                state.fold(spark, d, every=compact_every, sort_col=None,
+                           sweep_when="fold")
+            state.fold(
+                spark, alias_dir, every=compact_every, sort_col=None,
                 latest_wins_key="chunk_fp", sweep_when="fold",
             )
 

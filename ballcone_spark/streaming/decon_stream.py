@@ -11,7 +11,7 @@ RETRO-SCAN every document seen so far — the contamination that matters
 most is exactly the kind a static pass misses (docs ingested before
 the eval suite existed).
 
-Design (the dedup_stream state conventions throughout):
+Design (the :mod:`~ballcone_spark.streaming.state` protocol throughout):
 
 - **State**: two gram indexes under ``batch_id=<n>/`` partition dirs —
   ``doc_grams_dir`` (doc_id, h) and ``bench_grams_dir`` (h) — plus an
@@ -35,7 +35,7 @@ Design (the dedup_stream state conventions throughout):
   convention). Decisions are monotone (flags only turn on), so replay
   cannot unflag.
 - **Folds**: all three dirs fold inline through
-  :func:`~ballcone_spark.streaming.dedup_stream.compact_index` with
+  :func:`~ballcone_spark.streaming.state.fold` with
   ``sweep_when="fold"`` (§6ah #3); flags fold latest-wins on doc_id so
   resident flag state is O(contaminated docs), not O(flag events).
 
@@ -49,7 +49,7 @@ gram count plus one broadcast of the batch's benchmark grams.
 Retro-scan bound (r13, VERDICT r12 #3): the doc-gram history is
 HASH-BUCKET PARTITIONED — every gram row carries ``hb = pmod(h,
 hash_buckets)`` and lands under ``batch_id=<n>/hb=<k>/`` (folds keep
-the bucketing via ``compact_index(partition_col="hb")``). A benchmark
+the bucketing via ``state.fold(partition_col="hb")``). A benchmark
 arrival first computes the ≤ ``hash_buckets`` distinct buckets its own
 grams occupy (one bounded collect) and pushes ``hb IN (...)`` into the
 history scan as a PARTITION filter — so a small benchmark update
@@ -67,12 +67,11 @@ never misprune a mixed-geometry history into missed contamination.
 
 from __future__ import annotations
 
-import json as _json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ballcone_spark.operators.dedup import _DECON_NGRAM, shingle_rows_np
+from ballcone_spark.streaming import state
 
 __all__ = [
     "process_decon_batch",
@@ -120,19 +119,13 @@ def _read_geometry(spark: SparkSession, root: str):
     unbucketed (legacy dirs), or ``_GEOM_ABSENT`` when no geometry file
     exists yet. Probes treat None and absent identically (no
     pruning)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(root + "/" + _GEOMETRY)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return _GEOM_ABSENT
-    stream = fs.open(path)
-    try:
-        out = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, out, 4096, False)
-        v = _json.loads(out.toString("UTF-8"))["hash_buckets"]
-        return int(v) if v is not None else None
-    finally:
-        stream.close()
+    g = state.read_json(spark, f"{root}/{_GEOMETRY}")
+    return _GEOM_ABSENT if g is None else _buckets(g)
+
+
+def _buckets(geometry: dict) -> int | None:
+    v = geometry["hash_buckets"]
+    return int(v) if v is not None else None
 
 
 def _ensure_geometry(
@@ -149,8 +142,9 @@ def _ensure_geometry(
     basePath read two conflicting directory depths (Spark refuses
     mixed partition structures). Such dirs freeze as UNBUCKETED
     (``hash_buckets: null`` persisted), permanently consistent; start a
-    new state dir to adopt bucketing. The write is tmp+rename so a
-    crash mid-write can never leave a half geometry file.
+    new state dir to adopt bucketing. The value is a
+    :func:`~ballcone_spark.streaming.state.frozen` fact: written
+    atomically once, then served from memory.
 
     Legacy detection covers ALL pre-bucketing artifacts (r14, ADVICE
     r13 #2): a dir holding only a ``fold-<hi>`` dir plus
@@ -158,59 +152,25 @@ def _ensure_geometry(
     from backup) is just as legacy as one with batch dirs — frozen
     bucketed it would mix partition depths, and the retro probe's
     ``hb IN (...)`` would silently drop every fold row."""
-    stored = _read_geometry(spark, root)
-    if stored is not _GEOM_ABSENT:
-        return stored
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    root_path = jvm.org.apache.hadoop.fs.Path(root)
-    legacy = fs.exists(root_path) and any(
-        s.getPath().getName().startswith(("batch_id=", "fold-"))
-        or s.getPath().getName() == "_manifest.json"
-        for s in fs.listStatus(root_path)
-    )
-    value = None if (legacy or not hash_buckets) else int(hash_buckets)
-    path = jvm.org.apache.hadoop.fs.Path(root + "/" + _GEOMETRY)
-    tmp = jvm.org.apache.hadoop.fs.Path(root + "/." + _GEOMETRY + ".tmp")
-    fs.mkdirs(root_path)
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(
-            bytearray(_json.dumps({"hash_buckets": value}), "utf-8")
+
+    def initial() -> dict:
+        legacy = any(
+            n.startswith(("batch_id=", "fold-")) or n == state.MANIFEST
+            for n in state.list_names(spark, root) or ()
         )
-    finally:
-        stream.close()
-    if not fs.rename(tmp, path):
-        # lost a (single-writer-violating) race or a stale tmp blocked
-        # the rename — the stored value, if any, wins
-        fs.delete(tmp, False)
-        again = _read_geometry(spark, root)
-        return None if again is _GEOM_ABSENT else again
-    return value
+        return {
+            "hash_buckets": (
+                None if (legacy or not hash_buckets) else int(hash_buckets)
+            )
+        }
+
+    return _buckets(state.frozen(spark, f"{root}/{_GEOMETRY}", initial))
 
 
 def _grams(df: DataFrame, n: int) -> DataFrame:
     return shingle_rows_np(df, n=n).select(
         "doc_id", F.xxhash64("s").alias("h")
     ).distinct()
-
-
-def _read_state(
-    spark: SparkSession, root: str, batch_id: int,
-    reader_caches: dict | None = None,
-    schema: str | None = None,
-):
-    from ballcone_spark.streaming.semantic_stream import read_state_before
-
-    cache = (
-        reader_caches.setdefault(root, {})
-        if reader_caches is not None else None
-    )
-    return read_state_before(
-        spark, root, batch_id, commit_cache=cache, schema=schema
-    )
 
 
 #: explicit read schemas for the per-trigger history reads (r16 —
@@ -235,7 +195,6 @@ def _pruned_doc_history(
     batch_id: int,
     bench_g: DataFrame,
     n_buckets=_GEOM_ABSENT,
-    reader_caches: dict | None = None,
 ) -> DataFrame | None:
     """The retro probe's history side, bucket-pruned: only the hash
     buckets the arriving benchmark's own grams occupy can contain a
@@ -261,8 +220,8 @@ def _pruned_doc_history(
             n_buckets = None
     # geometry resolved first so the read takes the explicit per-layout
     # schema (r16 — no schema-inference job per bench arrival)
-    doc_hist = _read_state(
-        spark, doc_grams_dir, batch_id, reader_caches,
+    doc_hist = state.read(
+        spark, doc_grams_dir, before=batch_id,
         schema=_doc_read_schema(n_buckets),
     )
     if doc_hist is None:
@@ -322,19 +281,6 @@ def _retro_flags(
     return doc_hist.join(probe, "h", "semi").select("doc_id")
 
 
-def _partition_absent(spark: SparkSession, root: str, batch_id: int) -> bool:
-    """True when ``root/batch_id=<n>/`` does not exist — the cheap
-    (one py4j round-trip) licence to SKIP the empty placeholder
-    overwrite a side-less batch used to pay a full Spark write job for
-    (r15, VERDICT r14 #1). The overwrite exists only to clear a prior
-    replay attempt's rows; with no dir there is nothing to clear.
-    Hadoop FS API so the probe works on any filesystem Spark writes."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(root + f"/batch_id={batch_id}")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return not fs.exists(path)
-
-
 def process_decon_batch(
     spark: SparkSession,
     docs: DataFrame | None,
@@ -345,32 +291,13 @@ def process_decon_batch(
     batch_id: int,
     n: int = _DECON_NGRAM,
     hash_buckets: int | None = DECON_HASH_BUCKETS,
-    geometry_cache: dict | None = None,
-    reader_caches: dict | None = None,
 ) -> None:
     """One micro-batch: index the new docs/benchmarks, flag both
     directions. ``docs``/``bench``: ``(doc_id, text)`` / ``(bench_id,
     text)`` or None when the batch carries only one kind.
     ``hash_buckets`` applies to the dir's FIRST write only — after
-    that the persisted geometry wins (see module docstring).
-
-    ``geometry_cache`` / ``reader_caches`` (r15, VERDICT r14 #1):
-    per-stream memo dicts the batch loop threads through every
-    trigger. Geometry is FROZEN per dir — once ``_ensure_geometry``
-    has answered, re-reading ``_geometry.json`` every batch is a pure
-    py4j tax; likewise the history readers' committed-dir checks (see
-    :func:`~ballcone_spark.streaming.semantic_stream._snapshot_names`).
-    Standalone callers omit both and get the r14 behavior."""
-    from ballcone_spark.streaming.dedup_stream import (
-        _overwrite_batch_partition,
-    )
-
-    if geometry_cache is not None and "n_buckets" in geometry_cache:
-        n_buckets = geometry_cache["n_buckets"]
-    else:
-        n_buckets = _ensure_geometry(spark, doc_grams_dir, hash_buckets)
-        if geometry_cache is not None:
-            geometry_cache["n_buckets"] = n_buckets
+    that the persisted geometry wins (see module docstring)."""
+    n_buckets = _ensure_geometry(spark, doc_grams_dir, hash_buckets)
     doc_g = (
         _grams(docs.select("doc_id", "text"), n)
         if docs is not None else None
@@ -397,9 +324,8 @@ def process_decon_batch(
         bench_g = bench_g.localCheckpoint(eager=True)
 
     flags = []
-    bench_hist = _read_state(
-        spark, bench_grams_dir, batch_id, reader_caches,
-        schema=_BENCH_READ_SCHEMA,
+    bench_hist = state.read(
+        spark, bench_grams_dir, before=batch_id, schema=_BENCH_READ_SCHEMA
     )
     if doc_g is not None:
         # forward: new docs vs benchmark history ∪ same-batch
@@ -428,8 +354,7 @@ def process_decon_batch(
         # semi-join, bucket-pruned to the benchmark's own hash buckets
         # (r13)
         doc_hist = _pruned_doc_history(
-            spark, doc_grams_dir, batch_id, bench_g,
-            n_buckets=n_buckets, reader_caches=reader_caches,
+            spark, doc_grams_dir, batch_id, bench_g, n_buckets=n_buckets
         )
         if doc_hist is not None:
             flags.append(
@@ -446,9 +371,8 @@ def process_decon_batch(
         # the latest-wins fold degenerates to a no-op for it, and
         # ``flagged_batch`` stays the EARLIEST flagging batch across
         # folds (a latest-wins fold would otherwise overwrite it)
-        flag_hist = _read_state(
-            spark, flags_dir, batch_id, reader_caches,
-            schema=_FLAGS_READ_SCHEMA,
+        flag_hist = state.read(
+            spark, flags_dir, before=batch_id, schema=_FLAGS_READ_SCHEMA
         )
         out = out.distinct()
         if flag_hist is not None:
@@ -479,30 +403,28 @@ def process_decon_batch(
     # common case: first and only attempt), one FS exists probe
     # replaces the job. When the dir DOES exist the empty overwrite
     # still runs, so replays stay exactly as safe as before.
-    if out is not None or not _partition_absent(spark, flags_dir, batch_id):
-        _overwrite_batch_partition(
+    if out is not None or state.has_batch(spark, flags_dir, batch_id):
+        state.write_batch(
             out if out is not None
             else spark.createDataFrame([], "doc_id long, flagged_batch int"),
             flags_dir,
             batch_id,
         )
-    if doc_g is not None or not _partition_absent(
-        spark, doc_grams_dir, batch_id
-    ):
+    if doc_g is not None or state.has_batch(spark, doc_grams_dir, batch_id):
         empty_doc_schema = "doc_id long, h long" + (
             ", hb int" if n_buckets else ""
         )
-        _overwrite_batch_partition(
+        state.write_batch(
             doc_g if doc_g is not None
             else spark.createDataFrame([], empty_doc_schema),
             doc_grams_dir,
             batch_id,
             partition_col="hb" if n_buckets else None,
         )
-    if bench_g is not None or not _partition_absent(
+    if bench_g is not None or state.has_batch(
         spark, bench_grams_dir, batch_id
     ):
-        _overwrite_batch_partition(
+        state.write_batch(
             bench_g if bench_g is not None
             else spark.createDataFrame([], "h long"),
             bench_grams_dir,
@@ -513,9 +435,7 @@ def process_decon_batch(
 def read_contaminated(spark: SparkSession, flags_dir: str):
     """Distinct contaminated doc_ids with their EARLIEST flagging batch
     — None before the first batch."""
-    from ballcone_spark.streaming.semantic_stream import _read_folded_dir
-
-    df = _read_folded_dir(spark, flags_dir)
+    df = state.read(spark, flags_dir)
     if df is None:
         return None
     return df.groupBy("doc_id").agg(
@@ -547,10 +467,7 @@ def start_decon_stream(
     loop over the shared state dirs (two queries would race the state
     writes; one source union is the safe composition). Returns the
     StreamingQuery."""
-    from ballcone_spark.streaming.dedup_stream import (
-        _spool_reader,
-        compact_index,
-    )
+    from ballcone_spark.streaming.dedup_stream import _spool_reader
 
     def _rd(spool):
         r = _spool_reader(spark, clean_source, archive_dir)
@@ -571,12 +488,6 @@ def start_decon_stream(
         F.lit("bench").alias("kind"), "value"
     )
     both = docs_raw.unionByName(bench_raw)
-
-    # per-stream memos (r15, VERDICT r14 #1): frozen geometry read
-    # once per stream instead of once per batch; committed-dir checks
-    # paid once per dir instead of once per trigger
-    geometry_cache: dict = {}
-    reader_caches: dict = {}
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint(eager=True)
@@ -612,21 +523,19 @@ def start_decon_stream(
             batch_id,
             n=n,
             hash_buckets=hash_buckets,
-            geometry_cache=geometry_cache,
-            reader_caches=reader_caches,
         )
         if compact_every is not None:
             # the doc-gram fold keeps the hb bucketing so retro-probe
             # partition pruning survives compaction (r13)
-            compact_index(
+            state.fold(
                 spark, doc_grams_dir, every=compact_every, sort_col="h",
                 sweep_when="fold", partition_col="hb",
             )
-            compact_index(
+            state.fold(
                 spark, bench_grams_dir, every=compact_every, sort_col="h",
                 sweep_when="fold",
             )
-            compact_index(
+            state.fold(
                 spark, flags_dir, every=compact_every, sort_col=None,
                 latest_wins_key="doc_id", sweep_when="fold",
             )

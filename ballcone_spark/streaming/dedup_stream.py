@@ -47,39 +47,34 @@ The design:
   rejected: broadcast already makes the probe exchange-free on the big
   side, bucket pruning cannot beat the pushed key filter + min/max
   stats, and a bucketBy table cannot do idempotent per-batch partition
-  overwrite (saveAsTable append is at-least-once under replay). A
-  sort-by-band_key option in :func:`compact_index` tightens row-group
-  pruning further as the index grows.
-- :func:`compact_index` folds the per-batch partition dirs into few
-  files once their count grows (same small-files maintenance as the
-  warehouse's :func:`~ballcone_spark.streaming.ingest.compact_warehouse`).
+  overwrite (saveAsTable append is at-least-once under replay). The
+  fold's default band_key sort tightens row-group pruning further as
+  the index grows.
+- The index lives in the shared state-dir format
+  (:mod:`ballcone_spark.streaming.state`): the loop folds the per-batch
+  dirs into few files once their count grows (same small-files
+  maintenance as the warehouse's
+  :func:`~ballcone_spark.streaming.ingest.compact_warehouse`).
 """
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ballcone_spark.operators.dedup import (
-    N_BANDS,
-    N_HASHES,
-    minhash_signatures,
-)
+from ballcone_spark.operators.dedup import N_BANDS, N_HASHES
 from ballcone_spark.queries import _query, load_table
+from ballcone_spark.streaming import state
 
 __all__ = [
     "SIG_AGREE_MIN",
     "batch_signatures",
     "incremental_dedup_batch",
     "start_dedup_stream",
-    "read_index",
-    "read_decisions",
-    "compact_index",
 ]
 
 #: minimum matching signature positions (of 16) to call a pair duplicate
@@ -104,31 +99,25 @@ def _track_scratch_dir(path: str) -> None:
     _SCRATCH_DIRS.add(path)
 
 
-def batch_signatures(docs: DataFrame, vectorized: bool = True) -> DataFrame:
+def batch_signatures(docs: DataFrame) -> DataFrame:
     """``(doc_id, sig array<bigint>)`` — the per-row MinHash signature
     folded into one array column (the index's storage shape).
 
-    ``vectorized=True`` (default, r7) signs with the Arrow kernel
+    Signed with the Arrow kernel
     (:func:`~ballcone_spark.operators.dedup.minhash_signatures_np` —
     BIT-identical to the HOF twin, ~3× at corpus scale), always at the
     index's FIXED 16-hash geometry: an index dir must stay
     signature-compatible for its lifetime, so the batch family's
     adaptive geometry does not apply here (per-batch probe cost is
-    bounded by batch size, not corpus size). The JVM signer stays
-    available for cross-checks."""
+    bounded by batch size, not corpus size)."""
     from ballcone_spark.operators.dedup import minhash_signatures_np
 
-    sig = (
-        # wide=True also here: backfill micro-batches are corpus-scale
-        # thirds (a 1-partition scan each — signing one serialized cost
-        # dedup_incremental_minhash 103.6 s at sf10), while for small
-        # live batches the round-robin exchange is sub-ms — the widen
-        # cost scales with the batch, the win doesn't invert
-        minhash_signatures_np(docs)
-        if vectorized
-        else minhash_signatures(docs)
-    )
-    return sig.select(
+    # wide=True also here: backfill micro-batches are corpus-scale
+    # thirds (a 1-partition scan each — signing one serialized cost
+    # dedup_incremental_minhash 103.6 s at sf10), while for small live
+    # batches the round-robin exchange is sub-ms — the widen cost
+    # scales with the batch, the win doesn't invert
+    return minhash_signatures_np(docs).select(
         "doc_id",
         F.array(*[F.col(f"sig_{i}") for i in range(N_HASHES)]).alias("sig"),
     )
@@ -334,158 +323,6 @@ def _simulation_dup_ids(sigs_with_batch: DataFrame) -> DataFrame:
     )
 
 
-#: target rows per output file for per-batch writes; a 5 s micro-batch
-#: coalesces to 1 file, an availableNow backfill batch scales its writer
-#: parallelism instead of funnelling millions of rows through one task.
-ROWS_PER_FILE = 500_000
-
-#: writer-parallelism ceiling for a single batch partition dir.
-MAX_FILES_PER_BATCH = 64
-
-
-def _overwrite_batch_partition(
-    df: DataFrame,
-    root: str,
-    batch_id: int,
-    n_rows: int | None = None,
-    partition_col: str | None = None,
-) -> None:
-    """Idempotent per-batch write: replayed batches overwrite their own
-    ``batch_id=<n>`` dir and only that dir. ``n_rows`` (when the caller
-    already knows it) scales the file count so backfill-sized batches
-    are not single-writer-bottlenecked (VERDICT r4 #5).
-
-    ``partition_col`` (r13): hash-bucket sub-partitioning below the
-    batch dir (``batch_id=<n>/<col>=<v>/``), so probes that know their
-    key buckets prune the scan (the decon retro-scan's history bound —
-    VERDICT r12 #3). An EMPTY partitioned write emits no data files at
-    all (only ``_SUCCESS``); readers must tolerate file-less committed
-    dirs (see ``semantic_stream._read_folded_dir``)."""
-    n_files = (
-        1
-        if n_rows is None
-        else max(1, min(MAX_FILES_PER_BATCH, n_rows // ROWS_PER_FILE + 1))
-    )
-    # coalesce can only narrow; widening a backfill batch (which often
-    # arrives as few input partitions) needs a real repartition
-    shaped = df.coalesce(1) if n_files == 1 else df.repartition(n_files)
-    writer = shaped.write.mode("overwrite")
-    if partition_col is not None:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(os.path.join(root, f"batch_id={batch_id}"))
-
-
-#: manifest file name — the leading underscore keeps Spark's file index
-#: from ever treating it as data (same convention as _SUCCESS).
-_MANIFEST = "_manifest.json"
-
-
-def _read_manifest(index_dir: str) -> dict:
-    """The index's snapshot pointer. ``folded_hi`` = highest batch id
-    absorbed into ``fold_dir`` (−1 / None before the first fold);
-    ``garbage`` = dirs superseded by the last fold, still on disk so
-    in-flight readers keep their files — deleted at the START of the
-    next :func:`compact_index` run, never during the fold that retired
-    them."""
-    try:
-        with open(os.path.join(index_dir, _MANIFEST)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {"folded_hi": -1, "fold_dir": None, "garbage": []}
-
-
-def _write_manifest(index_dir: str, manifest: dict) -> None:
-    """Atomic swap: write sibling tmp, fsync, rename. The rename is the
-    commit point of a fold — readers see either the old snapshot or the
-    new one, never a half state."""
-    path = os.path.join(index_dir, _MANIFEST)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, path)
-
-
-def _live_batch_parts(index_dir: str, folded_hi: int) -> list[str]:
-    """Per-batch partition dirs NOT yet absorbed by a fold, in batch-id
-    order (numeric — lexicographic would put batch_id=10 before 9).
-
-    Committed dirs only (r12): a dir the stream is MID-WRITING has no
-    parquet footers yet, so listing it kills an external reader with
-    UNABLE_TO_INFER_SCHEMA (found live by the vector demo's serve
-    polls, §6an) — and a fold must never absorb one either. Spark's
-    ``_SUCCESS`` job-commit marker is the gate; the streams' own
-    ``batch_id < current`` reads only ever see committed dirs, so
-    internal behavior is unchanged."""
-    return sorted(
-        (
-            e.name
-            for e in os.scandir(index_dir)
-            if e.name.startswith("batch_id=")
-            and int(e.name.split("=", 1)[1]) > folded_hi
-            and os.path.exists(os.path.join(e.path, "_SUCCESS"))
-        ),
-        key=lambda p: int(p.split("=", 1)[1]),
-    )
-
-
-def _dir_has_data(d: str) -> bool:
-    """True if the dir tree holds at least one data file (not _SUCCESS /
-    dot-temp). Empty PARTITIONED batch writes commit no data files at
-    all (r13), and parquet schema inference dies on a file-less path —
-    readers and folds skip such dirs instead."""
-    for _root, _dirs, files in os.walk(d):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                return True
-    return False
-
-
-def read_index(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """Banded index rows (doc_id, band_idx, band_key, sig, batch_id) for
-    every indexed batch, or None if the index doesn't exist yet.
-
-    Snapshot rule (manifest-pointer consistency): read the manifest's
-    fold dir (original batch_id preserved as a physical column) plus the
-    per-batch dirs with ``batch_id > folded_hi`` (batch_id from the dir
-    name). Superseded dirs — listed as manifest garbage — are *excluded
-    by this rule* even though they are still on disk, so a probe racing
-    a fold can never double-count; and because a fold only deletes the
-    PREVIOUS fold's garbage, the dirs a just-read manifest references
-    outlive the probe (contract: a probe completes within one compaction
-    interval — vs the old design's total quiet-period requirement)."""
-    if not os.path.isdir(index_dir):
-        return None
-    m = _read_manifest(index_dir)
-    parts = _live_batch_parts(index_dir, m["folded_hi"])
-    frames = []
-    if m["fold_dir"]:
-        frames.append(
-            spark.read.parquet(os.path.join(index_dir, m["fold_dir"]))
-        )
-    if parts:
-        frames.append(
-            spark.read.option("basePath", index_dir).parquet(
-                *[os.path.join(index_dir, p) for p in parts]
-            )
-        )
-    if not frames:
-        return None
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return out
-
-
-def read_decisions(spark: SparkSession, decisions_dir: str) -> DataFrame:
-    # committed dirs only — the same mid-write exposure as read_index
-    parts = _live_batch_parts(decisions_dir, -1)
-    return spark.read.option("basePath", decisions_dir).parquet(
-        *[os.path.join(decisions_dir, p) for p in parts]
-    )
-
-
 def _spool_reader(spark, clean_source, archive_dir):
     """Text file-source reader with the optional committed-file cleanup
     (r12, the ingest ``clean_source`` contract). Default None: these
@@ -574,7 +411,8 @@ def start_dedup_stream(
        signature rows.
 
     ``compact_every`` (r12): fold the INDEX's per-batch dirs through
-    :func:`compact_index` whenever the live dir count reaches this many
+    :func:`~ballcone_spark.streaming.state.fold` whenever the live dir
+    count reaches this many
     — wired into the batch loop because a 5 s-trigger deployment mints
     ~17 k dirs/day and the probe's file-listing cost would otherwise
     grow without bound (the fold was previously manual-only; reads are
@@ -598,21 +436,17 @@ def start_dedup_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         sigs = batch_signatures(batch_df).localCheckpoint(eager=True)
         n_rows = sigs.count()  # cheap: counts the checkpointed blocks
-        hist = read_index(spark, index_dir)
+        hist = state.read(spark, index_dir, before=batch_id)
         if hist is not None:
-            hist = hist.where(F.col("batch_id") < F.lit(batch_id)).select(
-                "doc_id", "band_idx", "band_key", "sig"
-            )
+            hist = hist.select("doc_id", "band_idx", "band_key", "sig")
         decisions = incremental_dedup_batch(sigs, hist)
-        _overwrite_batch_partition(decisions, decisions_dir, batch_id, n_rows)
-        _overwrite_batch_partition(
-            _bands(sigs), index_dir, batch_id, n_rows * N_BANDS
-        )
+        state.write_batch(decisions, decisions_dir, batch_id, n_rows)
+        state.write_batch(_bands(sigs), index_dir, batch_id, n_rows * N_BANDS)
         if compact_every is not None:
             # per-trigger cadence: sweep only at fold time so retired
             # dirs keep a full compaction interval of reader grace
-            compact_index(spark, index_dir, every=compact_every,
-                          sweep_when="fold")
+            state.fold(spark, index_dir, every=compact_every,
+                       sweep_when="fold")
 
     writer = (
         docs.writeStream.foreachBatch(process_batch)
@@ -745,8 +579,8 @@ def dedup_stream_index_stats(spark, sf_dir):
     """Index round-trip stats (VERDICT r3 #1's 'EXTRA query exposing
     index stats'): build a REAL on-disk signature index from the
     documents table through the streaming write path (3 batches by
-    ``doc_id % 3``, banded rows via ``_overwrite_batch_partition``),
-    read it back through ``read_index``, and report per-batch row/doc/
+    ``doc_id % 3``, banded rows via ``state.write_batch``), read it
+    back through ``state.read``, and report per-batch row/doc/
     band-key counts. The oracle recomputes the same banding in DuckDB —
     so partition-dir layout, batch_id recovery from dir names, and
     band-key formation are all checked against an independent engine,
@@ -768,8 +602,8 @@ def dedup_stream_index_stats(spark, sf_dir):
     _track_scratch_dir(tmp)
     for b in range(3):
         batch = docs.where((F.col("doc_id") % 3) == b)
-        _overwrite_batch_partition(_bands(batch_signatures(batch)), tmp, b)
-    idx = read_index(spark, tmp)
+        state.write_batch(_bands(batch_signatures(batch)), tmp, b)
+    idx = state.read(spark, tmp)
     return (
         idx.groupBy(F.col("batch_id").cast("int").alias("batch_id"))
         .agg(
@@ -781,189 +615,3 @@ def dedup_stream_index_stats(spark, sf_dir):
         )
         .orderBy("batch_id")
     )
-
-
-def _sweep_garbage(index_dir: str, manifest: dict) -> dict:
-    """Delete what the last fold retired (manifest garbage) plus any
-    fold dir or fold tmp a crashed run left unreferenced. Idempotent:
-    a crash mid-sweep leaves entries listed, and they are re-deleted
-    (ignore_errors) on the next run. Returns the manifest with garbage
-    cleared (rewritten on disk only if there was any)."""
-    for p in manifest["garbage"]:
-        shutil.rmtree(os.path.join(index_dir, p), ignore_errors=True)
-    for e in os.scandir(index_dir):
-        if (
-            e.name.startswith("fold-") or e.name.startswith(".fold-")
-        ) and e.name != (manifest["fold_dir"] or ""):
-            shutil.rmtree(e.path, ignore_errors=True)
-    if manifest["garbage"]:
-        manifest = dict(manifest, garbage=[])
-        _write_manifest(index_dir, manifest)
-    return manifest
-
-
-def compact_index(
-    spark: SparkSession,
-    index_dir: str,
-    every: int = 64,
-    sort_col: str | None = "band_key",
-    latest_wins_key: str | None = None,
-    merge_schema: bool = False,
-    sweep_when: str = "always",
-    partition_col: str | None = None,
-) -> bool:
-    """Fold per-batch partition dirs into one ``fold-<hi>`` dir when the
-    live dir count reaches ``every`` — the signature-index version of
-    warehouse compaction. Original ``batch_id`` values are PRESERVED as
-    a physical column in the fold (probe semantics bit-identical before
-    and after), and fold rows are sorted by ``sort_col`` (default
-    band_key) so parquet row-group min/max stats prune the probe's key
-    filter tightly. Returns True if it compacted.
-
-    Schema-agnostic apart from ``batch_id`` (r11: the alias stream's
-    three state dirs fold through this same protocol via
-    ``alias_stream.compact_alias_state``). ``latest_wins_key``: keep
-    only the max-batch_id row per key among the folded batches —
-    read-equivalent for latest-batch-wins consumers (superseded rows
-    are unreadable anyway, and the never-folded newest batch keeps
-    replay views unchanged); used by the alias updates dir.
-
-    Two invariants close the crash-replay and concurrent-probe holes of
-    a delete-then-rename design:
-
-    1. **The newest live batch is never folded.** Structured Streaming
-       can replay the most recent batch N after a crash (index written,
-       checkpoint not committed). The replayed batch probes
-       ``batch_id < N`` and overwrites ``batch_id=N`` — both only safe
-       if N's own dir is still a plain per-batch dir and all folded ids
-       are < N. Folding strictly-older batches guarantees both.
-
-    ``merge_schema`` (r12, for the semantic DECISIONS dir): read the
-    foldable dirs with parquet mergeSchema and union schemas across
-    fold generations — a deployment upgraded mid-stream has pre-alias
-    partitions without the ``canonical`` column, and a single-footer
-    schema pick would silently DROP that column from the fold (the
-    review r11 #3 class, now at fold time). Off for the index dirs,
-    whose schema is fixed for an index's lifetime.
-    2. **The manifest rename is the only commit point, and a fold never
-       deletes the dirs it retires.** The fold is written to a hidden
-       tmp, renamed to ``fold-<hi>``, and then the manifest atomically
-       swaps to reference it, listing the previous fold + absorbed
-       per-batch dirs as garbage. Garbage is deleted at the start of the
-       NEXT sweep — so any reader holding either manifest version still
-       finds every dir its snapshot references (no quiet period needed;
-       a probe just has to finish within one sweep interval). A
-       crash before the manifest swap leaves an unreferenced fold dir
-       that the next sweep discards; sources are untouched.
-
-    ``partition_col`` (r13, VERDICT r12 #3): carry a hash-bucket
-    partition column through the fold (``fold-<hi>/<col>=<v>/``), so
-    bucket-pruned probes keep their pruning across folds — the decon
-    doc-gram history's retro-scan bound. Applied only when the column
-    is actually present in the folded schema (a dir written before the
-    bucketing shipped folds unpartitioned, no read breaks).
-
-    ``sweep_when`` (r12, review #2) picks the sweep cadence to match
-    the CALL cadence, so the reader grace window is one compaction
-    interval either way: ``"always"`` (default) sweeps at the start of
-    every call — right for interval-spaced manual/cron compaction
-    (the original contract); ``"fold"`` sweeps only in a call that
-    actually folds — required for per-trigger callers like the stream
-    loops, where an every-call sweep would delete a fold's retired
-    dirs ONE TRIGGER (~5 s) after the fold committed, yanking them
-    from under any external reader mid-scan."""
-    if not os.path.isdir(index_dir):
-        return False
-    if sweep_when not in ("always", "fold"):
-        raise ValueError(f"sweep_when must be 'always' or 'fold', "
-                         f"got {sweep_when!r}")
-    m = _read_manifest(index_dir)
-    if sweep_when == "always":
-        m = _sweep_garbage(index_dir, m)
-    live = _live_batch_parts(index_dir, m["folded_hi"])
-    if len(live) < every:
-        return False
-    foldable = live[:-1]  # invariant 1: never the newest
-    if not foldable:
-        return False
-    if sweep_when == "fold":
-        # per-trigger callers (the stream loops) sweep only when a fold
-        # actually happens, so retired dirs keep a FULL compaction
-        # interval of grace — sweeping on every call would shrink an
-        # external reader's window to one trigger (~5 s; review r12 #2)
-        m = _sweep_garbage(index_dir, m)
-    hi = int(foldable[-1].split("=", 1)[1])
-    # empty partitioned batch writes commit no data files at all (just
-    # _SUCCESS); reading a file-less dir dies on schema inference, so
-    # fold only the file-bearing dirs — the empty ones carry nothing
-    # and are still absorbed (recorded as garbage) below
-    readable = [p for p in foldable if _dir_has_data(os.path.join(index_dir, p))]
-    if not readable and not m["fold_dir"]:
-        # nothing to materialize: commit a fold-less manifest that
-        # still advances folded_hi, so the empty dirs retire normally
-        _write_manifest(
-            index_dir,
-            {"folded_hi": hi, "fold_dir": None, "garbage": foldable},
-        )
-        return True
-    reader = spark.read.option("basePath", index_dir)
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    if readable:
-        folded = (
-            reader.parquet(*[os.path.join(index_dir, p) for p in readable])
-            # partition-column inference types batch_id INT; pin the
-            # fold's physical column to the same so fold ∪ live unions
-            # cleanly
-            .withColumn("batch_id", F.col("batch_id").cast("int"))
-        )
-    else:
-        folded = None
-    if m["fold_dir"]:
-        prev = spark.read.parquet(os.path.join(index_dir, m["fold_dir"]))
-        folded = (
-            prev
-            if folded is None
-            else prev.unionByName(folded, allowMissingColumns=merge_schema)
-        )
-    if latest_wins_key is not None:
-        w = Window.partitionBy(latest_wins_key).orderBy(
-            F.col("batch_id").desc()
-        )
-        folded = (
-            folded.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    part_col = (
-        partition_col
-        if partition_col is not None and partition_col in folded.columns
-        else None
-    )
-    if sort_col is not None:
-        # with a partitioned fold, cluster by bucket first so each
-        # writer task emits contiguous runs per bucket dir, keeping the
-        # sort_col row-group min/max stats tight within every bucket
-        folded = folded.sortWithinPartitions(
-            *([part_col, sort_col] if part_col else [sort_col])
-        )
-    fold_name = f"fold-{hi}"
-    tmp = os.path.join(index_dir, f".{fold_name}.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    writer = (
-        folded.coalesce(max(1, len(foldable) // 16))
-        .write.mode("overwrite")
-    )
-    if part_col:
-        writer = writer.partitionBy(part_col)
-    writer.parquet(tmp)
-    os.rename(tmp, os.path.join(index_dir, fold_name))
-    _write_manifest(
-        index_dir,
-        {
-            "folded_hi": hi,
-            "fold_dir": fold_name,
-            "garbage": ([m["fold_dir"]] if m["fold_dir"] else []) + foldable,
-        },
-    )
-    return True

@@ -37,11 +37,11 @@ identically (``cross_first`` = min matching history vec_id = the exact
 kernel's positional first; pinned by
 ``test_semantic_stream_compressed_matches_exact``).
 
-Durability contract (inherited from dedup_stream): per-batch decisions
-and index rows land in ``batch_id=<n>`` partition dirs via overwrite —
-a replayed batch rewrites its own partition idempotently and reads only
-``batch_id < current`` history, so crash/replay cannot double-count or
-see its own output.
+Durability contract (the :mod:`~ballcone_spark.streaming.state`
+protocol): per-batch decisions and index rows land in ``batch_id=<n>``
+partition dirs via overwrite — a replayed batch rewrites its own
+partition idempotently and reads only ``batch_id < current`` history,
+so crash/replay cannot double-count or see its own output.
 
 Scale shape: routing is the Arrow matmul kernel (one b×64 @ 64×k per
 batch); the decision pass is one ``applyInPandas`` per touched cluster
@@ -59,13 +59,11 @@ growth.
 
 from __future__ import annotations
 
-import itertools
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ballcone_spark.operators.semantic_dedup import TAU, _route_np
+from ballcone_spark.streaming import state
 from ballcone_spark.streaming.dedup_stream import (
     SPOOL_MAX_FILES_PER_TRIGGER,
 )
@@ -81,248 +79,8 @@ __all__ = [
 #: ``codes`` is the PQ encoding of the NORMALIZED vector — populated in
 #: compressed mode, null otherwise (an exact-mode index reads back with
 #: null codes and still serves the exact path). The reader enforces
-#: this shape after the manifest-aware union (r12): vec_id long,
-#: cluster_id long, e array<double>, nrm double, codes array<int>,
-#: batch_id long.
-
-
-def _read_manifest_fs(spark: SparkSession, index_dir: str) -> dict:
-    """dedup_stream's fold manifest, read through the Hadoop FS API so
-    the reader stays FS-agnostic (ADVICE r6 class). Absent manifest =
-    the no-fold default — which is also the permanent state on object
-    stores, where :func:`~ballcone_spark.streaming.dedup_stream
-    .compact_index` is a posix-only no-op."""
-    import json as _json
-
-    from ballcone_spark.streaming.dedup_stream import _MANIFEST
-
-    jvm = spark._jvm
-    mpath = jvm.org.apache.hadoop.fs.Path(index_dir + "/" + _MANIFEST)
-    fs = mpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(mpath):
-        return {"folded_hi": -1, "fold_dir": None, "garbage": []}
-    stream = fs.open(mpath)
-    try:
-        out = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, out, 4096, False)
-        return _json.loads(out.toString("UTF-8"))
-    finally:
-        stream.close()
-
-
-def _fs_dir_has_data(fs, jvm, path_str: str) -> bool:
-    """Hadoop-FS twin of ``dedup_stream._dir_has_data``: True when the
-    dir tree holds at least one data file. Empty partitioned batch
-    writes (r13, the decon doc-gram placeholder on bench-only batches)
-    commit only ``_SUCCESS``; parquet schema inference dies on a
-    file-less path, so readers skip such dirs. ``listFiles`` iterates
-    lazily — the common (file-bearing) case stops at the first entry."""
-    it = fs.listFiles(jvm.org.apache.hadoop.fs.Path(path_str), True)
-    while it.hasNext():
-        name = it.next().getPath().getName()
-        if not name.startswith("_") and not name.startswith("."):
-            return True
-    return False
-
-
-#: unique-sentinel counter for dirs that vanish mid-listing (see
-#: :func:`_dir_signature`); a module counter, not a timestamp, so the
-#: sentinel is deterministic and never collides with a real signature
-_VANISHED = itertools.count()
-
-
-def _dir_signature(fs, jvm, path_str: str) -> tuple:
-    """Data-file content listing ``(path, mtime, length)`` of a state
-    dir — the content half of the resident cache's snapshot key (r14,
-    ADVICE r13 #3): a replayed batch OVERWRITES its own
-    ``batch_id=<n>`` dir under the same NAME (the 5484fde convention),
-    so a name-only key keeps serving the pre-replay frame — and once
-    Spark lazily re-scans it, FileNotFound on the deleted part files.
-    Part-file names embed a fresh UUID per write, so any rewrite
-    changes the signature even within mtime granularity.
-
-    A dir VANISHING between the snapshot's listStatus and this per-dir
-    listing (a racing fold commit + sweep — ADVICE r14 #1: the fold
-    grace window protects data reads, not arbitrary-latency key
-    checks) returns a process-unique sentinel instead of raising: the
-    key then can never equal any cached key, so the caller re-reads
-    from a FRESH snapshot rather than crashing the serving request.
-    Other FS failures (permissions, transient IO) still propagate —
-    the ADVICE r7 rule: only the one race whose safe meaning is
-    "snapshot changed under me" is absorbed."""
-    sig = []
-    try:
-        it = fs.listFiles(jvm.org.apache.hadoop.fs.Path(path_str), True)
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if name.startswith("_") or name.startswith("."):
-                continue
-            sig.append(
-                (st.getPath().toString(), st.getModificationTime(),
-                 st.getLen())
-            )
-    except Exception as e:  # Py4JJavaError wrapping the JVM exception
-        if "FileNotFoundException" not in str(e):
-            raise
-        return ("__vanished__", path_str, next(_VANISHED))
-    return tuple(sorted(sig))
-
-
-def _snapshot_names(
-    spark: SparkSession, root: str, with_signature: bool = False,
-    commit_cache: dict | None = None,
-):
-    """The manifest-snapshot listing shared by the readers and the
-    resident cache's invalidation key: ``(fold_name_or_None, parts)``
-    where ``parts`` are the committed, file-bearing per-batch dirs with
-    ``batch_id > folded_hi`` in batch order — or None when the dir
-    doesn't exist yet. With ``with_signature`` a third element is
-    appended: the data-file listing of the fold + live dirs, so
-    IN-PLACE rewrites (batch replay under an unchanged dir name)
-    change the key too — readers don't need it (they re-scan every
-    call), only the cache does. In signature mode each dir is listed
-    ONCE and the signature doubles as the has-data check (r15 — the
-    r14 shape listed every dir twice, once lazily for has-data and
-    once fully for the signature).
-
-    ``commit_cache`` (r15, VERDICT r14 #1): a caller-owned dict
-    memoizing dir names whose ``_SUCCESS`` + has-data checks already
-    passed. A committed batch dir is IMMUTABLE for any reader allowed
-    to see it (replay only ever rewrites the CURRENT batch, which
-    ``batch_id < current`` readers never select; fold dirs are
-    write-once under fresh ``fold-<hi>`` names), so the two py4j
-    round-trips per dir need only be paid once per stream, not once
-    per trigger — without the cache the per-trigger FS cost grows
-    linearly with the live-dir count until a fold. Only positive
-    results are cached. Internal stream readers pass a per-stream
-    dict; EXTERNAL/serving callers (and signature mode, which must
-    re-list content every time by definition) must not."""
-    jvm = spark._jvm
-    jsc = spark._jsc
-    path = jvm.org.apache.hadoop.fs.Path(root)
-    fs = path.getFileSystem(jsc.hadoopConfiguration())
-    # no try/except: fs.exists covers 'nothing yet'; a transient FS or
-    # permission failure must PROPAGATE so the batch retries, not be
-    # mis-read as empty history (ADVICE r7)
-    if not fs.exists(path):
-        return None
-    m = _read_manifest_fs(spark, root)
-    names = [s.getPath().getName() for s in fs.listStatus(path)]
-    sigs: dict[str, tuple] = {}
-
-    def _committed_with_data(n: str, check_success: bool) -> bool:
-        if (
-            commit_cache is not None
-            and not with_signature
-            and commit_cache.get(n)
-        ):
-            return True
-        # commit gate (r12): a LIVE stream may be mid-write in the
-        # newest dir — no parquet footers yet, and a raw read dies
-        # with UNABLE_TO_INFER_SCHEMA (hit by the vector live demo
-        # serving mid-trigger). Spark's own _SUCCESS marker is the
-        # job-commit signal; an uncommitted dir is invisible, read
-        # on the next poll. The streams' internal batch_id<current
-        # reads only ever see committed dirs, so this gates
-        # EXTERNAL readers only. (Fold dirs skip it — the manifest
-        # rename is their commit point.)
-        if check_success and not fs.exists(
-            jvm.org.apache.hadoop.fs.Path(root + "/" + n + "/_SUCCESS")
-        ):
-            return False
-        # committed-but-file-less dirs (empty partitioned writes, r13)
-        # contribute nothing and break schema inference
-        if with_signature:
-            # one listing serves both the has-data check and the key;
-            # a vanished dir stays keyed (sentinel forces a mismatch)
-            # but carries no data for the dropped-parts purpose
-            sig = _dir_signature(fs, jvm, root + "/" + n)
-            sigs[n] = sig
-            ok = bool(sig)
-        else:
-            ok = _fs_dir_has_data(fs, jvm, root + "/" + n)
-        if ok and commit_cache is not None and not with_signature:
-            commit_cache[n] = True
-        return ok
-
-    parts = sorted(
-        (
-            n for n in names
-            if n.startswith("batch_id=")
-            and int(n.split("=", 1)[1]) > m["folded_hi"]
-            and _committed_with_data(n, True)
-        ),
-        key=lambda n: int(n.split("=", 1)[1]),
-    )
-    fold = (
-        m["fold_dir"]
-        if (
-            m["fold_dir"]
-            and m["fold_dir"] in names
-            and _committed_with_data(m["fold_dir"], False)
-        )
-        else None
-    )
-    if not with_signature:
-        return fold, parts
-    sig = tuple(
-        sigs[d] for d in ([fold] if fold else []) + parts
-    )
-    return fold, parts, sig
-
-
-def _read_folded_dir(
-    spark: SparkSession, root: str, merge_schema: bool = False,
-    commit_cache: dict | None = None, schema: str | None = None,
-):
-    """Manifest-snapshot read of a folded state dir through the Hadoop
-    FS API: the manifest's fold dir plus per-batch dirs with
-    ``batch_id > folded_hi`` (the dedup_stream rule, so a read racing a
-    fold never double-counts). Returns the raw union or None when the
-    dir is absent/empty. One copy of the listStatus/filter/union logic
-    for both the index and decisions readers (review r12 #6);
-    ``merge_schema`` is the decisions dir's cross-generation schema
-    union (pre-alias partitions must surface canonical=null, not drop
-    the column).
-
-    ``schema`` (r16 driver-job diet): an explicit DDL read schema.
-    Schema inference and mergeSchema each cost ONE SPARK JOB per
-    ``read.parquet`` call — per-trigger overhead in the streaming
-    loops; a user-specified schema costs zero (measured). Missing
-    columns in older generations read as null — the same result the
-    mergeSchema union produced — so ``schema`` supersedes
-    ``merge_schema``. Declare ``batch_id int`` (the partition-inferred
-    physical type a fold bakes into its concat file); readers cast up
-    to long after, as before."""
-    snap = _snapshot_names(spark, root, commit_cache=commit_cache)
-    if snap is None:
-        return None
-    fold, parts = snap
-
-    def _reader():
-        r = spark.read
-        if schema is not None:
-            r = r.schema(schema)
-        elif merge_schema:
-            r = r.option("mergeSchema", "true")
-        return r
-
-    frames = []
-    if fold:
-        frames.append(_reader().parquet(root + "/" + fold))
-    if parts:
-        frames.append(
-            _reader().option("basePath", root).parquet(
-                *[root + "/" + p for p in parts]
-            )
-        )
-    if not frames:
-        return None
-    df = frames[0]
-    if len(frames) == 2:
-        df = df.unionByName(frames[1], allowMissingColumns=True)
-    return df
+#: this shape: vec_id long, cluster_id long, e array<double>, nrm
+#: double, codes array<int>, batch_id long.
 
 
 #: explicit read schemas for the streaming loop's per-trigger state
@@ -342,25 +100,10 @@ _DEC_READ_SCHEMA = (
 )
 
 
-def read_semantic_index(
-    spark: SparkSession, index_dir: str,
-    commit_cache: dict | None = None,
-    schema: str | None = None,
-):
+def read_semantic_index(spark: SparkSession, index_dir: str):
     """The resident index as a DataFrame, or None before the first batch
-    lands. Probed through the Hadoop FS API (ADVICE r6: an os.listdir
-    probe silently restricted the index to the local filesystem, unlike
-    the DAO/ingest sinks which take any s3a/hdfs URI Spark can read).
-
-    Manifest-aware since r12 (the stream now folds its own per-batch
-    dirs inline — see ``compact_every``): reads the manifest's fold dir
-    plus per-batch dirs with ``batch_id > folded_hi``, the dedup_stream
-    snapshot rule, so a read racing a fold never double-counts. With no
-    manifest (never folded, or an object store where the fold no-ops)
-    this degrades to exactly the old whole-dir read."""
-    df = _read_folded_dir(
-        spark, index_dir, commit_cache=commit_cache, schema=schema
-    )
+    lands — a :func:`~ballcone_spark.streaming.state.read` snapshot."""
+    df = state.read(spark, index_dir)
     if df is None:
         return None
     # enforce the _IDX_SCHEMA shape the old schema-pinned read gave:
@@ -390,7 +133,8 @@ class ResidentIndexCache:
     Invalidation is the readers' snapshot listing PLUS a content
     signature: ``(fold_dir, committed file-bearing live dirs,
     per-dir data-file (path, mtime, len) listings)`` from
-    :func:`_snapshot_names` with ``with_signature`` (r14, ADVICE r13
+    :func:`~ballcone_spark.streaming.state.snapshot` with
+    ``signature=True`` (r14, ADVICE r13
     #3 — a replayed batch overwrites its own dir under the same name,
     so dir names alone miss it and the cache would serve the
     pre-replay frame until some other snapshot change). A new batch
@@ -491,9 +235,7 @@ class ResidentIndexCache:
                 # the exception); loop — we may claim our own
             self._in_flight = True
         try:
-            snap = _snapshot_names(
-                self._spark, self._dir, with_signature=True
-            )
+            snap = state.snapshot(self._spark, self._dir, signature=True)
             key = (
                 None if snap is None
                 else (snap[0], tuple(snap[1]), snap[2])
@@ -609,47 +351,15 @@ def _adc_sims(q, codes, B):
     return dots / np.sqrt(rn2)[None, :]  # |q| = 1 by construction
 
 
-def read_state_before(
-    spark: SparkSession, root: str, batch_id: int,
-    commit_cache: dict | None = None,
-    schema: str | None = None,
-):
-    """History rows with ``batch_id < current`` through the manifest
-    snapshot (None before the first batch) — THE shared
-    replay-safe state reader (review r12-c #3: decon/alias each grew a
-    private copy of the same contract). ``commit_cache``: the
-    per-stream committed-dir memo (see :func:`_snapshot_names`) — safe
-    exactly here because this reader only ever selects dirs a replay
-    can no longer rewrite. ``schema``: explicit read schema (r16 —
-    skips the per-call schema-inference job; see
-    :func:`_read_folded_dir`)."""
-    df = _read_folded_dir(
-        spark, root, commit_cache=commit_cache, schema=schema
-    )
-    if df is None:
-        return None
-    return df.where(F.col("batch_id") < F.lit(batch_id))
-
-
-def read_semantic_decisions(
-    spark: SparkSession, decisions_dir: str,
-    commit_cache: dict | None = None,
-    schema: str | None = None,
-):
+def read_semantic_decisions(spark: SparkSession, decisions_dir: str):
     """Every decision row ``(vec_id, cluster_id, is_dup, n_matches
     [, canonical], batch_id)``, or None before the first batch — THE
-    reader for the stream's decisions dir (r12: the dir now folds
-    through the manifest protocol like the index, so a plain
-    ``spark.read.parquet(dir)`` would double-count rows retired by a
-    fold that the next run hasn't swept yet). Manifest-aware through
-    the Hadoop FS API; both the fold and the live dirs read with
-    parquet mergeSchema, so pre-alias partitions (no ``canonical``
-    column — review r11 #3) surface as canonical=null rather than
-    nondeterministically dropping the column."""
-    df = _read_folded_dir(
-        spark, decisions_dir, merge_schema=True,
-        commit_cache=commit_cache, schema=schema,
-    )
+    reader for the stream's decisions dir, which folds like the index,
+    so a plain ``spark.read.parquet(dir)`` would double-count retired
+    rows. Read with mergeSchema, so pre-alias partitions (no
+    ``canonical`` column — review r11 #3) surface as canonical=null
+    rather than nondeterministically dropping the column."""
+    df = state.read(spark, decisions_dir, merge_schema=True)
     if df is None:
         return None
     return df.withColumn("batch_id", F.col("batch_id").cast("long"))
@@ -940,20 +650,19 @@ def semantic_index_topk(
 
 def _read_decision_canon(
     spark: SparkSession, decisions_dir: str, batch_id: int,
-    commit_cache: dict | None = None,
     schema: str | None = None,
 ):
     """vec_id → canonical from prior decisions (``batch_id <
-    current``), or None when no decisions exist yet. Delegates to the
-    manifest-aware :func:`read_semantic_decisions`; pre-alias rows read
-    canonical=null and the decide paths' coalesce falls back to
+    current``), or None when no decisions exist yet. Pre-alias rows
+    read canonical=null and the decide paths' coalesce falls back to
     self."""
-    df = read_semantic_decisions(spark, decisions_dir, commit_cache, schema)
+    df = state.read(
+        spark, decisions_dir, before=batch_id, schema=schema,
+        merge_schema=True,
+    )
     if df is None or "canonical" not in df.columns:
         return None
-    return df.where(F.col("batch_id") < F.lit(batch_id)).select(
-        "vec_id", "canonical"
-    )
+    return df.select("vec_id", "canonical")
 
 
 #: batch-cluster isin ceiling (r16 driver-job diet): the per-trigger
@@ -1260,10 +969,6 @@ def _decide(
     )
 
 
-def _overwrite_partition(df: DataFrame, base: str, batch_id: int) -> None:
-    df.write.mode("overwrite").parquet(f"{base}/batch_id={batch_id}")
-
-
 def _with_codes(routed: DataFrame, books) -> DataFrame:
     """Attach PQ codes of the normalized vector to routed batch rows —
     the compressed index representation (one Arrow encode pass)."""
@@ -1336,8 +1041,8 @@ def start_semantic_dedup_stream(
     compressed screen cannot score).
 
     ``compact_every`` (r12): fold the INDEX's per-batch dirs through
-    dedup_stream's :func:`~ballcone_spark.streaming.dedup_stream
-    .compact_index` when the live dir count reaches this many —
+    :func:`~ballcone_spark.streaming.state.fold` when the live dir
+    count reaches this many —
     previously nothing in the loop folded, so a long-running stream
     paid an ever-growing dir listing per trigger. Fold rows are sorted
     by ``cluster_id`` so the per-cluster history probe prunes row
@@ -1345,9 +1050,8 @@ def start_semantic_dedup_stream(
     once — first-seen, never revisited — so a plain concat fold is
     read-equivalent; ``merge_schema`` keeps pre-alias partitions from
     dropping the ``canonical`` column at fold time): external consumers
-    must read it via :func:`read_semantic_decisions`, the
-    manifest-aware reader. On object stores the fold is a posix-only
-    no-op and reads are unchanged. ``None`` disables."""
+    must read it via :func:`read_semantic_decisions`. ``None``
+    disables."""
     import numpy as np
 
     if compressed and books is None:
@@ -1371,14 +1075,6 @@ def start_semantic_dedup_stream(
         ).alias("e"),
     ).where(F.col("vec_id").isNotNull() & F.col("e").isNotNull())
 
-    # per-stream committed-dir memo (r15, VERDICT r14 #1): the history
-    # reads re-verified _SUCCESS + has-data for every live dir on every
-    # trigger — two py4j round-trips per dir, growing linearly until a
-    # fold. Committed dirs are immutable for batch_id<current readers,
-    # so one positive check per dir per stream suffices.
-    idx_cache: dict = {}
-    dec_cache: dict = {}
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         routed = _route_np(batch_df, ids, cmat)
         if compressed:
@@ -1397,19 +1093,16 @@ def start_semantic_dedup_stream(
             return
         batch_clusters = sorted({r[0] for r in rows})
         # explicit read schemas: inference/mergeSchema cost one Spark
-        # job per read.parquet — two more jobs per trigger, gone
-        hist = read_semantic_index(
-            spark, index_dir, commit_cache=idx_cache,
-            schema=_IDX_READ_SCHEMA,
+        # job per read.parquet — two more jobs per trigger, gone. The
+        # index schema is already read_semantic_index's shape.
+        hist = state.read(
+            spark, index_dir, before=batch_id, schema=_IDX_READ_SCHEMA
         )
         hist_canon = None
         if hist is not None:
-            hist = hist.where(F.col("batch_id") < F.lit(batch_id)).drop(
-                "batch_id"
-            )
+            hist = hist.drop("batch_id")
             hist_canon = _read_decision_canon(
-                spark, decisions_dir, batch_id, commit_cache=dec_cache,
-                schema=_DEC_READ_SCHEMA,
+                spark, decisions_dir, batch_id, schema=_DEC_READ_SCHEMA
             )
         if compressed:
             decisions = _decide_compressed(
@@ -1421,12 +1114,10 @@ def start_semantic_dedup_stream(
                 routed, hist, tau, hist_canon=hist_canon,
                 batch_clusters=batch_clusters,
             )
-        _overwrite_partition(decisions, decisions_dir, batch_id)
-        _overwrite_partition(routed, index_dir, batch_id)
+        state.write_batch(decisions, decisions_dir, batch_id, len(rows))
+        state.write_batch(routed, index_dir, batch_id, len(rows))
         if compact_every is not None:
-            from ballcone_spark.streaming.dedup_stream import compact_index
-
-            compact_index(
+            state.fold(
                 spark, index_dir, every=compact_every,
                 sort_col="cluster_id", sweep_when="fold",
             )
@@ -1435,7 +1126,7 @@ def start_semantic_dedup_stream(
             # read-equivalent; merge_schema keeps pre-alias partitions
             # from dropping the canonical column at fold time. External
             # consumers read via read_semantic_decisions.
-            compact_index(
+            state.fold(
                 spark, decisions_dir, every=compact_every, sort_col=None,
                 merge_schema=True, sweep_when="fold",
             )

@@ -342,7 +342,7 @@ def test_pipeline_retired_dir_survives_one_run(spark, tmp_path):
     """Deferred-garbage reader grace (review r12-d): a re-run RETIRES
     the old committed data dir instead of deleting it at commit — a
     concurrent stage_output reader that resolved the old token keeps
-    scanning intact files (the compact_index one-interval contract).
+    scanning intact files (the state.fold one-interval contract).
     The retired dir is recorded as manifest garbage and deleted on the
     NEXT run; crashed-attempt orphans still die immediately."""
     stages = _diamond([])

@@ -860,7 +860,7 @@ def test_semantic_serving_scan_pushes_cluster_filter(spark, tmp_path):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from ballcone_spark.streaming.dedup_stream import compact_index
+    from ballcone_spark.streaming import state
     from ballcone_spark.streaming.semantic_stream import (
         read_semantic_index,
     )
@@ -877,7 +877,7 @@ def test_semantic_serving_scan_pushes_cluster_filter(spark, tmp_path):
         spark.createDataFrame(pdf).write.mode("overwrite").parquet(
             f"{idx}/batch_id={b}"
         )
-    assert compact_index(spark, idx, every=2, sort_col="cluster_id")
+    assert state.fold(spark, idx, every=2, sort_col="cluster_id")
 
     hist = read_semantic_index(spark, idx)
     side = hist.where(F.col("cluster_id").isin([1])).select(

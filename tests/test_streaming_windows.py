@@ -10,6 +10,8 @@ import json
 import pytest
 from pyspark.sql import types as T
 
+from ballcone_spark.streaming import state
+
 from ballcone_spark.streaming.windows import (
     running_user_totals,
     session_counts,
@@ -209,27 +211,22 @@ def test_incremental_dedup_across_batches(spark, tmp_path):
     """Planted near-dups ACROSS micro-batches are caught by the index
     probe; checkpoint resume keeps the index consistent (batch 2 runs
     with the same checkpoint after a stop)."""
-    from ballcone_spark.streaming.dedup_stream import (
-        read_decisions,
-        read_index,
-    )
-
     spool = tmp_path / "spool"
     _write_docs(spool, [(1, BASE), (2, OTHER), (3, BASE)])  # 3 dups 1
     _run_dedup(spark, tmp_path)
     d1 = {r["doc_id"]: r["is_dup"] for r in
-          read_decisions(spark, str(tmp_path / "decisions")).collect()}
+          state.read(spark, str(tmp_path / "decisions")).collect()}
     assert d1 == {1: False, 2: False, 3: True}
 
     # second batch arrives after a full stop: 4 dups doc 1 (history!),
     # 5 is fresh, 6 dups 5 within the batch
     _write_docs(spool, [(4, BASE), (5, THIRD), (6, THIRD)])
     _run_dedup(spark, tmp_path)
-    dec = read_decisions(spark, str(tmp_path / "decisions"))
+    dec = state.read(spark, str(tmp_path / "decisions"))
     d2 = {r["doc_id"]: r["is_dup"] for r in dec.collect()}
     assert d2 == {1: False, 2: False, 3: True, 4: True, 5: False, 6: True}
     # the index holds every seen doc across both batches (banded rows)
-    idx = read_index(spark, str(tmp_path / "index"))
+    idx = state.read(spark, str(tmp_path / "index"))
     assert sorted(
         r["doc_id"] for r in idx.select("doc_id").distinct().collect()
     ) == [1, 2, 3, 4, 5, 6]
@@ -248,34 +245,32 @@ def test_incremental_dedup_batch_replay_idempotent(spark, tmp_path):
     partition."""
     from ballcone_spark.streaming.dedup_stream import (
         _bands,
-        _overwrite_batch_partition,
         batch_signatures,
         incremental_dedup_batch,
-        read_index,
     )
     from pyspark.sql import functions as F
 
     index_dir = str(tmp_path / "index")
     b1 = spark.createDataFrame([(1, BASE), (2, OTHER)], "doc_id long, text string")
-    _overwrite_batch_partition(_bands(batch_signatures(b1)), index_dir, 0)
+    state.write_batch(_bands(batch_signatures(b1)), index_dir, 0)
 
     b2 = spark.createDataFrame([(3, BASE), (4, OTHER + " q")], "doc_id long, text string")
     s2 = batch_signatures(b2)
 
     def run_batch2():
-        hist = read_index(spark, index_dir).where(F.col("batch_id") < 1).select(
+        hist = state.read(spark, index_dir).where(F.col("batch_id") < 1).select(
             "doc_id", "band_idx", "band_key", "sig"
         )
         dec = incremental_dedup_batch(s2, hist)
         out = sorted((r["doc_id"], r["is_dup"], r["n_matches"]) for r in dec.collect())
-        _overwrite_batch_partition(_bands(s2), index_dir, 1)
+        state.write_batch(_bands(s2), index_dir, 1)
         return out
 
     first = run_batch2()
     second = run_batch2()  # the replay
     assert first == second
     assert first[0] == (3, True, 1)  # 3 dups 1 via the index
-    idx = read_index(spark, index_dir)
+    idx = state.read(spark, index_dir)
     assert idx.select("doc_id").distinct().count() == 4  # no double-append
     assert idx.count() == 16  # 4 docs × 4 banded rows, exactly once
 
@@ -287,7 +282,6 @@ def test_streaming_decisions_match_declarative_simulation(spark, tmp_path):
     from ballcone_spark.streaming.dedup_stream import (
         batch_signatures,
         incremental_dedup_simulation,
-        read_decisions,
     )
     from pyspark.sql import functions as F
 
@@ -303,7 +297,7 @@ def test_streaming_decisions_match_declarative_simulation(spark, tmp_path):
     _run_dedup(spark, tmp_path)
     _write_docs(spool, docs[6:])
     _run_dedup(spark, tmp_path)
-    dec = read_decisions(spark, str(tmp_path / "decisions"))
+    dec = state.read(spark, str(tmp_path / "decisions"))
     streamed = {r["doc_id"]: r["is_dup"] for r in dec.collect()}
 
     batch_of = {d[0]: i // 3 for i, d in enumerate(docs)}
@@ -357,12 +351,12 @@ def test_backfill_batch_degrades_gracefully(spark, tmp_path, monkeypatch):
         q.awaitTermination(120)
     split_dec = {
         r["doc_id"]: r["is_dup"]
-        for r in ds.read_decisions(spark, str(split_root / "decisions")).collect()
+        for r in state.read(spark, str(split_root / "decisions")).collect()
     }
 
     # run B: the backfill — two huge batches, caps forced into overflow
     monkeypatch.setattr(ds, "MAX_PUSHDOWN_KEYS", 4)
-    monkeypatch.setattr(ds, "ROWS_PER_FILE", 10)
+    monkeypatch.setattr(state, "ROWS_PER_FILE", 10)
     bulk_root = tmp_path / "bulk"
     for lo, hi in [(0, 26), (26, 40)]:
         _write_docs(bulk_root / "spool", docs[lo:hi])
@@ -377,7 +371,7 @@ def test_backfill_batch_degrades_gracefully(spark, tmp_path, monkeypatch):
         q.awaitTermination(120)
     bulk_dec = {
         r["doc_id"]: r["is_dup"]
-        for r in ds.read_decisions(spark, str(bulk_root / "decisions")).collect()
+        for r in state.read(spark, str(bulk_root / "decisions")).collect()
     }
     assert bulk_dec == split_dec
     assert any(bulk_dec.values())  # non-vacuous: dups exist
@@ -398,7 +392,7 @@ def test_backfill_batch_degrades_gracefully(spark, tmp_path, monkeypatch):
 
     batch = spark.createDataFrame(docs[:6], "doc_id long, text string")
     hist = (
-        ds.read_index(spark, str(bulk_root / "index"))
+        state.read(spark, str(bulk_root / "index"))
         .where(F.col("batch_id") < 2)
         .select("doc_id", "band_idx", "band_key", "sig")
     )
@@ -417,10 +411,8 @@ def test_probe_plan_index_side(spark, tmp_path):
     pushed into the index scan for row-group pruning."""
     from ballcone_spark.streaming.dedup_stream import (
         _bands,
-        _overwrite_batch_partition,
         batch_signatures,
         incremental_dedup_batch,
-        read_index,
     )
     from pyspark.sql import functions as F
 
@@ -429,13 +421,11 @@ def test_probe_plan_index_side(spark, tmp_path):
         [(i, f"{BASE} variant {i}") for i in range(20)],
         "doc_id long, text string",
     )
-    _overwrite_batch_partition(
-        _bands(batch_signatures(hist_docs)), index_dir, 0
-    )
+    state.write_batch(_bands(batch_signatures(hist_docs)), index_dir, 0)
     batch = spark.createDataFrame(
         [(100, BASE + " variant 3"), (101, OTHER)], "doc_id long, text string"
     )
-    hist = read_index(spark, index_dir).where(F.col("batch_id") < 1).select(
+    hist = state.read(spark, index_dir).where(F.col("batch_id") < 1).select(
         "doc_id", "band_idx", "band_key", "sig"
     )
     dec = incremental_dedup_batch(batch_signatures(batch), hist)
@@ -460,7 +450,7 @@ def _index_batches(spark, index_dir, n_batches, docs_per=3):
             [(b * 10 + i, f"{BASE} b{b} i{i}") for i in range(docs_per)],
             "doc_id long, text string",
         )
-        ds._overwrite_batch_partition(
+        state.write_batch(
             ds._bands(ds.batch_signatures(docs)), index_dir, b
         )
     return {b * 10 + i for b in range(n_batches) for i in range(docs_per)}
@@ -483,7 +473,7 @@ def test_compact_index_preserves_decisions(spark, tmp_path):
     )
 
     def decide():
-        hist = ds.read_index(spark, index_dir).where(F.col("batch_id") < 50)
+        hist = state.read(spark, index_dir).where(F.col("batch_id") < 50)
         return sorted(
             (r["doc_id"], r["is_dup"])
             for r in ds.incremental_dedup_batch(
@@ -493,15 +483,15 @@ def test_compact_index_preserves_decisions(spark, tmp_path):
         )
 
     before = decide()
-    assert ds.compact_index(spark, index_dir, every=3)
+    assert state.fold(spark, index_dir, every=3)
     spark.catalog.clearCache()
     assert decide() == before
-    m = ds._read_manifest(index_dir)
+    m = state.read_manifest(spark, index_dir)
     assert (m["fold_dir"], m["folded_hi"]) == ("fold-1", 1)
     assert sorted(m["garbage"]) == ["batch_id=0", "batch_id=1"]
     # deferred deletion: retired dirs still on disk for in-flight readers
     assert os.path.isdir(os.path.join(index_dir, "batch_id=0"))
-    idx = ds.read_index(spark, index_dir)
+    idx = state.read(spark, index_dir)
     assert idx.select("doc_id").distinct().count() == 9
     # original batch ids preserved through the fold (probe filter
     # semantics bit-identical before/after)
@@ -509,9 +499,9 @@ def test_compact_index_preserves_decisions(spark, tmp_path):
         r["batch_id"] for r in idx.select("batch_id").distinct().collect()
     } == {0, 1, 2}
     # the NEXT run sweeps the garbage
-    assert not ds.compact_index(spark, index_dir, every=999)
+    assert not state.fold(spark, index_dir, every=999)
     assert not os.path.isdir(os.path.join(index_dir, "batch_id=0"))
-    assert ds._read_manifest(index_dir)["garbage"] == []
+    assert state.read_manifest(spark, index_dir)["garbage"] == []
     spark.catalog.clearCache()
     assert decide() == before
 
@@ -536,7 +526,7 @@ def test_compact_index_crash_replay_decisions_stable(spark, tmp_path):
 
     def decide():
         hist = (
-            ds.read_index(spark, index_dir)
+            state.read(spark, index_dir)
             .where(F.col("batch_id") < 3)
             .select("doc_id", "band_idx", "band_key", "sig")
         )
@@ -546,15 +536,15 @@ def test_compact_index_crash_replay_decisions_stable(spark, tmp_path):
         )
 
     before = decide()
-    assert ds.compact_index(spark, index_dir, every=4)  # folds 0..2 only
-    m = ds._read_manifest(index_dir)
+    assert state.fold(spark, index_dir, every=4)  # folds 0..2 only
+    m = state.read_manifest(spark, index_dir)
     assert (m["folded_hi"], m["fold_dir"]) == (2, "fold-2")
     spark.catalog.clearCache()
     assert decide() == before  # replayed probe sees identical history
     # the replay's own overwrite lands in its per-batch dir; fold intact
-    ds._overwrite_batch_partition(ds._bands(s3), index_dir, 3)
+    state.write_batch(ds._bands(s3), index_dir, 3)
     spark.catalog.clearCache()
-    assert ds.read_index(spark, index_dir).select("doc_id").distinct().count() == 8
+    assert state.read(spark, index_dir).select("doc_id").distinct().count() == 8
     assert decide() == before
 
 
@@ -589,27 +579,27 @@ def test_compact_index_crash_recovery(spark, tmp_path, monkeypatch, crash_at):
                 raise Boom()
             real_rename(src, dst)
 
-        monkeypatch.setattr(ds.os, "rename", rename_hook)
+        monkeypatch.setattr(state.os, "rename", rename_hook)
         with pytest.raises(Boom):
-            ds.compact_index(spark, index_dir, every=3)
+            state.fold(spark, index_dir, every=3)
         monkeypatch.undo()
         assert os.path.isdir(os.path.join(index_dir, ".fold-1.tmp"))
     elif crash_at in ("before_manifest_swap", "new_batch_survives"):
         # fold dir renamed into place, but the manifest never swapped:
         # the fold is unreferenced and must be discarded on recovery
-        def manifest_hook(index_dir_, manifest):
+        def manifest_hook(spark_, index_dir_, manifest):
             raise Boom()
 
-        monkeypatch.setattr(ds, "_write_manifest", manifest_hook)
+        monkeypatch.setattr(state, "write_manifest", manifest_hook)
         with pytest.raises(Boom):
-            ds.compact_index(spark, index_dir, every=3)
+            state.fold(spark, index_dir, every=3)
         monkeypatch.undo()
         assert os.path.isdir(os.path.join(index_dir, "fold-1"))
         if crash_at == "new_batch_survives":
             late = spark.createDataFrame(
                 [(99, BASE + " very late")], "doc_id long, text string"
             )
-            ds._overwrite_batch_partition(
+            state.write_batch(
                 ds._bands(ds.batch_signatures(late)), index_dir, 7
             )
             all_docs = all_docs | {99}
@@ -617,30 +607,30 @@ def test_compact_index_crash_recovery(spark, tmp_path, monkeypatch, crash_at):
         # a COMMITTED fold whose garbage sweep (next run) dies halfway:
         # garbage dirs are excluded by the manifest snapshot rule whether
         # or not they are still on disk, and the sweep is idempotent
-        assert ds.compact_index(spark, index_dir, every=3)
+        assert state.fold(spark, index_dir, every=3)
         real_rmtree = shutil.rmtree
-        state = {"n": 0}
+        seen = {"n": 0}
 
         def rmtree_hook(p, **kw):
             if os.path.basename(p).startswith("batch_id="):
-                state["n"] += 1
-                if state["n"] == 2:
+                seen["n"] += 1
+                if seen["n"] == 2:
                     raise Boom()
             real_rmtree(p, **kw)
 
-        monkeypatch.setattr(ds.shutil, "rmtree", rmtree_hook)
+        monkeypatch.setattr(state.shutil, "rmtree", rmtree_hook)
         with pytest.raises(Boom):
-            ds.compact_index(spark, index_dir, every=999)
+            state.fold(spark, index_dir, every=999)
         monkeypatch.undo()
 
     spark.catalog.clearCache()
     # recovery = simply the next compaction attempt (sweep runs first)
-    ds.compact_index(spark, index_dir, every=999)
+    state.fold(spark, index_dir, every=999)
     spark.catalog.clearCache()
-    idx = ds.read_index(spark, index_dir)
+    idx = state.read(spark, index_dir)
     got = {r["doc_id"] for r in idx.select("doc_id").distinct().collect()}
     assert got == all_docs, f"{crash_at}: lost {all_docs - got}"
-    m = ds._read_manifest(index_dir)
+    m = state.read_manifest(spark, index_dir)
     assert m["garbage"] == []
     # no unreferenced fold dirs or tmp residue survive recovery
     strays = [
@@ -663,7 +653,6 @@ def test_compact_index_concurrent_probes(spark, tmp_path):
     fold or a vanished partition would break the exact (doc, 4) shape."""
     import threading
 
-    from ballcone_spark.streaming import dedup_stream as ds
     from pyspark.sql import functions as F
 
     index_dir = str(tmp_path / "index")
@@ -678,7 +667,7 @@ def test_compact_index_concurrent_probes(spark, tmp_path):
             try:
                 got = {
                     (r["doc_id"], r["n"])
-                    for r in ds.read_index(spark, index_dir)
+                    for r in state.read(spark, index_dir)
                     .groupBy("doc_id")
                     .agg(F.count("*").alias("n"))
                     .collect()
@@ -691,11 +680,101 @@ def test_compact_index_concurrent_probes(spark, tmp_path):
     t = threading.Thread(target=probe_loop)
     t.start()
     try:
-        assert ds.compact_index(spark, index_dir, every=4)
+        assert state.fold(spark, index_dir, every=4)
     finally:
         stop.set()
         t.join()
     assert anomalies == []
+
+
+def test_uri_state_dirs_read_and_fold(spark, tmp_path):
+    """State dirs given as ``file://`` URIs go through the same reader
+    and fold as plain paths. A posix-only reader saw no history there,
+    so the dedup stream admitted every cross-batch duplicate, the alias
+    map read back empty, and the fold silently skipped."""
+    from ballcone_spark.streaming.alias_stream import read_alias_map
+    from ballcone_spark.streaming.dedup_stream import start_dedup_stream
+
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    for i, docs in enumerate([[(1, BASE), (2, OTHER)], [(3, BASE)]]):
+        with open(spool / f"b{i}.jsonl", "w") as f:
+            for doc_id, text in docs:
+                f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
+    index_uri = (tmp_path / "index").as_uri()
+    dec_uri = (tmp_path / "decisions").as_uri()
+    q = start_dedup_stream(
+        spark, str(spool), index_uri, dec_uri, str(tmp_path / "ckpt"),
+        available_now=True, max_files_per_trigger=1,  # one file per batch
+    )
+    q.awaitTermination(120)
+    got = {
+        r["doc_id"]: (r["batch_id"], r["is_dup"])
+        for r in state.read(spark, dec_uri).collect()
+    }
+    # doc 3 duplicates doc 1 from the EARLIER batch: only a reader that
+    # sees the URI index's history catches it
+    assert got == {1: (0, False), 2: (0, False), 3: (1, True)}
+
+    alias_uri = (tmp_path / "alias").as_uri()
+    rows = [("fa", "fa", True), ("fb", "fa", False)]
+    state.write_batch(
+        spark.createDataFrame(
+            rows, "chunk_fp string, canonical_fp string, is_canonical boolean"
+        ),
+        alias_uri,
+        0,
+    )
+    assert sorted(map(tuple, read_alias_map(spark, alias_uri).collect())) == rows
+
+    # a file: URI resolves to its local path and really folds
+    fold_uri = (tmp_path / "fold_idx").as_uri()
+    expected = _index_batches(spark, fold_uri, 3)
+    assert state.fold(spark, fold_uri, every=3)
+    m = state.read_manifest(spark, fold_uri)
+    assert (m["fold_dir"], m["folded_hi"]) == ("fold-1", 1)
+    assert (tmp_path / "fold_idx" / "fold-1").is_dir()
+    assert {
+        r["doc_id"] for r in state.read(spark, fold_uri).select("doc_id").collect()
+    } == expected
+
+
+def test_commit_memo_safe_for_outside_readers(spark, tmp_path):
+    """The commit memo serves every reader, so it must never hide a
+    replay or a sweep from one: the newest dir is re-checked on every
+    read (a replay rewrites it in place), and a fold + sweep leaves no
+    later read referencing a deleted dir."""
+    root = str(tmp_path / "state")
+
+    def batch(b, ids):
+        state.write_batch(
+            spark.createDataFrame([(i, f"k{i}") for i in ids],
+                                  "doc_id long, band_key string"),
+            root, b,
+        )
+
+    def doc_ids():
+        return sorted(
+            r["doc_id"] for r in state.read(spark, root).select("doc_id").collect()
+        )
+
+    for b in range(3):
+        batch(b, [b * 10 + i for i in range(3)])
+    assert doc_ids() == [0, 1, 2, 10, 11, 12, 20, 21, 22]
+    # only the dirs below the newest are memoized
+    assert set(state._COMMITTED[root]) == {"batch_id=0", "batch_id=1"}
+
+    batch(2, [25, 26, 27, 28])  # the replay: same dir, different rows
+    assert doc_ids() == [0, 1, 2, 10, 11, 12, 25, 26, 27, 28]
+
+    assert state.fold(spark, root, every=3, sort_col=None)  # folds 0..1
+    assert not state.fold(spark, root, every=999)  # sweeps the garbage
+    assert not (tmp_path / "state" / "batch_id=0").exists()
+    df = state.read(spark, root)
+    swept = ("/batch_id=0/", "/batch_id=1/")
+    assert not [f for f in df.inputFiles() if any(s in f for s in swept)]
+    assert doc_ids() == [0, 1, 2, 10, 11, 12, 25, 26, 27, 28]
+    assert "batch_id=0" not in state._COMMITTED[root]
 
 
 # --------------------------------------------------------------------- #
@@ -1270,7 +1349,6 @@ def test_alias_state_fold_preserves_reads(spark, tmp_path):
     import os as _os
 
     from ballcone_spark.streaming.alias_stream import (
-        compact_alias_state,
         read_alias_map,
         start_chunk_alias_stream,
     )
@@ -1310,9 +1388,9 @@ def test_alias_state_fold_preserves_reads(spark, tmp_path):
     # fold ALL THREE state dirs (every=2 folds batch 0, keeps batch 1);
     # the alias dir folds latest-wins (superseded rows dropped)
     for d in dirs[:2]:
-        assert compact_alias_state(spark, d, every=2)
-    assert compact_alias_state(
-        spark, dirs[2], every=2, latest_wins_key="chunk_fp"
+        assert state.fold(spark, d, every=2, sort_col=None)
+    assert state.fold(
+        spark, dirs[2], every=2, sort_col=None, latest_wins_key="chunk_fp"
     )
     after = sorted(map(tuple, read_alias_map(spark, dirs[2]).collect()))
     assert after == before
@@ -1341,7 +1419,6 @@ def test_semantic_stream_compacts_index_inline(spark, tmp_path):
     import math
     import os as _os
 
-    from ballcone_spark.streaming import dedup_stream as ds
     from ballcone_spark.streaming.semantic_stream import (
         read_semantic_decisions,
         start_semantic_dedup_stream,
@@ -1383,7 +1460,7 @@ def test_semantic_stream_compacts_index_inline(spark, tmp_path):
     want = {10: (False, 10), 20: (True, 10), 30: (True, 10),
             40: (True, 10)}
     assert folded == plain == want
-    m = ds._read_manifest(str(tmp_path / "sidx_fold"))
+    m = state.read_manifest(spark, str(tmp_path / "sidx_fold"))
     assert m["fold_dir"] is not None
     live = [e.name for e in _os.scandir(str(tmp_path / "sidx_fold"))
             if e.name.startswith("batch_id=")]
@@ -1402,9 +1479,7 @@ def test_semantic_decisions_fold_preserves_canonical_through_upgrade(
     rows read canonical=null (the decide paths' coalesce falls back to
     self), new rows keep their exact values, and the canonical chain
     reader serves the same map as before the fold."""
-    from ballcone_spark.streaming import dedup_stream as ds
     from ballcone_spark.streaming.semantic_stream import (
-        _overwrite_partition,
         _read_decision_canon,
         read_semantic_decisions,
     )
@@ -1414,14 +1489,14 @@ def test_semantic_decisions_fold_preserves_canonical_through_upgrade(
         [(1, 0, False, 0), (2, 0, True, 1)],
         "vec_id long, cluster_id long, is_dup boolean, n_matches long",
     )
-    _overwrite_partition(pre, dec, 0)  # pre-alias deployment's batch
+    state.write_batch(pre, dec, 0)  # pre-alias deployment's batch
     post = spark.createDataFrame(
         [(3, 0, True, 1, 1)],
         "vec_id long, cluster_id long, is_dup boolean, n_matches long, "
         "canonical long",
     )
-    _overwrite_partition(post, dec, 1)
-    _overwrite_partition(
+    state.write_batch(post, dec, 1)
+    state.write_batch(
         post.selectExpr("CAST(4 AS BIGINT) AS vec_id", "cluster_id", "is_dup",
                         "n_matches", "canonical"), dec, 2,
     )
@@ -1430,7 +1505,7 @@ def test_semantic_decisions_fold_preserves_canonical_through_upgrade(
         r["vec_id"]: r["canonical"]
         for r in _read_decision_canon(spark, dec, 99).collect()
     }
-    assert ds.compact_index(
+    assert state.fold(
         spark, dec, every=2, sort_col=None, merge_schema=True
     )
     after_all = read_semantic_decisions(spark, dec)
@@ -1443,11 +1518,11 @@ def test_semantic_decisions_fold_preserves_canonical_through_upgrade(
     } == before
     # a second fold generation unions the old fold (which has the
     # merged schema) with new live dirs without dropping the column
-    _overwrite_partition(
+    state.write_batch(
         post.selectExpr("CAST(5 AS BIGINT) AS vec_id", "cluster_id", "is_dup",
                         "n_matches", "canonical"), dec, 3,
     )
-    assert ds.compact_index(
+    assert state.fold(
         spark, dec, every=2, sort_col=None, merge_schema=True
     )
     got2 = {
@@ -1489,7 +1564,7 @@ def test_dedup_stream_compacts_index_inline(spark, tmp_path):
             q.awaitTermination(120)
         return {
             r["doc_id"]: r["is_dup"]
-            for r in ds.read_decisions(
+            for r in state.read(
                 spark, str(tmp_path / f"dec_{tag}")
             ).collect()
         }
@@ -1498,11 +1573,11 @@ def test_dedup_stream_compacts_index_inline(spark, tmp_path):
     plain = run("plain", compact_every=None)
     assert folded == plain == {1: False, 2: False, 3: True,
                                4: False, 5: True}
-    m = ds._read_manifest(str(tmp_path / "index_fold"))
+    m = state.read_manifest(spark, str(tmp_path / "index_fold"))
     assert m["fold_dir"] is not None  # the loop really folded
-    assert ds._read_manifest(str(tmp_path / "index_plain"))["fold_dir"] is None
+    assert state.read_manifest(spark, str(tmp_path / "index_plain"))["fold_dir"] is None
     # the folded index still answers a fresh history probe correctly
-    idx = ds.read_index(spark, str(tmp_path / "index_fold"))
+    idx = state.read(spark, str(tmp_path / "index_fold"))
     assert idx.select("doc_id").distinct().count() == 5
     live = [
         e.name for e in _os.scandir(str(tmp_path / "index_fold"))
@@ -1518,7 +1593,6 @@ def test_alias_stream_compacts_state_inline(spark, tmp_path):
     import json as _json
     import os as _os
 
-    from ballcone_spark.streaming import dedup_stream as ds
     from ballcone_spark.streaming.alias_stream import (
         read_alias_map,
         start_chunk_alias_stream,
@@ -1557,7 +1631,7 @@ def test_alias_stream_compacts_state_inline(spark, tmp_path):
     assert folded == plain
     assert len(folded) == 5
     for d in fdirs:
-        assert ds._read_manifest(d)["fold_dir"] is not None, d
+        assert state.read_manifest(spark, d)["fold_dir"] is not None, d
         live = [e.name for e in _os.scandir(d)
                 if e.name.startswith("batch_id=")]
         assert len(live) <= 2, (d, live)
@@ -1607,7 +1681,6 @@ def test_compact_alias_state_crash_recovery(
     import shutil as _shutil
 
     from ballcone_spark.streaming import alias_stream as als
-    from ballcone_spark.streaming import dedup_stream as ds
 
     dirs = [str(tmp_path / d) for d in ("chunks", "grams", "alias")]
     batches = _alias_kill_batches()
@@ -1624,10 +1697,10 @@ def test_compact_alias_state_crash_recovery(
         alias = sorted(map(tuple, als.read_alias_map(spark, dirs[2]).collect()))
         chunks = sorted(
             r["chunk_fp"]
-            for r in ds.read_index(spark, dirs[0])
+            for r in state.read(spark, dirs[0])
             .select("chunk_fp").distinct().collect()
         )
-        grams = ds.read_index(spark, dirs[1]).count()
+        grams = state.read(spark, dirs[1]).count()
         return alias, chunks, grams
 
     clean = snapshot()
@@ -1644,43 +1717,46 @@ def test_compact_alias_state_crash_recovery(
                 raise Boom()
             real_rename(src, dst)
 
-        monkeypatch.setattr(ds.os, "rename", rename_hook)
+        monkeypatch.setattr(state.os, "rename", rename_hook)
         with pytest.raises(Boom):
-            als.compact_alias_state(
-                spark, dirs[2], every=3, latest_wins_key="chunk_fp"
+            state.fold(
+                spark, dirs[2], every=3, sort_col=None,
+                latest_wins_key="chunk_fp",
             )
         monkeypatch.undo()
         assert _os.path.isdir(_os.path.join(dirs[2], ".fold-2.tmp"))
     elif crash_at == "before_manifest_swap":
-        def manifest_hook(index_dir_, manifest):
+        def manifest_hook(spark_, index_dir_, manifest):
             raise Boom()
 
-        monkeypatch.setattr(ds, "_write_manifest", manifest_hook)
+        monkeypatch.setattr(state, "write_manifest", manifest_hook)
         with pytest.raises(Boom):
-            als.compact_alias_state(
-                spark, dirs[2], every=3, latest_wins_key="chunk_fp"
+            state.fold(
+                spark, dirs[2], every=3, sort_col=None,
+                latest_wins_key="chunk_fp",
             )
         monkeypatch.undo()
         # fold dir in place but unreferenced — discarded on recovery
         assert _os.path.isdir(_os.path.join(dirs[2], "fold-2"))
     elif crash_at == "mid_garbage_sweep":
-        assert als.compact_alias_state(
-            spark, dirs[2], every=3, latest_wins_key="chunk_fp"
+        assert state.fold(
+            spark, dirs[2], every=3, sort_col=None, latest_wins_key="chunk_fp"
         )
         real_rmtree = _shutil.rmtree
-        state = {"n": 0}
+        seen = {"n": 0}
 
         def rmtree_hook(p, **kw):
             if _os.path.basename(p).startswith("batch_id="):
-                state["n"] += 1
-                if state["n"] == 2:
+                seen["n"] += 1
+                if seen["n"] == 2:
                     raise Boom()
             real_rmtree(p, **kw)
 
-        monkeypatch.setattr(ds.shutil, "rmtree", rmtree_hook)
+        monkeypatch.setattr(state.shutil, "rmtree", rmtree_hook)
         with pytest.raises(Boom):
-            als.compact_alias_state(
-                spark, dirs[2], every=999, latest_wins_key="chunk_fp"
+            state.fold(
+                spark, dirs[2], every=999, sort_col=None,
+                latest_wins_key="chunk_fp",
             )
         monkeypatch.undo()
     elif crash_at == "partial_batch_overwrite":
@@ -1696,19 +1772,19 @@ def test_compact_alias_state_crash_recovery(
     # (sweep runs first); alias folds latest-wins like production
     spark.catalog.clearCache()
     for d in dirs[:2]:
-        als.compact_alias_state(spark, d, every=3)
-    als.compact_alias_state(
-        spark, dirs[2], every=3, latest_wins_key="chunk_fp"
+        state.fold(spark, d, every=3, sort_col=None)
+    state.fold(
+        spark, dirs[2], every=3, sort_col=None, latest_wins_key="chunk_fp"
     )
     assert snapshot() == clean, crash_at
     # one more no-fold pass: sweeps the garbage the recovery fold
     # retired (deleted at the START of the next run, by contract)
-    als.compact_alias_state(
-        spark, dirs[2], every=999, latest_wins_key="chunk_fp"
+    state.fold(
+        spark, dirs[2], every=999, sort_col=None, latest_wins_key="chunk_fp"
     )
     assert snapshot() == clean, crash_at
 
-    m = ds._read_manifest(dirs[2])
+    m = state.read_manifest(spark, dirs[2])
     assert m["garbage"] == []
     strays = [
         e.name
@@ -1952,17 +2028,17 @@ def test_compact_index_fold_cadence_defers_sweep(spark, tmp_path):
 
     index_dir = str(tmp_path / "index")
     _index_batches(spark, index_dir, 3)
-    assert ds.compact_index(spark, index_dir, every=3, sweep_when="fold")
-    m = ds._read_manifest(index_dir)
+    assert state.fold(spark, index_dir, every=3, sweep_when="fold")
+    m = state.read_manifest(spark, index_dir)
     assert sorted(m["garbage"]) == ["batch_id=0", "batch_id=1"]
 
     # no-fold calls (one per trigger in production) must NOT sweep
     for _ in range(3):
-        assert not ds.compact_index(
+        assert not state.fold(
             spark, index_dir, every=999, sweep_when="fold"
         )
     assert _os.path.isdir(_os.path.join(index_dir, "batch_id=0"))
-    assert sorted(ds._read_manifest(index_dir)["garbage"]) == [
+    assert sorted(state.read_manifest(spark, index_dir)["garbage"]) == [
         "batch_id=0", "batch_id=1",
     ]
 
@@ -1972,20 +2048,20 @@ def test_compact_index_fold_cadence_defers_sweep(spark, tmp_path):
             [(b * 10 + i, f"{BASE} b{b} i{i}") for i in range(3)],
             "doc_id long, text string",
         )
-        ds._overwrite_batch_partition(
+        state.write_batch(
             ds._bands(ds.batch_signatures(docs)), index_dir, b
         )
-    assert ds.compact_index(spark, index_dir, every=3, sweep_when="fold")
+    assert state.fold(spark, index_dir, every=3, sweep_when="fold")
     assert not _os.path.isdir(_os.path.join(index_dir, "batch_id=0"))
     assert not _os.path.isdir(_os.path.join(index_dir, "batch_id=1"))
     # the old fold + newly absorbed dirs are this fold's garbage now
-    m = ds._read_manifest(index_dir)
+    m = state.read_manifest(spark, index_dir)
     assert m["fold_dir"] == "fold-3"
     assert sorted(m["garbage"]) == ["batch_id=2", "batch_id=3", "fold-1"]
     # and the default cadence still sweeps on a no-fold call (the
     # interval-spaced manual-compaction contract, unchanged)
-    assert not ds.compact_index(spark, index_dir, every=999)
-    assert ds._read_manifest(index_dir)["garbage"] == []
+    assert not state.fold(spark, index_dir, every=999)
+    assert state.read_manifest(spark, index_dir)["garbage"] == []
 
 
 def test_semantic_index_topk_serves_the_stream_state(spark, tmp_path):
@@ -2110,7 +2186,6 @@ def test_resident_index_cache_serves_fresh(spark, tmp_path, monkeypatch):
 
     import pandas as pd
 
-    from ballcone_spark.streaming.dedup_stream import compact_index
     from ballcone_spark.streaming.semantic_stream import (
         ResidentIndexCache,
         semantic_index_topk,
@@ -2163,7 +2238,7 @@ def test_resident_index_cache_serves_fresh(spark, tmp_path, monkeypatch):
 
     # a fold rewrites the snapshot -> key changes, content identical
     before = serve(True)
-    assert compact_index(spark, idx, every=2, sort_col="cluster_id")
+    assert state.fold(spark, idx, every=2, sort_col="cluster_id")
     assert serve(True) == before == serve(False)
 
     # invalidate() with UNCHANGED state re-reads and re-caches a fresh
@@ -2232,7 +2307,6 @@ def test_resident_index_cache_single_flights_key_check(
     import threading
     import time as _time
 
-    from ballcone_spark.streaming import semantic_stream as sem
     from ballcone_spark.streaming.semantic_stream import (
         ResidentIndexCache,
     )
@@ -2246,10 +2320,10 @@ def test_resident_index_cache_single_flights_key_check(
 
     calls = []
     release = threading.Event()
-    real = sem._snapshot_names
+    real = state.snapshot
 
     def gated(*a, **k):
-        if not k.get("with_signature"):
+        if not k.get("signature"):
             # the re-read path's own internal listing — not a key check
             return real(*a, **k)
         calls.append(_time.monotonic())
@@ -2260,7 +2334,7 @@ def test_resident_index_cache_single_flights_key_check(
             assert release.wait(timeout=30)
         return real(*a, **k)
 
-    monkeypatch.setattr(sem, "_snapshot_names", gated)
+    monkeypatch.setattr(state, "snapshot", gated)
     cache = ResidentIndexCache(spark, idx)
     results = [None] * 8
     errs = []
@@ -2309,21 +2383,19 @@ def test_dir_signature_vanished_dir_returns_unique_sentinel(spark, tmp_path):
     must yield a process-unique sentinel, not raise — the resident
     cache's key then mismatches ANY cached key and the caller re-reads
     from a fresh snapshot instead of crashing the serving request."""
-    from ballcone_spark.streaming import semantic_stream as sem
-
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(str(tmp_path))
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
     missing = str(tmp_path / "never_existed" / "batch_id=0")
-    s1 = sem._dir_signature(fs, jvm, missing)
-    s2 = sem._dir_signature(fs, jvm, missing)
+    s1 = state._dir_signature(fs, jvm, missing)
+    s2 = state._dir_signature(fs, jvm, missing)
     assert s1[0] == "__vanished__" and s2[0] == "__vanished__"
     assert s1 != s2  # unique per call: the cache key can never re-match
     # a real dir still yields a plain content signature
     d = tmp_path / "real"
     d.mkdir()
     (d / "part-0.parquet").write_bytes(b"x")
-    s3 = sem._dir_signature(fs, jvm, str(d))
+    s3 = state._dir_signature(fs, jvm, str(d))
     assert s3 and s3[0] != "__vanished__"
 
 
@@ -2617,9 +2689,6 @@ def test_decon_legacy_dir_freezes_unbucketed(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from ballcone_spark.streaming import decon_stream as dcs
-    from ballcone_spark.streaming.dedup_stream import (
-        _overwrite_batch_partition,
-    )
 
     dg, bg, fl = (str(tmp_path / d) for d in ("dg", "bg", "fl"))
     leak = "alpha bravo charlie delta echo foxtrot golf hotel india"
@@ -2631,7 +2700,7 @@ def test_decon_legacy_dir_freezes_unbucketed(spark, tmp_path):
         ),
         8,
     )
-    _overwrite_batch_partition(legacy, dg, 0)
+    state.write_batch(legacy, dg, 0)
     assert dcs._read_geometry(spark, dg) is dcs._GEOM_ABSENT
     # post-upgrade batch asks for 16 buckets — must freeze null instead
     bench = spark.createDataFrame(
@@ -2652,7 +2721,7 @@ def test_decon_legacy_dir_freezes_unbucketed(spark, tmp_path):
         d.startswith("hb=")
         for d in _os.listdir(_os.path.join(dg, "batch_id=2"))
     )
-    hist = dcs._read_state(spark, dg, 99)
+    hist = state.read(spark, dg, before=99)
     assert "hb" not in hist.columns
     # both the retro flag (doc 7, legacy) and forward flag (doc 8) land
     got = {
@@ -2735,43 +2804,41 @@ def test_decon_retro_broadcast_gate(spark, tmp_path, monkeypatch):
 
 
 def test_decon_batch_loop_memoizes_frozen_state(spark, tmp_path, monkeypatch):
-    """r15 (VERDICT r14 #1): the per-stream memos must make the frozen
-    facts one-time costs — geometry is read from disk at most once per
-    stream (not once per batch), and a committed history dir's
+    """r15 (VERDICT r14 #1): the state module's memos must make the
+    frozen facts one-time costs — geometry is read from disk at most
+    once per dir (not once per batch), and a committed history dir's
     _SUCCESS/has-data checks are paid once per dir (not once per
-    trigger). Driven through process_decon_batch with shared caches,
-    counting the underlying helpers; results must equal the uncached
-    run exactly."""
+    trigger). Driven through process_decon_batch, which passes no
+    caches, counting the underlying helpers; results must equal the
+    uncached run exactly."""
     import collections
     import functools
 
     from ballcone_spark.streaming import decon_stream as dcs
-    from ballcone_spark.streaming import semantic_stream as sem
 
     calls = collections.Counter()
 
-    def counted(mod, name):
+    def counted(mod, name, key=None, only=lambda *a: True):
         fn = getattr(mod, name)
 
         @functools.wraps(fn)
         def w(*a, **k):
-            calls[name] += 1
+            if only(*a):
+                calls[key or name] += 1
             return fn(*a, **k)
 
         monkeypatch.setattr(mod, name, w)
 
-    counted(dcs, "_read_geometry")
-    counted(sem, "_fs_dir_has_data")
+    counted(state, "read_json", key="_read_geometry",
+            only=lambda _spark, path: path.endswith(dcs._GEOMETRY))
+    counted(state, "_contents")
 
     dg, bg, fl = (str(tmp_path / d) for d in ("dg", "bg", "fl"))
     leak = "alpha bravo charlie delta echo foxtrot golf hotel india"
-    geometry_cache: dict = {}
-    reader_caches: dict = {}
 
     def batch(i, docs=None, bench=None):
         dcs.process_decon_batch(
             spark, docs, bench, dg, bg, fl, batch_id=i, hash_buckets=4,
-            geometry_cache=geometry_cache, reader_caches=reader_caches,
         )
 
     mk = lambda rows, schema: spark.createDataFrame(rows, schema)
@@ -2781,19 +2848,19 @@ def test_decon_batch_loop_memoizes_frozen_state(spark, tmp_path, monkeypatch):
     batch(1, bench=mk(
         [(100, f"eval {leak} q")], "bench_id long, text string"))
     g0 = calls["_read_geometry"]
-    h0 = calls["_fs_dir_has_data"]
+    h0 = calls["_contents"]
     # two more doc batches against the now-populated histories
     batch(2, docs=mk([(3, f"late {leak} echo")],
                      "doc_id long, text string"))
     batch(3, docs=mk([(4, "clean alpha beta gamma delta words here ok")],
                      "doc_id long, text string"))
-    # geometry: frozen per dir — NEVER re-read once the cache holds it
+    # geometry: frozen per dir — NEVER re-read once the memo holds it
     assert calls["_read_geometry"] == g0
     # committed-dir checks: each dir verified at most once across the
     # whole run — batches 2 and 3 re-read the same histories but may
     # only pay for dirs they had not seen yet (uncached this grows by
     # >= 2 per history re-read, one per live dir)
-    new_dirs = calls["_fs_dir_has_data"] - h0
+    new_dirs = calls["_contents"] - h0
     assert new_dirs <= 4, calls
     assert {r["doc_id"] for r in
             dcs.read_contaminated(spark, fl).collect()} == {2, 3}
@@ -2839,7 +2906,7 @@ def test_decon_backlog_defaults_bounded(spark, tmp_path, monkeypatch):
     ]
     assert len(batch_dirs) >= 3  # 5 files / ≤2 per trigger
     # every backlog doc was still indexed exactly once
-    hist = dcs._read_state(spark, dirs[0], 99)
+    hist = state.read(spark, dirs[0], before=99)
     assert hist.select("doc_id").distinct().count() == 5
 
 
@@ -2895,9 +2962,7 @@ def test_stream_starters_scope_scheduler_pool(spark, tmp_path):
         # the caller's own pool survives the scoped start
         assert sc.getLocalProperty("spark.scheduler.pool") == "caller-pool"
         q.awaitTermination(120)
-        from ballcone_spark.streaming.dedup_stream import read_decisions
-
-        assert read_decisions(spark, str(tmp_path / "dec")).count() == 1
+        assert state.read(spark, str(tmp_path / "dec")).count() == 1
     finally:
         sc.setLocalProperty("spark.scheduler.pool", None)
 
@@ -2949,10 +3014,6 @@ def test_decon_legacy_fold_only_dir_freezes_unbucketed(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from ballcone_spark.streaming import decon_stream as dcs
-    from ballcone_spark.streaming.dedup_stream import (
-        _overwrite_batch_partition,
-        compact_index,
-    )
 
     leak = "alpha bravo charlie delta echo foxtrot golf hotel india"
 
@@ -2964,9 +3025,9 @@ def test_decon_legacy_fold_only_dir_freezes_unbucketed(spark, tmp_path):
             ),
             8,
         )
-        _overwrite_batch_partition(legacy, dg, 0)
-        _overwrite_batch_partition(legacy.limit(0), dg, 1)
-        assert compact_index(spark, dg, every=2, sort_col="h")
+        state.write_batch(legacy, dg, 0)
+        state.write_batch(legacy.limit(0), dg, 1)
+        assert state.fold(spark, dg, every=2, sort_col="h")
         # simulate the swept/hand-pruned state ADVICE r13 #2 describes:
         # only fold-0 + _manifest.json remain
         _shutil.rmtree(_os.path.join(dg, "batch_id=0"))
@@ -3024,7 +3085,6 @@ def test_decon_doc_gram_fold_keeps_bucketing(spark, tmp_path):
     import os as _os
 
     from ballcone_spark.streaming import decon_stream as dcs
-    from ballcone_spark.streaming.dedup_stream import compact_index
 
     dg, bg, fl = (str(tmp_path / d) for d in ("dg", "bg", "fl"))
     for b in range(4):
@@ -3039,9 +3099,9 @@ def test_decon_doc_gram_fold_keeps_bucketing(spark, tmp_path):
         )
     before = sorted(
         (r["doc_id"], r["h"]) for r in
-        dcs._read_state(spark, dg, 99).select("doc_id", "h").collect()
+        state.read(spark, dg, before=99).select("doc_id", "h").collect()
     )
-    assert compact_index(
+    assert state.fold(
         spark, dg, every=2, sort_col="h", partition_col="hb"
     )
     fold_dirs = [d for d in _os.listdir(dg) if d.startswith("fold-")]
@@ -3052,7 +3112,7 @@ def test_decon_doc_gram_fold_keeps_bucketing(spark, tmp_path):
     )
     after = sorted(
         (r["doc_id"], r["h"]) for r in
-        dcs._read_state(spark, dg, 99).select("doc_id", "h").collect()
+        state.read(spark, dg, before=99).select("doc_id", "h").collect()
     )
     assert after == before and len(after) > 0
 

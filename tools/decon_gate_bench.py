@@ -40,6 +40,7 @@ def main() -> None:
 
     from ballcone_spark.session import get_spark
     from ballcone_spark.streaming import decon_stream as dcs
+    from ballcone_spark.streaming import state
 
     spark = get_spark("decon_gate_bench")
     work = tempfile.mkdtemp(prefix="gate_bench_")
@@ -56,7 +57,7 @@ def main() -> None:
     # index the benchmark suite once — its gram history is the forward
     # probe's scan side in every variant
     dcs.process_decon_batch(spark, None, bench, dg, bg, fl, batch_id=0)
-    bench_hist = dcs._read_state(spark, bg, 1).select("h")
+    bench_hist = state.read(spark, bg, before=1).select("h")
     bench_grams = bench_hist.count()
 
     def join_nodes(df):

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from ballcone_spark.session import get_spark  # noqa: E402
 from ballcone_spark.streaming import decon_stream as dcs  # noqa: E402
-from ballcone_spark.streaming.dedup_stream import compact_index  # noqa: E402
+from ballcone_spark.streaming import state  # noqa: E402
 
 
 def _mk_docs(spark, lo: int, hi: int):
@@ -96,10 +96,10 @@ def main() -> None:
                 )
                 written, batch_id = hi, batch_id + 1
             # steady-state shape: history folded into bucket dirs
-            compact_index(
+            state.fold(
                 spark, dg, every=2, sort_col="h", partition_col="hb"
             )
-            gram_rows = dcs._read_state(spark, dg, batch_id).count()
+            gram_rows = state.read(spark, dg, before=batch_id).count()
 
             def probe(pruned: bool) -> tuple[float, int]:
                 if pruned:
@@ -108,7 +108,7 @@ def main() -> None:
                     )
                     nb = hist.select("hb").distinct().count()
                 else:
-                    hist = dcs._read_state(spark, dg, batch_id)
+                    hist = state.read(spark, dg, before=batch_id)
                     nb = args.buckets
                 runs = []
                 for _ in range(3):

@@ -1,7 +1,7 @@
 """Measure semantic_index_topk at corpus scale (§6ak addendum).
 
 Builds a synthetic routed index the stream's shape (batch_id= dirs,
-folded + cluster_id-sorted through the shipped compact_index), then
+folded + cluster_id-sorted through the shipped state.fold), then
 serves query batches at several nprobe settings and compares wall +
 result equality against an in-driver numpy brute force.
 
@@ -45,7 +45,7 @@ def main() -> None:
     import pandas as pd
 
     from ballcone_spark.session import get_spark
-    from ballcone_spark.streaming.dedup_stream import compact_index
+    from ballcone_spark.streaming import state
     from ballcone_spark.streaming.semantic_stream import (
         semantic_index_topk,
     )
@@ -113,7 +113,7 @@ def main() -> None:
         )
     build_s = round(time.monotonic() - t0, 2)
     t0 = time.monotonic()
-    compact_index(spark, idx, every=2, sort_col="cluster_id")
+    state.fold(spark, idx, every=2, sort_col="cluster_id")
     fold_s = round(time.monotonic() - t0, 2)
 
     # queries resemble corpus vectors (perturbed members — the real

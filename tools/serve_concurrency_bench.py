@@ -83,7 +83,7 @@ def main() -> None:
     import pandas as pd
 
     from ballcone_spark.session import get_spark
-    from ballcone_spark.streaming.dedup_stream import compact_index
+    from ballcone_spark.streaming import state
     from ballcone_spark.streaming.semantic_stream import (
         ResidentIndexCache,
         semantic_index_topk,
@@ -112,7 +112,7 @@ def main() -> None:
         spark.createDataFrame(pdf).write.mode("overwrite").parquet(
             os.path.join(idx, f"batch_id={b}")
         )
-    compact_index(spark, idx, every=2, sort_col="cluster_id")
+    state.fold(spark, idx, every=2, sort_col="cluster_id")
     cache = (
         ResidentIndexCache(
             spark, idx, min_check_interval_s=args.cache_interval

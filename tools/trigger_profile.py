@@ -11,11 +11,12 @@ and one semantic stream driven exactly like the cohab bench's loads:
   micro-batch — every driver-blocking action (count/take/collect/write)
   is one or more jobs, and each costs a scheduling round-trip that
   serializes with every co-resident stream on the one driver.
-- **FS-helper calls/trigger**: call counts of the state layer's
-  FS-touching helpers (``_read_geometry`` / ``_ensure_geometry`` /
-  ``_snapshot_names`` / ``_read_manifest_fs`` / ``_fs_dir_has_data`` /
-  ``_dir_signature``), instrumented by wrapping the module attributes —
-  each call is one-to-several py4j round-trips.
+- **FS-helper calls/trigger**: call counts of the FS-touching helpers
+  of ``streaming/state.py`` (``snapshot`` / ``read_manifest`` /
+  ``_contents`` / ``_dir_signature`` / ``read_json`` / ``fold``) and
+  of the decon geometry (``_read_geometry`` / ``_ensure_geometry``),
+  instrumented by wrapping the module attributes — each call is
+  one-to-several py4j round-trips.
 
 One arm per invocation (fresh JVM per variant — the §6x A/B protocol):
 
@@ -39,6 +40,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HELPER_COUNTS: collections.Counter = collections.Counter()
+
+
+#: the state layer's FS-touching helpers
+STATE_HELPERS = [
+    "snapshot", "read_manifest", "_contents", "_dir_signature",
+    "read_json", "fold",
+]
 
 
 def _instrument(mod, names):
@@ -79,16 +87,10 @@ def profile_decon(spark, sf_dir, waves, bench_after):
     from pyspark.sql import functions as F
 
     from ballcone_spark.streaming import decon_stream as dcs
-    from ballcone_spark.streaming import dedup_stream as dds
-    from ballcone_spark.streaming import semantic_stream as sem
+    from ballcone_spark.streaming import state
 
     _instrument(dcs, ["_read_geometry", "_ensure_geometry"])
-    _instrument(
-        sem,
-        ["_snapshot_names", "_read_manifest_fs", "_fs_dir_has_data",
-         "_dir_signature"],
-    )
-    _instrument(dds, ["compact_index"])
+    _instrument(state, STATE_HELPERS)
 
     store = spark.sparkContext._jsc.sc().statusStore()
     work = tempfile.mkdtemp(prefix="trig_prof_decon_")
@@ -164,15 +166,10 @@ def profile_decon(spark, sf_dir, waves, bench_after):
 def profile_semantic(spark, waves, rows_per_wave):
     import math
 
-    from ballcone_spark.streaming import dedup_stream as dds
     from ballcone_spark.streaming import semantic_stream as sem
+    from ballcone_spark.streaming import state
 
-    _instrument(
-        sem,
-        ["_snapshot_names", "_read_manifest_fs", "_fs_dir_has_data",
-         "_dir_signature"],
-    )
-    _instrument(dds, ["compact_index"])
+    _instrument(state, STATE_HELPERS)
 
     dim, cells = 16, 4
 
