@@ -59,18 +59,21 @@ class Ballcone:
         the Spark-first form and also what scales (SURVEY.md §2.3 A1)."""
         if day is None:
             day = datetime.datetime.now(datetime.timezone.utc).date()
+        # one service snapshot, taken before the aggregate's listing
+        services = self.dao.tables()
         rows = (
             self.dao._fact()
             .where(F.col("date") == F.lit(day))
             .groupBy("service")
             .agg(F.count_distinct("ip").alias("unique"))
-            .orderBy(F.col("unique").desc(), "service")
+            .coalesce(1)
+            .sortWithinPartitions(F.col("unique").desc(), "service")
             .collect()
         )
         present = {r["service"]: r["unique"] for r in rows}
         # services with no traffic today still appear with 0 (the
         # reference iterates all tables)
-        out = [{"service": s, "unique": present.get(s, 0)} for s in self.dao.tables()]
+        out = [{"service": s, "unique": present.get(s, 0)} for s in services]
         out.sort(key=lambda d: (-d["unique"], d["service"]))
         return out
 
@@ -89,7 +92,8 @@ class Ballcone:
                 F.count("*").alias("visits"),
                 F.count_distinct("ip").alias("unique"),
             )
-            .orderBy("date")
+            .coalesce(1)
+            .sortWithinPartitions("date")
             .collect()
         )
         return {

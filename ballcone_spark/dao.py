@@ -39,6 +39,24 @@ Scale notes (the design target is a 1000-executor cluster over ~100 TB):
 - The per-day top-N (Q5 with limit) is the classic window row_number
   pattern; Spark ≥3.5 rewrites it to ``WindowGroupLimit`` which pushes the
   limit below the shuffle (each map task keeps only N rows per date).
+
+Read path: every read starts from :meth:`SparkDAO._fact`, one parquet
+relation per listing generation of ``data/``, memoized as
+``access_log`` in the build cache (``plans/stages.py``). A call re-walks
+``data/`` for each file's (relpath, size, mtime_ns) and reuses the
+relation, with Spark's file listing and inferred partitions, unless a
+file landed, vanished or was rewritten; the walk runs before a miss
+lists, so a hit never serves a listing older than the request. The SQL
+console binds ``access_log`` to that relation and each per-service view
+to ``access_log`` by name, so registering views lists the warehouse at
+most once. The per-day aggregates (and the app layer's dashboard and
+overview) return at most days × groups rows and are always collected,
+so their final sort runs in one partition (``coalesce(1)`` +
+``sortWithinPartitions``, same keys and NULL order) instead of a
+range-partitioned ``orderBy``, which costs a sampling job and a
+shuffle. :meth:`SparkDAO.select_df` has no such bound (a whole service
+without a limit) and keeps ``orderBy``: with a limit it plans
+``TakeOrderedAndProject``, without one the sort stays distributed.
 """
 
 from __future__ import annotations
@@ -55,6 +73,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException, ParseException
 
+from ballcone_spark.plans import stages
 from ballcone_spark.results import Average, AverageResult, Count, CountResult
 from ballcone_spark.schema import ENTRY_SCHEMA, FACT_SCHEMA, VALID_SERVICE_RE
 
@@ -273,13 +292,22 @@ class SparkDAO:
     # ------------------------------------------------------------------ #
 
     def _fact(self) -> DataFrame:
-        """The unified fact table with a ``date`` partition column."""
-        if not os.path.isdir(self._data_dir) or not any(
-            d.startswith("service=") for d in os.listdir(self._data_dir)
-        ):
-            empty = self.spark.createDataFrame([], schema=FACT_SCHEMA)
-            return empty.withColumn("date", F.to_date("datetime"))
-        return self.spark.read.schema(_FACT_READ_SCHEMA).parquet(self._data_dir)
+        """The unified fact table with a ``date`` partition column: one
+        relation per listing generation of ``data/``, memoized in the
+        build cache (see the module docstring's read path)."""
+
+        def build() -> DataFrame:
+            stages.source(self._data_dir)  # before the listing below
+            if not os.path.isdir(self._data_dir) or not any(
+                d.startswith("service=") for d in os.listdir(self._data_dir)
+            ):
+                empty = self.spark.createDataFrame([], schema=FACT_SCHEMA)
+                return empty.withColumn("date", F.to_date("datetime"))
+            return self.spark.read.schema(_FACT_READ_SCHEMA).parquet(
+                self._data_dir
+            )
+
+        return stages.memo(self.spark, self._data_dir, "access_log", build)
 
     def table(self, service: str) -> DataFrame:
         """One service's entries, Entry-shaped."""
@@ -354,7 +382,8 @@ class SparkDAO:
                 F.coalesce(F.sum(field).cast("double"), F.lit(0.0)).alias("sum"),
                 F.count(field).alias("count"),
             )
-            .orderBy("date")
+            .coalesce(1)
+            .sortWithinPartitions("date")
         )
 
     def select_average(self, service, field, start=None, stop=None) -> AverageResult:
@@ -384,7 +413,7 @@ class SparkDAO:
         agg = (
             F.count_distinct(F.col(field)) if field is not None else F.count("date")
         ).alias("count")
-        return df.groupBy("date").agg(agg).orderBy("date")
+        return df.groupBy("date").agg(agg).coalesce(1).sortWithinPartitions("date")
 
     def select_count(self, service, field=None, start=None, stop=None) -> CountResult:
         rows = self.select_count_df(service, field, start, stop).collect()
@@ -443,7 +472,9 @@ class SparkDAO:
                 .where(F.col("row_number") <= limit)
                 .drop("row_number")
             )
-        return grouped.orderBy(F.col("date").asc(), count_order, group_order)
+        return grouped.coalesce(1).sortWithinPartitions(
+            F.col("date").asc(), count_order, group_order
+        )
 
     def select_count_group(
         self,
@@ -519,8 +550,12 @@ class SparkDAO:
         Per-service views too: the reference's console addresses each
         service as a physical table (``SELECT * FROM mysite`` — tables
         created at reference syslog_protocol.py:61-65), so every known
-        service gets an Entry-shaped view over its partition. Service
-        names are pre-validated ``\\A[\\w]+\\Z`` — safe as identifiers.
+        service gets an Entry-shaped view over its partition: SQL text
+        over ``access_log``, which Spark resolves by name when a query
+        reads it, so registering one lists nothing. Service names are
+        pre-validated ``\\A[\\w]+\\Z`` — safe as identifiers and as
+        string literals. Views and ``sqlite_master`` come from one
+        :meth:`tables` snapshot, so every listed service has its view.
 
         Namespace guard (ADVICE r2): temp views share one global
         namespace with the analytics dataset views (``events``,
@@ -545,9 +580,11 @@ class SparkDAO:
             "pragma_database_size",
         }
         app_id = self.spark.sparkContext.applicationId
+        services = self.tables()  # before the relation's listing
         self._fact().createOrReplaceTempView("access_log")
         _VIEWS_REGISTERED.pop((app_id, "access_log"), None)
-        for service in self.tables():
+        cols = ", ".join(f"`{c}`" for c in _ENTRY_COLS)
+        for service in services:
             if service in reserved:
                 continue  # console reaches it via `access_log WHERE service=...`
             if service.startswith("bkt_") or self._is_persistent_table(
@@ -562,11 +599,12 @@ class SparkDAO:
                 # shadowed (temp views don't block: this method's own
                 # prior registrations must stay re-registerable).
                 continue
-            self.table(service).select(*_ENTRY_COLS).createOrReplaceTempView(
-                service
+            self.spark.sql(
+                f"CREATE OR REPLACE TEMP VIEW `{service}` AS SELECT {cols}"
+                f" FROM access_log WHERE service = '{service}'"
             )
             _VIEWS_REGISTERED.pop((app_id, service), None)
-        master = [(name, "table") for name in self.tables()]
+        master = [(name, "table") for name in services]
         self.spark.createDataFrame(
             master, schema="name string, type string"
         ).createOrReplaceTempView("sqlite_master")

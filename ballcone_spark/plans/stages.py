@@ -1,6 +1,15 @@
 """The build cache: one memo for prepared plans, table frames, shared
-stage frames and layout copies, and the one place that decides when a
-built thing is stale and what it pins.
+stage frames, layout copies and the DAO's warehouse relation, and the
+one place that decides when a built thing is stale and what it pins.
+
+**Entries:** a registered query's plan (``queries._plan_cached``), a
+testdata table's frame (``load_table``), the alias trio's chunk-cluster
+stage, the bucketed/sorted layout copies (``plans/bucketing.py``), and
+``access_log``, the parquet relation ``SparkDAO._fact`` reads over a
+warehouse's ``data/`` dir. The relation holds Spark's file listing and
+inferred partitions, so a dashboard read on an unchanged warehouse
+pays only the fingerprint walk; any file landing, vanishing or being
+rewritten under ``data/`` makes the next read list again.
 
 **Key:** ``(applicationId, sf_dir, name)``. A DataFrame is an immutable
 plan description that memoizes its own analysis, so returning the same
@@ -12,8 +21,9 @@ collected query vectors).
 
 **Staleness:** a build runs in a thread-local scope that records each
 source table it reads — through ``load_table``, ``_register_views``,
-the layout copies, or a nested memo hit, whose sources the outer build
-inherits — with the table's :func:`fingerprint` at read time. Every
+the layout copies, ``SparkDAO._fact`` (the ``data/`` dir itself), or a
+nested memo hit, whose sources the outer build inherits — with the
+table's :func:`fingerprint` taken before the build lists it. Every
 call re-fingerprints exactly those tables, and any change rebuilds.
 Builds that cannot be keyed on their sources register with
 ``cacheable=False`` and rebuild on every call.
@@ -71,15 +81,17 @@ def _scopes() -> list[_Build]:
     return _LOCAL.stack
 
 
-def fingerprint(sf_dir: str, tables: tuple[str, ...]) -> tuple:
+def fingerprint(sf_dir: str, tables: tuple[str | None, ...]) -> tuple:
     """Identity of each table's current generation. A single-file table
     is its size + mtime_ns; a directory-style table is the sorted
     per-file (relpath, size, mtime_ns) listing, because the directory
     entry's own stat does not change when a part file is rewritten in
-    place."""
+    place. A table is ``sf_dir/<table>.parquet``; ``None`` names
+    ``sf_dir`` itself (the DAO's warehouse ``data/`` dir)."""
     out = []
     for t in tables:
-        path = os.path.join(sf_dir, f"{t}.parquet")
+        path = sf_dir if t is None else os.path.join(sf_dir, f"{t}.parquet")
+        label = os.path.basename(path) if t is None else t
         try:
             st = os.stat(path)
             if os.path.isdir(path):
@@ -92,17 +104,20 @@ def fingerprint(sf_dir: str, tables: tuple[str, ...]) -> tuple:
                             f"{os.path.relpath(fp, path)}:"
                             f"{fst.st_size}:{fst.st_mtime_ns}"
                         )
-                out.append(f"{t}:dir:" + ",".join(sorted(parts)))
+                out.append(f"{label}:dir:" + ",".join(sorted(parts)))
             else:
-                out.append(f"{t}:{st.st_size}:{st.st_mtime_ns}")
+                out.append(f"{label}:{st.st_size}:{st.st_mtime_ns}")
         except OSError:
-            out.append(f"{t}:missing")
+            out.append(f"{label}:missing")
     return tuple(out)
 
 
-def source(sf_dir: str, table: str) -> str:
-    """Fingerprint ``table`` and record it as a source of the build
-    running on this thread, if any."""
+def source(sf_dir: str, table: str | None = None) -> str:
+    """Fingerprint ``table`` (``sf_dir`` itself when None) and record it
+    as a source of the build running on this thread, if any. Call it
+    before the build lists or reads the files: a file that lands in
+    between then makes the next call miss, never a hit on an older
+    listing."""
     fp = fingerprint(sf_dir, (table,))[0]
     if _scopes():
         _scopes()[-1].sources.setdefault((sf_dir, table), fp)

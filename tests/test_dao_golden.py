@@ -133,6 +133,46 @@ def test_select_count_group_distinct(seeded_dao):
     ]
 
 
+@pytest.mark.parametrize("ascending", [True, False])
+def test_select_count_group_null_group_order_matches_duckdb(dao, ascending):
+    """A NULL group sorts after every tied group in both directions,
+    as DuckDB's NULLS LAST orders the reference's result."""
+    import glob
+    import os
+
+    import duckdb
+
+    day1 = [None, None, "Firefox", "Firefox", "Chrome"]
+    day2 = [None, "Safari", "Edge", "Edge", "Edge"]
+    entries = [
+        dict(
+            GOLDEN_ENTRIES[0],
+            datetime=datetime.datetime.combine(d, datetime.time(i)),
+            browser_name=b,
+        )
+        for d, names in ((DAY1, day1), (DAY2, day2))
+        for i, b in enumerate(names)
+    ]
+    dao.batch_insert_into("test", entries)
+    result = dao.select_count_group(
+        "test", field="ip", group="browser_name", ascending=ascending
+    )
+    files = glob.glob(os.path.join(dao._data_dir, "service=test", "*", "*.parquet"))
+    rel = duckdb.read_parquet(files)
+    order = "ASC" if ascending else "DESC"
+    expected = duckdb.sql(
+        "SELECT CAST(datetime AS DATE) AS date, browser_name AS grp,"
+        " count(ip) AS count FROM rel GROUP BY ALL"
+        f" ORDER BY date, count {order}, grp NULLS LAST"
+    ).fetchall()
+    got = [(e.date, e.group, e.count) for e in result.elements]
+    assert got == expected
+    # each day's tie puts the named group first in both directions
+    assert [g for d, g, c in got if (d, c) in ((DAY1, 2), (DAY2, 1))] == [
+        "Firefox", None, "Safari", None
+    ]
+
+
 def test_sql_console(seeded_dao):
     # reference test_dao.py:288-290 (error path) + Q6 passthrough
     seeded_dao.register_views()

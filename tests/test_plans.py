@@ -18,7 +18,7 @@ from ballcone_spark.plans.explain import (
     uses_python,
 )
 from ballcone_spark.queries import load_table
-from tests.conftest import GOLDEN_ENTRIES
+from tests.conftest import DAY1, DAY2, GOLDEN_ENTRIES
 
 SF = "/root/testdata/sf0.01"
 
@@ -173,6 +173,35 @@ def test_warehouse_date_filter_prunes_partitions(seeded_dao):
 
     df = seeded_dao.select_count_df("test", start=datetime.date(2020, 1, 2))
     assert has_partition_filters(df, "date")
+
+
+def test_bounded_dao_reads_sort_without_range_partitioning(seeded_dao, monkeypatch):
+    """The per-day aggregates return at most days × groups rows, so their
+    final sort runs in one partition: no range-partition exchange and no
+    sampling job for it. ``select_df`` has no such bound and keeps the
+    global sort, which a limit turns into TakeOrderedAndProject."""
+    from ballcone_spark.app import Ballcone
+
+    collected = []
+    cls = type(seeded_dao.select_count_df("test"))
+    collect = cls.collect
+
+    def spy(df):
+        collected.append(df)
+        return collect(df)
+
+    monkeypatch.setattr(cls, "collect", spy)
+    app = Ballcone(seeded_dao)
+    seeded_dao.select_count("test", field="ip")
+    seeded_dao.select_average("test", "generation_time")
+    seeded_dao.select_count_group("test", "ip", "path")
+    seeded_dao.select_count_group("test", "ip", "path", ascending=False, limit=1)
+    app.dashboard(DAY1)
+    app.overview("test", stop=DAY2)
+    assert len(collected) == 6
+    for df in collected:
+        assert "rangepartitioning" not in plan_str(df).lower()
+    assert "TakeOrderedAndProject" in plan_str(seeded_dao.select_df("test", limit=2))
 
 
 def test_events_filter_pushed_to_scan(spark):

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Isolated per-query timing for the r16 optimization round.
+"""Isolated per-query timing for an optimization round.
 
 Times each named query with the noop sink (guide §1.4 — computes every
 column, discards the result, no collect/driver transfer in the timing)
@@ -7,7 +7,7 @@ and labeled jobs. First run is cold (plan build + any checkpoint
 materialization); steady is the median of 3 further runs through the
 registered plan cache — the same cold/steady split bench.py reports.
 
-Usage: python tools/op_bench_r16.py <query> [query ...]
+Usage: python tools/op_bench.py <query> [query ...]
 Prints one JSON line: {"sf_dir": ..., "loadavg": ..., "queries":
 {name: {"cold": s, "steady": s, "samples": [...]}}}
 """
@@ -32,7 +32,7 @@ STEADY_RUNS = 3
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="op_bench_r16")
+    spark = get_spark(app_name="op_bench")
     queries = dict(entry_mod.queries())
     for name, spec in EXTRA_QUERIES.items():
         queries.setdefault(name, spec.fn)
@@ -41,7 +41,7 @@ def main() -> None:
     queries["events_daily_visits"](spark, sf_dir).collect()
 
     def run_noop(name: str) -> float:
-        spark.sparkContext.setJobDescription(f"r16 op_bench: {name}")
+        spark.sparkContext.setJobDescription(f"op_bench: {name}")
         t0 = time.perf_counter()
         (
             queries[name](spark, sf_dir)
