@@ -22,12 +22,10 @@ from ballcone_spark.queries import QUERIES, flagship  # noqa: E402
 
 # importing the operator modules registers their queries
 import ballcone_spark.operators.dedup  # noqa: E402,F401
-import ballcone_spark.operators.bpe  # noqa: E402,F401
 import ballcone_spark.operators.corpus_diff  # noqa: E402,F401
 import ballcone_spark.operators.corpus_report  # noqa: E402,F401
 import ballcone_spark.operators.diagnostics  # noqa: E402,F401
 import ballcone_spark.operators.embedding_dedup  # noqa: E402,F401
-import ballcone_spark.operators.kmeans  # noqa: E402,F401
 import ballcone_spark.operators.lm_quality  # noqa: E402,F401
 import ballcone_spark.operators.packing  # noqa: E402,F401
 import ballcone_spark.operators.quality_classifier  # noqa: E402,F401

@@ -28,17 +28,12 @@ a free join — no per-document re-encode pass.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ballcone_spark.plans.barriers import checkpoint
-from ballcone_spark.queries import _query, load_table
 
 __all__ = ["word_freqs", "train_bpe", "bpe_corpus_stats", "encode_docs"]
-
-#: merges trained by the registered query
-N_MERGES = 24
-
 
 def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over whitespace tokens — the one corpus-scale
@@ -215,39 +210,4 @@ def encode_docs(
             ).alias("token_fp"),
         )
         .orderBy("doc_id")
-    )
-
-
-@_query(
-    "docs_bpe_encoded_corpus",
-    None,  # the vocab is learned by iterative argmax training — not
-    # SQL-expressible; pytest pins the FULL per-doc tokenization (count
-    # + md5 of the token stream) against an independent pure-Python
-    # BPE train+apply on the same corpus
-    driver=False,
-)
-def docs_bpe_encoded_corpus(spark, sf_dir):
-    """Corpus tokenized under the corpus-trained BPE vocab: per doc,
-    word count, token count, and the md5 of the exact token stream —
-    the apply half of `docs_bpe_train_merges`."""
-    docs = load_table(spark, sf_dir, "documents")
-    merges, encoded = train_bpe(word_freqs(docs), N_MERGES)
-    return encode_docs(docs, encoded, merges)
-
-
-@_query(
-    "docs_bpe_train_merges",
-    None,  # iterative argmax training — not SQL-expressible; the pytest
-    # cross-checks the full merge list against an independent pure-Python
-    # BPE reference on the same corpus (tests/test_operators.py)
-    driver=False,
-)
-def docs_bpe_train_merges(spark, sf_dir):
-    """BPE merge table learned from the documents corpus: (rank, left,
-    right, merged, pair_freq) for N_MERGES rounds, deterministic under
-    the freq-then-lexicographic tie-break."""
-    docs = load_table(spark, sf_dir, "documents")
-    merges, _ = train_bpe(word_freqs(docs), N_MERGES)
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, merged string, pair_freq bigint"
     )

@@ -436,8 +436,7 @@ def exact_jaccard_on_pairs(
     guarantee rather than a 2⁻⁶⁴ probability."""
     if vectorized:
         # r7: the Arrow set builder (construction-parity documented on
-        # shingle_sets_np); used by the registered vectorized queries —
-        # the pure-JVM twins keep the HOF projection as the cross-check.
+        # shingle_sets_np); the MinHash pair source's verify path.
         # Lineage barrier: both join sides reference this frame, so
         # without it the kernel runs twice (A/B at sf10: verify 26 s →
         # 19.7 s behind the barrier)
@@ -473,7 +472,6 @@ def jaccard_pairs(
     n: int = _NGRAM,
     max_df: int | None = None,
     pair_budget: int | None = None,
-    vectorized: bool = False,
 ) -> DataFrame:
     """Doc pairs sharing ≥1 *rare* word-``n``-gram, with exact Jaccard
     over full distinct shingle sets. Candidate generation is the
@@ -511,14 +509,12 @@ def jaccard_pairs(
     skip both collects, and a data change re-derives the cut, so
     neither can go stale."""
     cand, inj = _rare_shingle_candidates(docs, n, max_df, pair_budget)
-    # vectorized=False by default: an A/B at sf10 showed the jaccard
-    # wall is candidate-generation-bound (238.5 vs 234.3 s — noise), so
-    # the registered query stays Python-free; the Arrow set builder
-    # pays off where verify dominates (minhash 58.7 → 36.2 s, clusters
-    # 67.3 → 41.4 s at sf10)
-    return exact_jaccard_on_pairs(
-        docs, cand, n=n, hashed=inj, vectorized=vectorized
-    )
+    # JVM set builder: an A/B at sf10 showed the jaccard wall is
+    # candidate-generation-bound (238.5 vs 234.3 s — noise), so the
+    # registered query stays Python-free; the Arrow set builder pays off
+    # where verify dominates (minhash 58.7 → 36.2 s, clusters 67.3 →
+    # 41.4 s at sf10)
+    return exact_jaccard_on_pairs(docs, cand, n=n, hashed=inj)
 
 
 def _rare_shingle_candidates(
@@ -744,9 +740,9 @@ def minhash_signatures(
     sets and builds its own).
 
     HOFs evaluate interpreted (CodegenFallback): at sf10 this stage is
-    91 s where the Arrow twin :func:`minhash_signatures_np` is 30 s —
-    the JVM path stays as the cross-check twin and the streaming
-    index's fixed-geometry signer."""
+    91 s where the Arrow kernel :func:`minhash_signatures_np` is 30 s —
+    this JVM path stays as the reference the kernel's parity test
+    (``test_minhash_signatures_np_matches_jvm``) checks against."""
     A, B = _minhash_ab(n_hashes)
     d = docs.withColumn("toks", tokens(F.col("text")))
     d = d.withColumn("sh", shingles_of(F.col("toks"), n=n))
@@ -889,35 +885,20 @@ _MINHASH_LSH_ORACLE = f"""
 
 
 @_query(
-    "dedup_minhash_lsh",
-    _MINHASH_LSH_ORACLE,
-    driver=False,  # demoted r7: the vectorized twin (same oracle
-    # VERBATIM, bit-identical at oracle SFs) is the driver entry; this
-    # pure-JVM path stays the cross-check twin, hash-checked locally
-)
-def dedup_minhash_lsh(spark, sf_dir):
-    """MinHash(16) + LSH(4 bands × 4 rows) candidate generation, verified
-    with exact Jaccard ≥ 0.8. The scale path: signatures are constant
-    size per doc, the band join buckets only near-identical docs, and the
-    expensive exact verify runs on candidates only."""
-    return minhash_lsh_pairs(_docs(spark, sf_dir))
-
-
-@_query(
     "dedup_minhash_lsh_vectorized",
-    _MINHASH_LSH_ORACLE,  # the JVM twin's oracle VERBATIM: at every
-    # oracle-checked SF (≤ _BAND_SCALE_N docs) the adaptive geometry is
-    # the floor 4×4 and the Arrow signatures are bit-identical to the
-    # JVM/DuckDB derivation, so the full candidate→verify pipeline gets
-    # hash verification, not rows-only
+    _MINHASH_LSH_ORACLE,  # at every oracle-checked SF (≤ _BAND_SCALE_N
+    # docs) the adaptive geometry is the floor 4×4 and the Arrow
+    # signatures are bit-identical to the DuckDB derivation, so the full
+    # candidate→verify pipeline gets hash verification, not rows-only
 )
 def dedup_minhash_lsh_vectorized(spark, sf_dir):
-    """MinHash + LSH with the r7 scale path: Arrow signature kernel
-    (bit-identical, 3× the interpreted-HOF twin at sf10) + corpus-
-    adaptive band geometry (`adaptive_band_rows` — fixes the quadratic
-    band-bucket density the sf10 curve exposed: candidates 12.9 M → 2.3 M
-    at 500 k docs). Exact Jaccard ≥ 0.8 verification unchanged."""
-    return minhash_lsh_pairs(_docs(spark, sf_dir), vectorized=True)
+    """MinHash + LSH candidate generation, verified with exact Jaccard
+    ≥ 0.8: Arrow signature kernel (bit-identical to the HOF formulation,
+    3× faster at sf10) + corpus-adaptive band geometry
+    (`adaptive_band_rows` — fixes the quadratic band-bucket density the
+    sf10 curve exposed: candidates 12.9 M → 2.3 M at 500 k docs). The
+    expensive exact verify runs on candidates only."""
+    return minhash_lsh_pairs(_docs(spark, sf_dir))
 
 
 def band_pairs(
@@ -973,51 +954,45 @@ def band_pairs(
     return bucket_pairs(banded, ["band_idx", "band_key"]).distinct()
 
 
-def minhash_lsh_pairs(docs: DataFrame, vectorized: bool = False) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """(a_id, b_id, jaccard) near-dup pairs via MinHash banding + exact
     verification — the pair source shared by the registered LSH query
     and the cluster-resolution pipeline.
 
-    ``vectorized=True`` (the r7 scale path, and the driver-registered
-    query's path) computes signatures with the Arrow kernel
-    (:func:`minhash_signatures_np`, bit-identical, 3× the HOF path at
-    sf10) AND adapts the band geometry to corpus size
-    (:func:`adaptive_band_rows` — the fix for the quadratic band-bucket
-    density the sf10 curve exposed). At-or-below `_BAND_SCALE_N` docs
-    the geometry is the floor 4×4 and output is bit-identical to the
-    JVM twin — every oracle-checked SF is in that zone."""
+    Signatures come from the Arrow kernel (:func:`minhash_signatures_np`,
+    bit-identical to the HOF formulation, 3× faster at sf10) and the
+    band geometry adapts to corpus size (:func:`adaptive_band_rows` —
+    the fix for the quadratic band-bucket density the sf10 curve
+    exposed). At-or-below `_BAND_SCALE_N` docs the geometry is the floor
+    4×4 the DuckDB oracle replays — every oracle-checked SF is in that
+    zone."""
     hashed = False
-    if vectorized:
-        n_docs = docs.count()
-        rows = adaptive_band_rows(n_docs)
-        sig = minhash_signatures_np(docs, n_hashes=N_BANDS * rows)
-        # scale zone: mega-bucket guard (band_pairs docstring / §6ab —
-        # the 13 M-doc probe filled the disk with c² candidate payload
-        # from a handful of non-discriminative buckets). Oracle SFs are
-        # below the floor and keep every bucket.
-        cap = _BAND_BUCKET_CAP if n_docs > _BAND_SCALE_N else None
-        cand = band_pairs(sig, n_bands=N_BANDS, rows=rows, bucket_cap=cap)
-        if n_docs > _BAND_SCALE_N:
-            # Scale zone only (r11, BASELINE §6y): above the band floor
-            # the candidate set is tens of millions of pairs and the
-            # verify joins' payload width IS the cost — license the
-            # 8-byte hashed verify exactly like jaccard_pairs does (one
-            # injectivity aggregation; identical jaccard values by the
-            # injective-mapping argument there, string fallback on a
-            # collision). Driver/oracle SFs stay on the string path,
-            # bit-identical to the JVM twin, zero plan change.
-            hashed = (
-                shingle_rows(docs, n=_NGRAM)
-                .agg(
-                    (
-                        F.countDistinct("s")
-                        == F.countDistinct(F.xxhash64("s"))
-                    ).alias("ok")
-                )
-                .first()["ok"]
+    n_docs = docs.count()
+    rows = adaptive_band_rows(n_docs)
+    sig = minhash_signatures_np(docs, n_hashes=N_BANDS * rows)
+    # scale zone: mega-bucket guard (band_pairs docstring / §6ab — the
+    # 13 M-doc probe filled the disk with c² candidate payload from a
+    # handful of non-discriminative buckets). Oracle SFs are below the
+    # floor and keep every bucket.
+    cap = _BAND_BUCKET_CAP if n_docs > _BAND_SCALE_N else None
+    cand = band_pairs(sig, n_bands=N_BANDS, rows=rows, bucket_cap=cap)
+    if n_docs > _BAND_SCALE_N:
+        # Scale zone only (r11, BASELINE §6y): above the band floor the
+        # candidate set is tens of millions of pairs and the verify
+        # joins' payload width IS the cost — license the 8-byte hashed
+        # verify exactly like jaccard_pairs does (one injectivity
+        # aggregation; identical jaccard values by the injective-mapping
+        # argument there, string fallback on a collision). Driver/oracle
+        # SFs stay on the string path, zero plan change.
+        hashed = (
+            shingle_rows(docs, n=_NGRAM)
+            .agg(
+                (
+                    F.countDistinct("s") == F.countDistinct(F.xxhash64("s"))
+                ).alias("ok")
             )
-    else:
-        cand = band_pairs(minhash_signatures(docs))
+            .first()["ok"]
+        )
     # Exact-verify ONLY the candidate pairs (exact_jaccard_on_pairs: two
     # doc_id equi-joins attaching per-row shingle arrays + array_intersect
     # — never a shingle-keyed shuffle). Verifying all shingle-sharing
@@ -1026,7 +1001,7 @@ def minhash_lsh_pairs(docs: DataFrame, vectorized: bool = False) -> DataFrame:
     # here: forcing the build relation adds two driver collect jobs that
     # AQE's runtime decision avoids.)
     return (
-        exact_jaccard_on_pairs(docs, cand, vectorized=vectorized, hashed=hashed)
+        exact_jaccard_on_pairs(docs, cand, hashed=hashed, vectorized=True)
         .where(F.col("jaccard") >= _JACCARD_THRESHOLD)
         .select("a_id", "b_id", F.round("jaccard", 4).alias("jaccard"))
         .orderBy("a_id", "b_id")
@@ -1070,7 +1045,7 @@ def docs_cross_source_dups(spark, sf_dir):
     joins; the source-pair key is order-normalized (least/greatest) so
     (srcA, srcB) and (srcB, srcA) collapse."""
     docs = _docs(spark, sf_dir)
-    pairs = minhash_lsh_pairs(docs, vectorized=True)  # r7 scale path
+    pairs = minhash_lsh_pairs(docs)
     src = docs.select("doc_id", "source")
     j = pairs.join(
         src.withColumnRenamed("doc_id", "a_id").withColumnRenamed(
@@ -1495,11 +1470,9 @@ def docs_dedup_clusters(spark, sf_dir):
     guarantee — WHICH docs merge into WHICH cluster — is hash-verified
     by an independent engine: any wrong merge or missed merge shifts a
     cluster size or a min-label sum."""
-    # vectorized pair source (r7): identical pairs at oracle SFs (floor
-    # geometry + bit-identical Arrow signatures); the iterative
-    # propagation's eager checkpoints mean the visible plan is an RDD
-    # scan either way
-    pairs = minhash_lsh_pairs(_docs(spark, sf_dir), vectorized=True)
+    # the iterative propagation's eager checkpoints mean the visible
+    # plan is an RDD scan, whatever the pair source
+    pairs = minhash_lsh_pairs(_docs(spark, sf_dir))
     clusters = dedup_clusters(pairs)
     sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("sz"))
     return (
@@ -1611,7 +1584,7 @@ def docs_dedup_keep_best(spark, sf_dir):
     keeps — the row curation acts on — is verified end-to-end by an
     independent engine."""
     docs = _docs(spark, sf_dir)
-    pairs = minhash_lsh_pairs(docs, vectorized=True)
+    pairs = minhash_lsh_pairs(docs)
     clusters = dedup_clusters(pairs)
     scores = docs.where(F.col("text").isNotNull()).select(
         "doc_id",
@@ -1651,9 +1624,9 @@ def curation_keep_best(docs: DataFrame, text_col: str = "text") -> DataFrame:
         & (F.col("n_tok") >= 20)
         & ((F.col("n_uniq") / F.col("n_tok")) >= 0.3)
     )
-    pairs = minhash_lsh_pairs(
-        passing.select("doc_id", "text"), vectorized=True
-    ).select("a_id", "b_id")
+    pairs = minhash_lsh_pairs(passing.select("doc_id", "text")).select(
+        "a_id", "b_id"
+    )
     clusters = dedup_clusters(pairs)
     kb = dedup_keep_best(
         clusters, passing.select("doc_id", F.col("n_uniq").alias("score"))
@@ -1832,7 +1805,7 @@ def split_leakage_audit(docs: DataFrame) -> DataFrame:
     shingle/signature/band/verify pipeline a second time at action
     time (a review pass caught the double execution)."""
     pairs = checkpoint(
-        minhash_lsh_pairs(docs, vectorized=True).select("a_id", "b_id"),
+        minhash_lsh_pairs(docs).select("a_id", "b_id"),
         eager=True,
     )
     clusters = dedup_clusters(pairs)

@@ -506,17 +506,6 @@ def _label_centroids(emb: DataFrame) -> DataFrame:
     )
 
 
-@_query("embeddings_ann_ivf", None, driver=False)  # superseded by _recall
-def embeddings_ann_ivf(spark, sf_dir):
-    """IVF ANN over label-centroid cells for queries vec_id<5. The
-    driver-checked variant is ``embeddings_ann_ivf_recall``, which
-    hash-verifies routing + rerank against a full DuckDB oracle."""
-    emb = _emb(spark, sf_dir)
-    return ivf_ann(
-        emb, emb.where(F.col("vec_id") < _N_QUERIES), _label_centroids(emb), _K
-    )
-
-
 @_query(
     "embeddings_ann_ivf_recall",
     f"""

@@ -18,10 +18,10 @@ Spark-shaped Lloyd's iteration (the same loop MLlib's KMeans runs):
 
 This is an inherently iterative algorithm — each iteration's plan depends
 on the previous iteration's DATA — so it cannot be a single SQL statement
-and is exposed as a rows-only registry entry (the driver's weaker check);
-its semantics are pinned by property tests instead: cells partition the
-corpus, inertia is monotonically non-increasing, empty cells keep their
-previous centroid (the standard Lloyd's convention).
+and has no registry entry; its semantics are pinned by property tests
+instead: cells partition the corpus, inertia is monotonically
+non-increasing, empty cells keep their previous centroid (the standard
+Lloyd's convention).
 
 Scale: per iteration one scan + one O(k·d) shuffle; driver state k·d.
 At 100 TB with k=65k cells and d=1024 the codebook is ~0.5 GB — still
@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 
 from ballcone_spark.operators.similarity import cosine
 from ballcone_spark.plans.barriers import checkpoint
-from ballcone_spark.queries import _query, load_table
 
 __all__ = ["train_ivf_codebook", "assign_cells", "kmeans_inertia"]
 
@@ -135,21 +134,3 @@ def kmeans_inertia(emb: DataFrame, centroids: DataFrame) -> float:
     """Mean cosine similarity of each vector to its assigned centroid —
     the (maximization-form) objective Lloyd's improves each iteration."""
     return assign_cells(emb, centroids).agg(F.avg("_sim")).first()[0]
-
-
-@_query("embeddings_ivf_codebook_trained", None, driver=False)
-def embeddings_ivf_codebook_trained(spark, sf_dir):
-    """Cell-size profile of a trained (k=10, 3-iteration) codebook —
-    rows-only by necessity: the iterative trainer collects data-dependent
-    centroids between iterations, so no single SQL statement expresses
-    it. Property tests in tests/test_operators.py pin the semantics."""
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    book = train_ivf_codebook(spark, emb, k=10, iters=3)
-    return (
-        assign_cells(emb, book)
-        .groupBy("cell_id")
-        .agg(F.count("*").alias("n"), F.round(F.avg("_sim"), 3).alias("avg_sim"))
-        .orderBy("cell_id")
-    )

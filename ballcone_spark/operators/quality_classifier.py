@@ -167,8 +167,8 @@ def quality_classifier_report(
     train the 4-weight model on a deterministic hash sample (GD cost is
     iters × sample passes, and a distillation this small saturates far
     below the corpus size) and still SCORE the full corpus — scoring is
-    the one-pass projection. The registered query keeps 100 so the
-    pytest replica sees the exact training set."""
+    the one-pass projection. The default keeps 100 so the pytest
+    replica sees the exact training set."""
     feats = quality_features(docs)
     train = feats
     if train_sample_pct < 100:
@@ -192,21 +192,6 @@ def quality_classifier_report(
         )
         .orderBy("score_decile")
     )
-
-
-@_query(
-    "docs_quality_classifier_report",
-    None,  # weights come from iterative GD — not SQL-expressible; the
-    # pytest replays the identical descent in numpy from the collected
-    # (X, y) and pins the weights to float tolerance, plus separation
-    # and loss-decrease properties
-    driver=False,
-)
-def docs_quality_classifier_report(spark, sf_dir):
-    """Learned quality filter, end to end: distill the curation gate
-    into a logistic scorer (aggregate-based GD, one bounded collect per
-    round) and report per-decile calibration against the gate label."""
-    return quality_classifier_report(load_table(spark, sf_dir, "documents"))
 
 
 # ------------------------------------------------------------------ #
@@ -361,7 +346,7 @@ def curation_budget_mix(
         )
     )
     pairs = minhash_lsh_pairs(
-        passing.select("doc_id", "text"), vectorized=True
+        passing.select("doc_id", "text")
     ).select("a_id", "b_id")
     clusters = dedup_clusters(pairs)
     kb = dedup_keep_best(

@@ -4,11 +4,7 @@ or by duplicated n-gram spans) re-expressed as token-fraction rules
 over this corpus's whitespace tokens (beyond-reference; the reference
 has no corpus operators).
 
-Two signals per document, both pure JVM-side array algebra — no
-explode-free path exists (the n-gram multiset is inherently one row
-per gram), but the explode is linear in corpus tokens and the groupBy
-keys on (doc_id, gram), so every shuffle partition holds one
-document's grams at most: skew is bounded by the longest single doc.
+Two signals per document:
 
 - ``top_bigram_frac`` — occurrences of the doc's most frequent word
   bigram over all its bigram positions (Gopher's "fraction of
@@ -17,11 +13,13 @@ document's grams at most: skew is bounded by the longest single doc.
   occurs more than once in the doc (Gopher's duplicate-n-gram family
   at n=3).
 
-N-grams come from ``zip_with`` over shifted ``slice``\\s of the token
-array — not ``transform(sequence(...))``, whose ``sequence(0, -1)``
-on a one-token doc silently yields ``[0, -1]`` (descending) instead of
-empty; the slice length is clamped at 0 so degenerate docs produce
-empty gram arrays on both engines.
+Also home of :func:`_ngrams`, the JVM word-n-gram column the LM scorer
+and the drift monitor build on. Its n-grams come from ``zip_with`` over
+shifted ``slice``\\s of the token array — not
+``transform(sequence(...))``, whose ``sequence(0, -1)`` on a one-token
+doc silently yields ``[0, -1]`` (descending) instead of empty; the
+slice length is clamped at 0 so degenerate docs produce empty gram
+arrays.
 """
 
 from __future__ import annotations
@@ -31,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ballcone_spark.queries import _query, load_table
 
-__all__ = ["repetition_flags", "repetition_flags_np"]
+__all__ = ["repetition_flags_np"]
 
 #: flag thresholds — chosen mid-distribution for the test corpus
 #: (p90 of top_bigram_frac ≈ 0.069, p99 of dup_trigram_frac ≈ 0.036)
@@ -51,67 +49,26 @@ def _ngrams(words: Column, n: int) -> Column:
     return grams
 
 
-def repetition_flags(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, top_bigram_frac, dup_trigram_frac, repetitive) — the
-    per-doc repetition profile plus the drop decision."""
-    words = F.split(F.col(text_col), " ")
-    base = docs.select(
-        "doc_id",
-        _ngrams(words, 2).alias("_bg"),
-        _ngrams(words, 3).alias("_tg"),
-    )
-
-    def frac(col: str, top: bool) -> DataFrame:
-        counts = (
-            base.select("doc_id", F.explode(col).alias("g"))
-            .groupBy("doc_id", "g")
-            .agg(F.count("*").alias("c"))
-        )
-        num = (
-            F.max("c")
-            if top
-            else F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0))
-        )
-        name = "top_bigram_frac" if top else "dup_trigram_frac"
-        return counts.groupBy("doc_id").agg(
-            F.round(num.cast("double") / F.sum("c"), 4).alias(name)
-        )
-
-    out = frac("_bg", top=True).join(frac("_tg", top=False), "doc_id")
-    return _flag(out)
-
-
-def _flag(out: DataFrame) -> DataFrame:
-    """Shared finishing select: the drop decision over the two fracs."""
-    return out.select(
-        "doc_id",
-        "top_bigram_frac",
-        "dup_trigram_frac",
-        (
-            (F.col("top_bigram_frac") > TOP_BIGRAM_T)
-            | (F.col("dup_trigram_frac") > DUP_TRIGRAM_T)
-        ).alias("repetitive"),
-    )
-
-
 def repetition_flags_np(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Arrow twin of :func:`repetition_flags` — per-doc gram counting in
-    a ``mapInPandas`` kernel, division + ``round`` left JVM-side.
+    """(doc_id, top_bigram_frac, dup_trigram_frac, repetitive) — the
+    per-doc repetition profile plus the drop decision, from per-doc
+    gram counting in a ``mapInPandas`` kernel with division + ``round``
+    left JVM-side.
 
-    The JVM path pays twice at scale: gram construction is a
+    A JVM formulation pays twice at scale: gram construction is a
     ``zip_with``/``concat_ws`` higher-order chain that evaluates
     interpreted (CodegenFallback, the measured ~6 µs/element class),
-    and the two (doc_id, gram) groupBys shuffle one string row per
-    corpus gram position. But the signal is per-document — no
-    cross-document state — so a shuffle-free per-batch kernel computes
-    the identical integers: ``Counter`` over token-tuple n-grams (zip
-    is C-level; no string concat needed for counting). Emitting raw
-    counts and finishing with the SAME ``F.round(num/den, 4)``
-    expressions keeps the rounding path bit-identical to the JVM twin,
-    so both hash against the one oracle. Docs with < 3 tokens have no
-    trigram positions and drop exactly like the JVM twin's inner join
+    and two (doc_id, gram) groupBys shuffle one string row per corpus
+    gram position. But the signal is per-document — no cross-document
+    state — so a shuffle-free per-batch kernel computes the integers:
+    ``Counter`` over token-tuple n-grams (zip is C-level; no string
+    concat needed for counting). The kernel emits raw counts and the
+    ``F.round(num/den, 4)`` finish runs in the JVM, so no float
+    formatting can diverge from the DuckDB oracle. Docs with < 3 tokens
+    have no trigram positions and drop, like the oracle's inner join
     (``text IS NULL`` likewise yields no gram rows there).
-    Measured at sf10 (500 k docs): 139 s cold JVM → see BASELINE §6d.
+    Measured at sf10 (500 k docs): 139 s cold for the JVM formulation
+    → see BASELINE §6d.
     """
     from collections import Counter
 
@@ -140,16 +97,13 @@ def repetition_flags_np(docs: DataFrame, text_col: str = "text") -> DataFrame:
     counted = widen(docs.select("doc_id", text_col)).mapInPandas(
         count_grams, "doc_id long, top_bg long, bg_n long, dup_tg long, tg_n long"
     )
-    return _flag(
-        counted.select(
-            "doc_id",
-            F.round(F.col("top_bg").cast("double") / F.col("bg_n"), 4).alias(
-                "top_bigram_frac"
-            ),
-            F.round(F.col("dup_tg").cast("double") / F.col("tg_n"), 4).alias(
-                "dup_trigram_frac"
-            ),
-        )
+    top = F.round(F.col("top_bg").cast("double") / F.col("bg_n"), 4)
+    dup = F.round(F.col("dup_tg").cast("double") / F.col("tg_n"), 4)
+    return counted.select(
+        "doc_id",
+        top.alias("top_bigram_frac"),
+        dup.alias("dup_trigram_frac"),
+        ((top > TOP_BIGRAM_T) | (dup > DUP_TRIGRAM_T)).alias("repetitive"),
     )
 
 
@@ -191,28 +145,18 @@ ORDER BY doc_id
 
 
 @_query(
-    "docs_repetition_flags",
-    _REP_ORACLE,
-    driver=False,  # registry capped at 50; oracle-checked locally
-)
-def docs_repetition_flags(spark, sf_dir):
-    """Gopher-style repetition quality gate: per-doc top-bigram and
-    duplicate-trigram token fractions plus the flag decision, checked
-    row-for-row against the oracle's list-comprehension replay."""
-    docs = load_table(spark, sf_dir, "documents")
-    return repetition_flags(docs).orderBy("doc_id")
-
-
-@_query(
     "docs_repetition_flags_vectorized",
-    _REP_ORACLE,  # the SAME oracle as the JVM twin — the kernel emits
-    # raw integer counts and the round(num/den, 4) finish is the same
-    # JVM expression, so no cross-engine float divergence is possible
+    _REP_ORACLE,  # the kernel emits raw integer counts and the
+    # round(num/den, 4) finish is a JVM expression, so no cross-engine
+    # float divergence is possible
     # promoted to driver r8 (VERDICT r7 #4): Gopher-rule repetition
     # filters, 12.1 s at sf10; slot freed by demoting the tpch_q11 echo
 )
 def docs_repetition_flags_vectorized(spark, sf_dir):
-    """Arrow twin of `docs_repetition_flags`: shuffle-free per-batch
-    gram counting, hash-checked against the identical DuckDB oracle."""
+    """Gopher-style repetition quality gate: per-doc top-bigram and
+    duplicate-trigram token fractions plus the flag decision
+    (:func:`repetition_flags_np`, shuffle-free per-batch gram counting),
+    checked row-for-row against the oracle's list-comprehension
+    replay."""
     docs = load_table(spark, sf_dir, "documents")
     return repetition_flags_np(docs).orderBy("doc_id")

@@ -227,8 +227,8 @@ def semantic_dedup_trained(
     codebook (:func:`~ballcone_spark.operators.kmeans.train_ivf_codebook`
     — Abbas et al. cluster with real k-means, not raw seeds) → the same
     vectorized route → pair → greedy-remove report. Iterative training
-    makes this rows-only (the kmeans class); the seeded
-    :func:`semantic_dedup_report` is the oracle-checked twin sharing
+    puts this beyond a SQL oracle (the kmeans class); the seeded
+    :func:`semantic_dedup_report` is the oracle-checked path sharing
     every kernel downstream of the centroid source."""
     import numpy as np
 
@@ -367,24 +367,6 @@ def docs_semantic_dedup(spark, sf_dir):
     return semantic_dedup_report(emb, adaptive_k(emb.count())).orderBy(
         "cluster_id"
     )
-
-
-@_query(
-    "docs_semantic_dedup_trained",
-    None,  # iterative k-means training — rows-only (the kmeans class);
-    # every kernel downstream of the centroid source is oracle-checked
-    # through docs_semantic_dedup's seeded twin
-    driver=False,
-)
-def docs_semantic_dedup_trained(spark, sf_dir):
-    """SemDeDup with a Lloyd's-trained codebook (the production
-    composition kmeans → route → pair → remove)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    return semantic_dedup_trained(
-        spark, emb, adaptive_k(emb.count())
-    ).orderBy("cluster_id")
 
 
 def semantic_dedup_keep(

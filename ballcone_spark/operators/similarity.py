@@ -101,43 +101,17 @@ def knn_bruteforce(emb: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     )
 
 
-@_query(
-    "embeddings_knn_bruteforce",
-    driver=False,  # demoted r7 (VERDICT r6 #1): interpreted-HOF cosine
-    # (~6 µs/dot, CodegenFallback) — the Arrow matmul twin with the
-    # identical oracle is the driver entry; this stays the pure-JVM
-    # cross-check, hash-checked locally
-    oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-               FROM embeddings WHERE vec_id < {_N_QUERIES}),
-    corpus AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    scored AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-                      list_cosine_similarity(q.qe, c.e) AS sim
-               FROM q, corpus c WHERE c.vec_id != q.query_id),
-    ranked AS (SELECT *, row_number() OVER (
-                   PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-               FROM scored)
-    SELECT query_id, neighbor_id, round(sim, 4) AS sim, rank
-    FROM ranked WHERE rank <= {_K} ORDER BY query_id, rank
-    """,
-)
-def embeddings_knn_bruteforce(spark, sf_dir):
-    """Exact cosine top-5 for query vectors vec_id<5 — the ANN baseline."""
-    emb = _emb(spark, sf_dir)
-    return knn_bruteforce(emb, emb.where(F.col("vec_id") < _N_QUERIES), _K)
-
-
 def knn_bruteforce_np(
     emb: DataFrame, queries: DataFrame, k: int
 ) -> DataFrame:
-    """Arrow twin of :func:`knn_bruteforce` — one corpus-batch ×
+    """Arrow form of :func:`knn_bruteforce` — one corpus-batch ×
     query-matrix matmul per Arrow batch instead of per-pair interpreted
     HOF cosines (CodegenFallback, ~6 µs per 64-dim dot — the round-6
     finding; see semantic_dedup/quantization). At a 100 TB corpus the
     exact baseline is exactly this shape: queries broadcast as a numpy
     matrix, one scan, per-batch BLAS, top-k via the same
-    WindowGroupLimit tail. Hash-checked against the SAME O(n²) DuckDB
-    oracle as the JVM twin (`embeddings_knn_bruteforce_vectorized`)."""
+    WindowGroupLimit tail. Hash-checked against the O(n²) DuckDB
+    oracle (`embeddings_knn_bruteforce_vectorized`)."""
     import numpy as np
 
     qrows = queries.select("vec_id", "embedding").orderBy("vec_id").collect()
@@ -196,16 +170,17 @@ _KNN_ORACLE = f"""
 
 @_query(
     "embeddings_knn_bruteforce_vectorized",
-    _KNN_ORACLE,  # the JVM twin's oracle verbatim — full hash check of
-    # the Arrow path incl. the rounded sims (matmul vs fold summation
-    # agree to 4 dp on this data; ranks break ties on neighbor_id)
+    _KNN_ORACLE,  # full hash check incl. the rounded sims (matmul and
+    # DuckDB's list_cosine_similarity agree to 4 dp on this data; ranks
+    # break ties on neighbor_id)
     # promoted to driver r7 (VERDICT r6 #1): the exact baseline you'd
     # actually run at 100 TB — queries broadcast as a numpy matrix, one
-    # corpus scan, per-batch BLAS (2.7× the interpreted-HOF twin here,
-    # and the gap grows with corpus size)
+    # corpus scan, per-batch BLAS (2.7× the interpreted-HOF
+    # knn_bruteforce here, and the gap grows with corpus size)
 )
 def embeddings_knn_bruteforce_vectorized(spark, sf_dir):
-    """Exact cosine top-5 via the Arrow matmul twin."""
+    """Exact cosine top-5 for query vectors vec_id<5 — the ANN
+    baseline — via the Arrow matmul path."""
     emb = _emb(spark, sf_dir)
     return knn_bruteforce_np(emb, emb.where(F.col("vec_id") < _N_QUERIES), _K)
 
@@ -286,16 +261,6 @@ def ann_lsh(
     )
 
 
-@_query("embeddings_ann_lsh", None, driver=False)  # superseded by _recall
-def embeddings_ann_lsh(spark, sf_dir):
-    """LSH-bucketed approximate top-5 for vec_id<5 (same output shape as
-    the brute-force baseline). The driver-checked variant is
-    ``embeddings_ann_lsh_recall``, which hash-verifies the full bucketing
-    + rerank against the oracle."""
-    emb = _emb(spark, sf_dir)
-    return ann_lsh(emb, emb.where(F.col("vec_id") < _N_QUERIES), _K)
-
-
 def _duck_bucket_expr(vec: str) -> str:
     """DuckDB bucket id of a DOUBLE[] column: same sign-bit fold over the
     same literal planes the Spark path uses."""
@@ -345,9 +310,9 @@ def embeddings_ann_lsh_recall(spark, sf_dir):
     literals shared verbatim with the oracle, so DuckDB reproduces the
     exact bucketing; recall counts neighbor-ID membership only, immune to
     last-ulp similarity noise. Plan: the ANN side touches only same-bucket
-    candidates; the brute-force truth side is the Arrow matmul twin
-    (r7 — output pinned identical to the HOF twin, which costs ~6 µs
-    per interpreted dot × corpus × queries at sf10)."""
+    candidates; the brute-force truth side is the Arrow matmul
+    :func:`knn_bruteforce_np` (r7 — the HOF :func:`knn_bruteforce`
+    costs ~6 µs per interpreted dot × corpus × queries at sf10)."""
     emb = _emb(spark, sf_dir)
     q = emb.where(F.col("vec_id") < _N_QUERIES)
     bf = knn_bruteforce_np(emb, q, _K).select("query_id", "neighbor_id")

@@ -62,73 +62,21 @@ _TOKEN_STATS_ORACLE = f"""
     """
 
 
-@_query(
-    "docs_token_stats",
-    _TOKEN_STATS_ORACLE,
-    driver=False,  # r7: the one-pass Arrow twin is the registered entry
-    # (same oracle verbatim, 99.0 → 20.9 s cold at sf10); this JVM
-    # seven-scan projection stays as the EXTRA cross-check
-)
-def docs_token_stats(spark, sf_dir):
-    """Per-doc token statistics in ONE narrow, shuffle-free projection:
-    whitespace token count, distinct count, mean token length, md5
-    content fingerprint (order-insensitive after normalization), BPE-style
-    pre-tokenizer count (GPT-2-shaped regex — the LLM cost-estimation
-    signal; same regex text runs in Spark's Java engine and DuckDB's RE2),
-    and an order-SENSITIVE positional fingerprint Σ pos·h(token) mod P —
-    the cheap structural signature for reordered-near-identical detection.
-    The positional fp is a per-row higher-order-function fold (transform
-    with index + aggregate), so even it costs no explode and no shuffle —
-    the whole query is a pure map over the corpus scan."""
-    t = F.col("text")
-    h = lambda tok: F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long")  # noqa: E731
-    # positional fp via posexplode + partial-aggregated groupBy (r7
-    # sf10 fix): the old transform-with-index + aggregate fold is a
-    # CodegenFallback HOF — ~150 M interpreted md5·mul·mod steps at
-    # 500 k docs made this query 150 s where every family peer is ~24 s.
-    # posexplode + SUM stays in codegen and map-side combine reduces the
-    # exchange to one partial row per doc (measured cold at sf10:
-    # 150.9 → 99.0 s; the fp column alone 24 s vs ~90 s interpreted —
-    # the residual is the multi-column text scan, 5-10 s per derived
-    # column at 500 k docs). Same value as the fold: the per-element
-    # mods are summed then reduced mod P in both formulations.
-    docs = _docs(spark, sf_dir)
-    tok = docs.select("doc_id", F.posexplode(tokens(t)).alias("pos", "tok"))
-    posfp = (
-        tok.select(
-            "doc_id",
-            ((h(F.col("tok")) * (F.col("pos") + 1)) % F.lit(_FP_P)).alias("c"),
-        )
-        .groupBy("doc_id")
-        .agg((F.sum("c") % F.lit(_FP_P)).alias("positional_fp"))
-    )
-    bpe = F.size(F.regexp_extract_all(t, F.lit(_BPE_RE), F.lit(0)))
-    ws = token_count(t)
-    base = docs.select(
-        "doc_id",
-        ws.alias("n_tokens"),
-        F.size(distinct_tokens(t)).alias("n_uniq_tokens"),
-        F.round(avg_token_len(t), 4).alias("avg_token_len"),
-        fingerprint(t).alias("fp"),
-        bpe.alias("bpe_tokens"),
-        F.round(bpe.cast("double") / ws, 4).alias("tokens_per_word"),
-    )
-    return (
-        base.join(posfp, "doc_id", "left")
-        .withColumn(
-            "positional_fp", F.coalesce("positional_fp", F.lit(0))
-        )
-        .orderBy("doc_id")
-    )
-
-
 def token_stats_np(docs: DataFrame) -> DataFrame:
-    """Arrow twin of the `docs_token_stats` projection — ONE pass over
-    each document instead of seven independent JVM regex scans plus an
-    md5-per-token posexplode (each derived column re-scans the text:
-    measured 5-10 s per column at 500 k docs, 99 s total at sf10).
+    """Per-doc token statistics in ONE pass over each document: whitespace
+    token count, distinct count, mean token length, md5 content
+    fingerprint (order-insensitive after normalization), BPE-style
+    pre-tokenizer count (GPT-2-shaped regex — the LLM cost-estimation
+    signal; the same regex text runs in Python's engine, Spark's Java
+    engine and DuckDB's RE2), and an order-SENSITIVE positional
+    fingerprint Σ pos·h(token) mod P — the cheap structural signature for
+    reordered-near-identical detection. The JVM projection of the same
+    statistics costs seven independent regex scans plus an md5-per-token
+    posexplode (each derived column re-scans the text: measured 5-10 s
+    per column at 500 k docs, 99 s total at sf10, vs 20.9 s here).
 
-    Engine-parity notes (each pinned by the twin-equality edge test):
+    Engine-parity notes (each pinned by the JVM-expression fuzz test
+    ``test_token_stats_kernel_fuzz_parity``):
     - Spark ``trim`` strips only 0x20 → ``str.strip(' ')``;
     - Java ``\\s`` is the ASCII class [ \\t\\n\\x0b\\f\\r] → Python
       ``re.ASCII`` gives the identical set (``\\v`` = 0x0b);
@@ -138,10 +86,11 @@ def token_stats_np(docs: DataFrame) -> DataFrame:
     - md5 over UTF-8 bytes is bit-identical across Spark, DuckDB and
       hashlib — the `fingerprint` portability contract;
     - the division + round(·, 4) finish stays JVM-side, so float
-      formatting can't diverge from the JVM twin.
+      formatting can't diverge from the JVM expressions.
     Non-ASCII case/length edge cases (astral-plane lengths, locale
-    lowercasing) are out of contract — the DuckDB oracle already pins
-    the JVM twin to code-point semantics on this corpus.
+    lowercasing) are out of contract — the DuckDB oracle pins code-point
+    semantics on this corpus. So is 0x0b: Java's ``\\s`` includes it,
+    RE2's (the oracle's) does not.
     Token md5s are memoized per batch: natural-language corpora repeat
     tokens heavily, so the cache converts the dominant cost (25 M
     hashlib calls at sf10) into dict hits.
@@ -269,12 +218,12 @@ def quality_signals_np(
 
 @_query(
     "docs_token_stats_vectorized",
-    _TOKEN_STATS_ORACLE,  # the SAME oracle as the JVM twin, verbatim
+    _TOKEN_STATS_ORACLE,
 )
 def docs_token_stats_vectorized(spark, sf_dir):
-    """Arrow twin of `docs_token_stats`: one-pass per-doc kernel with
-    the round(·, 4) finish JVM-side, hash-checked against the identical
-    DuckDB oracle. sf10: 99.0 s JVM → see BASELINE §6d."""
+    """Per-doc token statistics (:func:`token_stats_np`): one-pass Arrow
+    kernel with the round(·, 4) finish JVM-side. sf10: 99.0 s for the
+    JVM projection → see BASELINE §6d."""
     return token_stats_np(_docs(spark, sf_dir)).orderBy("doc_id")
 
 
@@ -385,7 +334,7 @@ def docs_lang_id_confusion(spark, sf_dir):
                AS tokens_per_word
     FROM documents ORDER BY doc_id
     """,
-    driver=False,  # merged into docs_token_stats (bpe_tokens column)
+    driver=False,  # merged into docs_token_stats_vectorized (bpe_tokens)
 )
 def docs_bpe_token_estimate(spark, sf_dir):
     """Token-count estimation with a BPE-style pre-tokenizer regex
@@ -425,7 +374,7 @@ contrib AS (SELECT doc_id,
     SELECT doc_id, CAST(sum(c) % 2147483647 AS BIGINT) AS fingerprint
     FROM contrib GROUP BY doc_id ORDER BY doc_id
     """,
-    driver=False,  # merged into docs_token_stats (positional_fp column)
+    driver=False,  # merged into docs_token_stats_vectorized (positional_fp)
 )
 def docs_positional_fingerprint(spark, sf_dir):
     """Order-sensitive rolling-hash-style fingerprint: Σ pos·h(token)
@@ -445,23 +394,6 @@ def docs_positional_fingerprint(spark, sf_dir):
         .groupBy("doc_id")
         .agg((F.sum("c") % F.lit(_FP_P)).alias("fingerprint"))
         .orderBy("doc_id")
-    )
-
-
-@_query("events_daily_unique_approx", None, driver=False)  # HLL opt-in;
-# exact twin events_daily_unique_users is the driver-checked surface
-def events_daily_unique_approx(spark, sf_dir):
-    """HyperLogLog uniques per day (approx_count_distinct, rsd=1%) — the
-    documented opt-in for interactive dashboards at extreme scale where
-    the exact expand+aggregate distinct (events_daily_unique_users) is
-    too expensive (SURVEY.md §2 Q4 note)."""
-    from ballcone_spark.queries import load_table as _lt
-
-    return (
-        _lt(spark, sf_dir, "events")
-        .groupBy(F.to_date("ts").alias("date"))
-        .agg(F.approx_count_distinct("user_id", 0.01).alias("approx_uniques"))
-        .orderBy("date")
     )
 
 
@@ -650,13 +582,38 @@ _CURATION_ORACLE = f"""
     """
 
 
-def _curation_tail(scored: DataFrame) -> DataFrame:
-    """quality gate → fp dedup (keep lowest doc_id) → hash-bucket train
-    split → per-(source, lang) yield report. Shared by both curation
-    twins; ``scored`` must carry (doc_id, source, lang, n_chars,
-    n_tokens, uniq_ratio, fp)."""
+@_query(
+    "docs_curation_pipeline",
+    _CURATION_ORACLE,
+)
+def docs_curation_pipeline(spark, sf_dir):
+    """The composed curation pass every training pipeline runs: quality
+    gate (length, token count, repetition ratio) → exact dedup (keep
+    lowest doc_id per normalized fingerprint) → deterministic hash-bucket
+    train-split sample (md5(doc_id) mod 100 < 80: content-independent,
+    engine-portable, shuffle-free — the docs_deterministic_sample
+    primitive, EXTRA_QUERIES) → per-(source, lang) yield report with kept
+    and train counts. r7: the per-doc signal stage is the one-pass Arrow
+    quality kernel (the JVM projection tokenized each doc ~5×;
+    passthrough columns keep the stage shuffle-free) with the ratio
+    division left JVM-side. Dedup is one shuffle on the fingerprint; the
+    sample is a pure map predicate; the report is a partial-aggregated
+    groupBy — three shuffles end to end regardless of corpus size."""
     from pyspark.sql import Window
 
+    scored = quality_signals_np(
+        _docs(spark, sf_dir), extra_cols=("source", "lang", "n_chars")
+    ).select(
+        "doc_id",
+        "source",
+        "lang",
+        "n_chars",
+        "n_tokens",
+        (
+            F.col("n_uniq_tokens").cast("double") / F.col("n_tokens")
+        ).alias("uniq_ratio"),
+        "fp",
+    )
     quality = scored.where(
         (F.col("n_chars") >= 100)
         & (F.col("n_tokens") >= 20)
@@ -681,64 +638,6 @@ def _curation_tail(scored: DataFrame) -> DataFrame:
         )
         .orderBy("source", "lang")
     )
-
-
-@_query(
-    "docs_curation_pipeline",
-    _CURATION_ORACLE,
-)
-def docs_curation_pipeline(spark, sf_dir):
-    """The composed curation pass every training pipeline runs: quality
-    gate (length, token count, repetition ratio) → exact dedup (keep
-    lowest doc_id per normalized fingerprint) → deterministic hash-bucket
-    train-split sample (md5(doc_id) mod 100 < 80: content-independent,
-    engine-portable, shuffle-free — the docs_deterministic_sample
-    primitive, EXTRA_QUERIES) → per-(source, lang) yield report with kept
-    and train counts. r7: the per-doc signal stage is the one-pass Arrow
-    quality kernel (the JVM projection tokenized each doc ~5×;
-    passthrough columns keep the stage shuffle-free) with the ratio
-    division left JVM-side; the JVM projection remains the EXTRA
-    cross-check (`docs_curation_pipeline_jvm`). Dedup is one shuffle on
-    the fingerprint; the sample is a pure map predicate; the report is a
-    partial-aggregated groupBy — three shuffles end to end regardless of
-    corpus size."""
-    scored = quality_signals_np(
-        _docs(spark, sf_dir), extra_cols=("source", "lang", "n_chars")
-    ).select(
-        "doc_id",
-        "source",
-        "lang",
-        "n_chars",
-        "n_tokens",
-        (
-            F.col("n_uniq_tokens").cast("double") / F.col("n_tokens")
-        ).alias("uniq_ratio"),
-        "fp",
-    )
-    return _curation_tail(scored)
-
-
-@_query(
-    "docs_curation_pipeline_jvm",
-    _CURATION_ORACLE,  # same oracle verbatim — continuous cross-check
-    driver=False,
-)
-def docs_curation_pipeline_jvm(spark, sf_dir):
-    """Pure-JVM twin of `docs_curation_pipeline` (the r7 driver entry
-    runs the Arrow quality kernel); hash-checked locally against the
-    identical oracle."""
-    d = _docs(spark, sf_dir)
-    t = F.col("text")
-    scored = d.select(
-        "doc_id",
-        "source",
-        "lang",
-        "n_chars",
-        token_count(t).alias("n_tokens"),
-        uniq_token_ratio(t).alias("uniq_ratio"),
-        fingerprint(t).alias("fp"),
-    )
-    return _curation_tail(scored)
 
 
 # --------------------------------------------------------------------- #

@@ -427,7 +427,7 @@ def events_overview(spark, sf_dir):
     FROM events GROUP BY k_bucket ORDER BY k_bucket
     """,
     driver=False,  # demoted r4 to free a driver slot for
-    # embeddings_pq_ann_recall (VERDICT r3 #3's suggested swap): the
+    # the PQ recall gate (VERDICT r3 #3's suggested swap): the
     # JSON-extraction path stays oracle-checked locally by
     # tests/test_oracle_diff.py
 )
@@ -472,16 +472,15 @@ def events_hourly_profile(spark, sf_dir):
 # --------------------------------------------------------------------- #
 # 2. TPC-H-style SQL through the raw-SQL surface (Q6)                   #
 # --------------------------------------------------------------------- #
-# Each runs the *same* text through spark.sql and DuckDB where the
-# dialects agree; Spark-side broadcast hints ride in comments DuckDB
-# ignores. Cited: raw SQL console behavior at reference dao.py:344-352 /
+# Each runs the *same* text through spark.sql and DuckDB (its oracle);
+# Spark-side broadcast hints ride in comments DuckDB ignores. Cited: raw
+# SQL console behavior at reference dao.py:344-352 /
 # web_ballcone.py:130-155.
 
 
 def _sql_query(
     name: str,
     spark_sql: str,
-    duck_sql: Optional[str] = None,
     doc: str = "",
     driver: bool = True,
 ):
@@ -494,7 +493,7 @@ def _sql_query(
     build.__name__ = name
     build.__doc__ = doc
     target = QUERIES if driver else EXTRA_QUERIES
-    target[name] = QuerySpec(_plan_cached(name, build), duck_sql or spark_sql, doc)
+    target[name] = QuerySpec(_plan_cached(name, build), spark_sql, doc)
     return target[name].fn
 
 
@@ -1083,54 +1082,6 @@ _sql_query(
     ORDER BY cohort
     """,
     doc="Set operations: INTERSECT/EXCEPT retention cohorts.",
-)
-
-_sql_query(
-    "events_retention_conditional_agg",
-    """
-    WITH flags AS (
-        SELECT user_id,
-               max(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                        THEN 1 ELSE 0 END) AS before,
-               max(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
-                        THEN 1 ELSE 0 END) AS after
-        FROM events GROUP BY user_id
-    ),
-    c AS (
-        SELECT CAST(sum(CASE WHEN before = 1 AND after = 1
-                             THEN 1 ELSE 0 END) AS BIGINT) AS retained,
-               CAST(sum(CASE WHEN before = 1 AND after = 0
-                             THEN 1 ELSE 0 END) AS BIGINT) AS churned
-        FROM flags
-    )
-    SELECT n_users, cohort FROM (
-        SELECT stack(2, 'churned', churned, 'retained', retained)
-               AS (cohort, n_users) FROM c
-    )
-    ORDER BY cohort
-    """,
-    duck_sql="""
-    SELECT count(*) AS n_users, 'retained' AS cohort FROM (
-        SELECT user_id FROM events WHERE ts < TIMESTAMP '2024-01-16 00:00:00'
-        INTERSECT
-        SELECT user_id FROM events WHERE ts >= TIMESTAMP '2024-01-16 00:00:00'
-    )
-    UNION ALL
-    SELECT count(*) AS n_users, 'churned' AS cohort FROM (
-        SELECT user_id FROM events WHERE ts < TIMESTAMP '2024-01-16 00:00:00'
-        EXCEPT
-        SELECT user_id FROM events WHERE ts >= TIMESTAMP '2024-01-16 00:00:00'
-    )
-    ORDER BY cohort
-    """,
-    doc="r16 (VERDICT r15 #7): the single-scan conditional-aggregate "
-    "twin of events_retention_set_ops — one groupBy(user_id) with "
-    "per-window presence flags plus a stack() unpivot replaces the four "
-    "scans the INTERSECT/EXCEPT demo pays (each date window scanned "
-    "twice). Same oracle (the set-ops SQL verbatim), same two rows; the "
-    "set-ops ENTRY stays registered unchanged as the SQL-surface "
-    "demonstration.",
-    driver=False,  # EXTRA: the demo keeps the driver slot
 )
 
 _sql_query(

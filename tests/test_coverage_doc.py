@@ -77,3 +77,15 @@ def test_no_registered_query_is_missing_from_doc():
     text = open(DOC).read()
     for name in QUERIES:
         assert name in text, f"driver query {name} absent from COVERAGE.md"
+
+
+def test_no_two_queries_share_an_oracle():
+    """Each oracle text is implemented by one registered query: a second
+    implementation checked against the same DuckDB text is a duplicate
+    the oracle already makes redundant."""
+    by_text: dict[str, list[str]] = {}
+    for name, spec in {**QUERIES, **EXTRA_QUERIES}.items():
+        if spec.oracle is not None:
+            by_text.setdefault(" ".join(spec.oracle.split()), []).append(name)
+    shared = [names for names in by_text.values() if len(names) > 1]
+    assert shared == []

@@ -454,44 +454,6 @@ def test_udp_spool_rolling(tmp_path):
     assert lines[0].endswith("msg 0 with some padding")
 
 
-def test_custom_spool_source_exactly_once(spark, tmp_path):
-    """Spark 4 Python data source over the spool dir: offsets are file
-    names, so a checkpointed restart reads ONLY files published after
-    the last committed offset — exactly-once from the spool onward."""
-    from ballcone_spark.sources.spool_source import SyslogSpoolDataSource
-
-    spark.dataSource.register(SyslogSpoolDataSource)
-    spool = tmp_path / "spool"
-    spool.mkdir()
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-
-    def publish(seq: int, service: str) -> None:
-        payload = dict(GOOD, service=service)
-        (spool / f"datagrams-1-{seq:06d}.log").write_text(_dgram(payload) + "\n")
-
-    def drain() -> None:
-        raw = spark.readStream.format("syslog_spool").load(str(spool))
-        q = (
-            parse_datagrams(raw)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    publish(1, "blog")
-    drain()
-    assert [r["service"] for r in spark.read.parquet(out).collect()] == ["blog"]
-    publish(2, "shop")
-    drain()
-    assert sorted(r["service"] for r in spark.read.parquet(out).collect()) == [
-        "blog",
-        "shop",
-    ]
-
-
 #: 57-agent public corpus pinning the regex mini-parser's long-tail
 #: behavior (VERDICT r2 #5): mainstream desktop/mobile, iOS re-skins
 #: (CriOS/FxiOS/EdgiOS), legacy IE (MSIE + Trident rv:11), Samsung

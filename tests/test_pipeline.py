@@ -261,7 +261,7 @@ def test_staged_curation_matches_single_session(spark, tmp_path):
 
     def pairs(spark_, inputs):
         return minhash_lsh_pairs(
-            inputs["gate"].select("doc_id", "text"), vectorized=True
+            inputs["gate"].select("doc_id", "text")
         ).select("a_id", "b_id")
 
     def survivors(spark_, inputs):

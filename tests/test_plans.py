@@ -26,8 +26,8 @@ SF = "/root/testdata/sf0.01"
 #: Driver entries allowed to carry Arrow-batched Python stages — each is
 #: BLAS-shaped dense vector math where the JVM expression evaluates
 #: interpreted (HOF CodegenFallback, ~6 µs/dot) and the Arrow kernel is
-#: the faster-at-any-scale path; every one is hash-checked against the
-#: same DuckDB oracle as (or instead of) a pure-JVM twin. Anything NOT
+#: the faster-at-any-scale path; every one is hash-checked against its
+#: DuckDB oracle. Anything NOT
 #: on this list must still be 100% JVM-side — additions need a measured
 #: justification like VERDICT r6 #1's.
 ARROW_ALLOWED = {
@@ -36,14 +36,13 @@ ARROW_ALLOWED = {
     "docs_semantic_dedup",                   # route matmul + cluster gram
     "dedup_minhash_lsh_vectorized",          # numpy permutation minima
     "docs_token_stats_vectorized",           # one-pass token kernel
-    #   (99.0 → 20.9 s cold at sf10 vs the seven-scan JVM twin)
+    #   (99.0 → 20.9 s cold at sf10 vs the seven-scan JVM projection)
     # r7: both recall gates' brute-force TRUTH side is the Arrow matmul
-    # twin (output pinned identical; the HOF side cost 5×corpus
-    # interpreted dots at sf10)
+    # (the HOF side cost 5×corpus interpreted dots at sf10)
     "embeddings_ann_lsh_recall",
     "embeddings_ann_ivf_recall",
     "docs_curation_pipeline",                # one-pass quality kernel
-    #   (the JVM projection tokenized each doc ~5×; JVM twin is EXTRA)
+    #   (the JVM projection tokenized each doc ~5×)
     "docs_decon_arrival",                    # gram-rows kernel replaces
     #   the lead-window token shuffle on both semi-join sides (r14: the
     #   arrival replay took docs_decontamination's driver slot; the
@@ -243,12 +242,15 @@ def test_scan_limit_is_take_ordered(spark):
 
 
 def test_knn_broadcasts_queries_not_corpus(spark):
-    """The pure-JVM k-NN twin (EXTRA since r7 — the Arrow matmul twin is
-    the driver entry) must still broadcast the tiny query side against
-    one corpus scan with zero Python."""
-    from ballcone_spark.queries import EXTRA_QUERIES
+    """The pure-JVM exact k-NN (the brute-force side of the driver's PQ
+    recall gate) must broadcast the tiny query side against one corpus
+    scan with zero Python."""
+    from ballcone_spark.operators.similarity import knn_bruteforce
 
-    df = EXTRA_QUERIES["embeddings_knn_bruteforce"].fn(spark, SF)
+    emb = load_table(spark, SF, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    df = knn_bruteforce(emb, emb.where(F.col("vec_id") < 5), 5)
     p = plan_str(df)
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
     assert not uses_python(df)  # dot products in codegen
@@ -925,8 +927,8 @@ def test_multi_consumer_queries_scan_once(spark):
     several consumers must materialize it ONCE (localCheckpoint), not
     re-inline the scan pipeline per consumer. Before the barriers the
     visible plans re-scanned the same parquet 2-10x (fuzzy decon: 10;
-    session overlaps / the SQL funnel: 6; TF-IDF: 3; packing: 2 — see
-    plans/r15/*_before.txt). Pin the ceiling on visible parquet scans
+    session overlaps / the SQL funnel: 6; TF-IDF: 3; packing: 2, as
+    counted at the time the barriers went in). Pin the ceiling on visible parquet scans
     and require the checkpoint RDD to be present, so a refactor that
     drops a barrier fails here instead of silently multiplying corpus
     I/O at scale."""

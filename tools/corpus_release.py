@@ -70,7 +70,7 @@ def build_stages(sf_dir: str) -> list[Stage]:
 
     def pairs(spark, inputs):
         return minhash_lsh_pairs(
-            inputs["gate"].select("doc_id", "text"), vectorized=True
+            inputs["gate"].select("doc_id", "text")
         ).select("a_id", "b_id")
 
     def survivors(spark, inputs):

@@ -36,13 +36,11 @@ sys.path.insert(0, ROOT)
 
 QUERIES = [
     "dedup_exact_keep_first",
-    "dedup_minhash_lsh",
     "dedup_minhash_lsh_vectorized",
     "dedup_ngram_jaccard",
     "dedup_incremental_minhash",
-    "embeddings_pq_ann_recall",
-    # round-6 corpus operators (BASELINE.md §6d)
     "embeddings_pq_ann_recall_vectorized",
+    # round-6 corpus operators (BASELINE.md §6d)
     "docs_semantic_dedup",
     "docs_bigram_lm_score",
     "docs_boilerplate_spans",
