@@ -36,7 +36,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ballcone_spark.operators.repetition import _ngrams
 from ballcone_spark.plans.barriers import checkpoint
 from ballcone_spark.queries import _query, load_table
 

@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Iterator
-from typing import Optional
 
 import numpy as np
 import pandas as pd

@@ -11,9 +11,7 @@ from pyspark.sql import functions as F
 
 from ballcone_spark.functions.text import (
     LANG_LEXICONS,
-    avg_token_len,
     distinct_tokens,
-    fingerprint,
     token_count,
     tokens,
     uniq_token_ratio,

@@ -68,10 +68,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ballcone_spark.streaming import state
-from ballcone_spark.streaming.dedup_stream import (
-    SPOOL_MAX_FILES_PER_TRIGGER,
-)
+from ballcone_spark.streaming import spool, state
 
 from ballcone_spark.operators.packing import (
     CHUNK_COS_T,
@@ -384,43 +381,31 @@ def start_chunk_alias_stream(
     tau: float = CHUNK_COS_T,
     trigger_seconds: int = 5,
     available_now: bool = False,
-    max_files_per_trigger: int | None = SPOOL_MAX_FILES_PER_TRIGGER,
+    max_files_per_trigger: int | None = spool.SPOOL_MAX_FILES_PER_TRIGGER,
     compact_every: int | None = 64,
-    clean_source: str | None = None,
-    archive_dir: str | None = None,
-    scheduler_pool: str | None = None,
 ):
     """Micro-batch alias-map maintenance over a spool of JSON-lines
     document files (``{"doc_id": ..., "text": ...}`` per line, the
     dedup_stream input shape). Returns the StreamingQuery.
 
-    ``compact_every`` (r12): fold each state dir's per-batch partition
-    dirs through :func:`~ballcone_spark.streaming.state.fold` when the
-    live dir count reaches this many — previously the fold existed but
-    nothing in the production loop CALLED it, so a 5 s-trigger
-    deployment accumulated ~17 k dirs/day/state-dir and every history
-    read paid the listing. No sort column: the alias state has no probe
-    key to cluster row groups by. The alias dir folds latest-wins
-    (superseded redirect rows dropped — read-equivalent for
-    :func:`read_alias_map`, and the resident alias state stays
-    O(current redirect table) instead of O(total updates ever));
-    chunks/grams fold as-is. Reads are bit-identical before/after
-    (``test_alias_state_fold_preserves_reads``), crash points covered
-    by ``test_compact_alias_state_crash_recovery``. ``None`` disables."""
-    from ballcone_spark.streaming.dedup_stream import _spool_reader
+    ``compact_every``: fold each state dir's per-batch partition dirs
+    when the live dir count reaches this many
+    (:mod:`~ballcone_spark.streaming.spool`). No sort column: the alias
+    state has no probe key to cluster row groups by. The alias dir
+    folds latest-wins (superseded redirect rows dropped —
+    read-equivalent for :func:`read_alias_map`, and the resident alias
+    state stays O(current redirect table) instead of O(total updates
+    ever)); chunks/grams fold as-is. Reads are bit-identical
+    before/after (``test_alias_state_fold_preserves_reads``), crash
+    points covered by ``test_compact_alias_state_crash_recovery``.
+    ``None`` disables."""
+    docs = spool.parse_docs(
+        spool.read(spark, spool_dir, max_files_per_trigger)
+    )
 
-    reader = _spool_reader(spark, clean_source, archive_dir)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.load(spool_dir)
-    docs = raw.select(
-        F.get_json_object("value", "$.doc_id").cast("long").alias("doc_id"),
-        F.get_json_object("value", "$.text").alias("text"),
-    ).where(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(batch_df: DataFrame, batch_id: int) -> bool:
         if not batch_df.take(1):
-            return
+            return False
         process_alias_batch(
             spark,
             batch_df,
@@ -430,42 +415,24 @@ def start_chunk_alias_stream(
             batch_id,
             tau=tau,
         )
-        if compact_every is not None:
-            # per-trigger cadence: sweep only at fold time (full
-            # compaction interval of reader grace — review r12 #2)
-            for d in (chunks_dir, grams_dir):
-                state.fold(spark, d, every=compact_every, sort_col=None,
-                           sweep_when="fold")
-            state.fold(
-                spark, alias_dir, every=compact_every, sort_col=None,
-                latest_wins_key="chunk_fp", sweep_when="fold",
-            )
+        return True
 
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("ballcone_alias_stream")
+    return spool.start(
+        docs, process_batch, checkpoint_dir, "ballcone_alias_stream",
+        trigger_seconds, available_now, compact_every,
+        [
+            (chunks_dir, {"sort_col": None}),
+            (grams_dir, {"sort_col": None}),
+            (alias_dir, {"sort_col": None, "latest_wins_key": "chunk_fp"}),
+        ],
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    from ballcone_spark.streaming.dedup_stream import _scheduler_pool
-
-    with _scheduler_pool(spark, scheduler_pool):
-        return writer.start()
 
 
 # --------------------------------------------------------------------- #
 # oracle-checked query: the stream's first-seen election replayed batch  #
 # --------------------------------------------------------------------- #
 
-from ballcone_spark.operators.dedup import dedup_clusters  # noqa: E402
-from ballcone_spark.operators.packing import (  # noqa: E402
-    CHUNK_GRAM_MAX_DF as _MAX_DF,
-    _duck_chunk_vp_ctes,
-    chunk_semantic_pairs,
-)
+from ballcone_spark.operators.packing import _duck_chunk_vp_ctes  # noqa: E402
 from ballcone_spark.queries import _query, load_table  # noqa: E402
 
 #: deterministic arrival assignment for the replay query: doc_id mod 3

@@ -71,7 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ballcone_spark.operators.dedup import _DECON_NGRAM, shingle_rows_np
-from ballcone_spark.streaming import state
+from ballcone_spark.streaming import spool, state
 
 __all__ = [
     "process_decon_batch",
@@ -96,13 +96,6 @@ DECON_HASH_BUCKETS = 16
 #: flag-dedup-join treatment. The count is one cheap job over the
 #: already-materialized localCheckpoint blocks.
 FORWARD_BROADCAST_MAX_GRAMS = 2_000_000
-
-#: default spool-backpressure bound (files per trigger). The module's
-#: stated use case is a corpus that EXISTS before the stream starts —
-#: an unbounded first trigger makes that whole backlog ONE micro-batch
-#: (r14, VERDICT r13 #1). 64 files keeps cold-start batches the same
-#: order as steady-state ones; pass None explicitly to opt out.
-DECON_MAX_FILES_PER_TRIGGER = 64
 
 #: fixed-geometry marker (leading underscore: never read as data)
 _GEOMETRY = "_geometry.json"
@@ -454,42 +447,30 @@ def start_decon_stream(
     n: int = _DECON_NGRAM,
     trigger_seconds: int = 5,
     available_now: bool = False,
-    max_files_per_trigger: int | None = DECON_MAX_FILES_PER_TRIGGER,
+    max_files_per_trigger: int | None = spool.SPOOL_MAX_FILES_PER_TRIGGER,
     compact_every: int | None = 64,
-    clean_source: str | None = None,
-    archive_dir: str | None = None,
     hash_buckets: int | None = DECON_HASH_BUCKETS,
-    scheduler_pool: str | None = None,
 ):
     """Two spools — documents (``{"doc_id":..,"text":..}``) and
     benchmark items (``{"bench_id":..,"text":..}``) — UNIONED into one
     streaming query, so both kinds share a single serialized batch
     loop over the shared state dirs (two queries would race the state
     writes; one source union is the safe composition). Returns the
-    StreamingQuery."""
-    from ballcone_spark.streaming.dedup_stream import _spool_reader
+    StreamingQuery.
 
-    def _rd(spool):
-        r = _spool_reader(spark, clean_source, archive_dir)
-        if max_files_per_trigger is not None:
-            # the ingest backpressure knob, bounded BY DEFAULT (r14,
-            # VERDICT r13 #1): decon's stated use case is a corpus that
-            # EXISTS before the stream starts, i.e. a spool backlog on
-            # first start — unbounded, that backlog becomes one giant
-            # micro-batch, exactly the batch the forward probe's
-            # broadcast ceiling exists to catch. availableNow triggers
-            # honor the option too (each pseudo-trigger takes ≤ the
-            # bound), so cold-start drains stay batch-bounded.
-            r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-        return r.load(spool)
+    Both spools are bounded per trigger by default: the stated use case
+    is a corpus that EXISTS before the stream starts, and an unbounded
+    first trigger makes that whole backlog the one giant micro-batch
+    the forward probe's broadcast ceiling exists to catch."""
 
-    docs_raw = _rd(doc_spool).select(F.lit("doc").alias("kind"), "value")
-    bench_raw = _rd(bench_spool).select(
-        F.lit("bench").alias("kind"), "value"
-    )
-    both = docs_raw.unionByName(bench_raw)
+    def _rd(spool_dir, kind):
+        return spool.read(spark, spool_dir, max_files_per_trigger).select(
+            F.lit(kind).alias("kind"), "value"
+        )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    both = _rd(doc_spool, "doc").unionByName(_rd(bench_spool, "bench"))
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> bool:
         batch_df = batch_df.localCheckpoint(eager=True)
         # ONE job answers "which kinds does this batch carry" — this
         # used to be three (take(1) on the raw batch plus one per
@@ -502,21 +483,19 @@ def start_decon_stream(
             .collect()
         }
         if not kinds:
-            return
-        docs = batch_df.where(F.col("kind") == "doc").select(
-            F.get_json_object("value", "$.doc_id").cast("long")
-            .alias("doc_id"),
-            F.get_json_object("value", "$.text").alias("text"),
-        ).where(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
-        bench = batch_df.where(F.col("kind") == "bench").select(
-            F.get_json_object("value", "$.bench_id").cast("long")
-            .alias("bench_id"),
-            F.get_json_object("value", "$.text").alias("text"),
-        ).where(F.col("bench_id").isNotNull() & F.col("text").isNotNull())
+            return False
+
+        def parsed(kind, id_field):
+            if not kinds.get(kind):
+                return None
+            return spool.parse_docs(
+                batch_df.where(F.col("kind") == kind), id_field
+            )
+
         process_decon_batch(
             spark,
-            docs if kinds.get("doc") else None,
-            bench if kinds.get("bench") else None,
+            parsed("doc", "doc_id"),
+            parsed("bench", "bench_id"),
             doc_grams_dir,
             bench_grams_dir,
             flags_dir,
@@ -524,35 +503,19 @@ def start_decon_stream(
             n=n,
             hash_buckets=hash_buckets,
         )
-        if compact_every is not None:
-            # the doc-gram fold keeps the hb bucketing so retro-probe
-            # partition pruning survives compaction (r13)
-            state.fold(
-                spark, doc_grams_dir, every=compact_every, sort_col="h",
-                sweep_when="fold", partition_col="hb",
-            )
-            state.fold(
-                spark, bench_grams_dir, every=compact_every, sort_col="h",
-                sweep_when="fold",
-            )
-            state.fold(
-                spark, flags_dir, every=compact_every, sort_col=None,
-                latest_wins_key="doc_id", sweep_when="fold",
-            )
+        return True
 
-    writer = (
-        both.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("ballcone_decon_stream")
+    # the doc-gram fold keeps the hb bucketing so retro-probe partition
+    # pruning survives compaction (r13)
+    return spool.start(
+        both, process_batch, checkpoint_dir, "ballcone_decon_stream",
+        trigger_seconds, available_now, compact_every,
+        [
+            (doc_grams_dir, {"sort_col": "h", "partition_col": "hb"}),
+            (bench_grams_dir, {"sort_col": "h"}),
+            (flags_dir, {"sort_col": None, "latest_wins_key": "doc_id"}),
+        ],
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    from ballcone_spark.streaming.dedup_stream import _scheduler_pool
-
-    with _scheduler_pool(spark, scheduler_pool):
-        return writer.start()
 
 
 # --------------------------------------------------------------------- #

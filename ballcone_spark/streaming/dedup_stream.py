@@ -68,7 +68,7 @@ from pyspark.sql import functions as F
 
 from ballcone_spark.operators.dedup import N_BANDS, N_HASHES
 from ballcone_spark.queries import _query, load_table
-from ballcone_spark.streaming import state
+from ballcone_spark.streaming import spool, state
 
 __all__ = [
     "SIG_AGREE_MIN",
@@ -323,68 +323,6 @@ def _simulation_dup_ids(sigs_with_batch: DataFrame) -> DataFrame:
     )
 
 
-def _spool_reader(spark, clean_source, archive_dir):
-    """Text file-source reader with the optional committed-file cleanup
-    (r12, the ingest ``clean_source`` contract). Default None: these
-    spools may be the ONLY copy of the raw documents — the stream
-    persists signatures/chunks, not text — so deletion is opt-in,
-    unlike the warehouse-backed ingest spool."""
-    if clean_source not in (None, "delete", "archive"):
-        raise ValueError(
-            f"clean_source must be None, 'delete', or 'archive' "
-            f"(got {clean_source!r})"
-        )
-    if clean_source == "archive" and archive_dir is None:
-        raise ValueError("clean_source='archive' requires archive_dir")
-    reader = spark.readStream.format("text")
-    if clean_source is not None:
-        reader = reader.option("cleanSource", clean_source)
-        if archive_dir is not None:
-            reader = reader.option("sourceArchiveDir", archive_dir)
-    return reader
-
-
-def _scheduler_pool(spark: SparkSession, pool: str | None):
-    """Context manager scoping Spark's FAIR-scheduler pool local
-    property to a stream's ``start()`` call: the stream-execution
-    thread is created inside start() and inherits the caller thread's
-    local properties, so every job the query ever runs (foreachBatch
-    driver jobs included) lands in ``pool``. The caller's own property
-    is restored afterward. Measured in BASELINE §6ay-addendum: under
-    FAIR mode, pooling the queries restores latency-sensitive
-    co-residents (serving, small control streams) to their solo
-    numbers on a shared driver; under the default FIFO scheduler the
-    property is inert and this is a no-op wrapper."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _scope():
-        if pool is None:
-            yield
-            return
-        sc = spark.sparkContext
-        prev = sc.getLocalProperty("spark.scheduler.pool")
-        sc.setLocalProperty("spark.scheduler.pool", pool)
-        try:
-            yield
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", prev)
-
-    return _scope()
-
-
-#: default spool-backpressure bound for every spool stream (r14,
-#: VERDICT r13 #1 follow-through): the streams' probe plans broadcast
-#: batch-derived frames under a "trigger-bounded" invariant that an
-#: unbounded cold-start backlog violates — one giant first micro-batch
-#: is exactly the batch the invariant can't survive. 64 files keeps
-#: cold-start batches the same order as steady-state ones (availableNow
-#: honors the option too, draining in bounded bites); pass None
-#: explicitly to opt out. decon_stream's DECON_MAX_FILES_PER_TRIGGER
-#: is the same bound under its own (test-pinned) name.
-SPOOL_MAX_FILES_PER_TRIGGER = 64
-
-
 def start_dedup_stream(
     spark: SparkSession,
     spool_dir: str,
@@ -394,10 +332,7 @@ def start_dedup_stream(
     trigger_seconds: int = 5,
     available_now: bool = False,
     compact_every: int | None = 64,
-    clean_source: str | None = None,
-    archive_dir: str | None = None,
-    max_files_per_trigger: int | None = SPOOL_MAX_FILES_PER_TRIGGER,
-    scheduler_pool: str | None = None,
+    max_files_per_trigger: int | None = spool.SPOOL_MAX_FILES_PER_TRIGGER,
 ):
     """Micro-batch incremental dedup over a spool of JSON-lines document
     files (``{"doc_id": ..., "text": ...}`` per line). Each batch:
@@ -410,28 +345,18 @@ def start_dedup_stream(
        n_matches) and ``index_dir/batch_id=<n>`` with the batch's banded
        signature rows.
 
-    ``compact_every`` (r12): fold the INDEX's per-batch dirs through
-    :func:`~ballcone_spark.streaming.state.fold` whenever the live dir
-    count reaches this many
-    — wired into the batch loop because a 5 s-trigger deployment mints
-    ~17 k dirs/day and the probe's file-listing cost would otherwise
-    grow without bound (the fold was previously manual-only; reads are
-    bit-identical before/after, crash points covered by the kill-point
-    suite). ``None`` disables. The decisions dir is NOT folded here:
-    external consumers read it as plain ``batch_id=`` parquet, so its
-    lifecycle belongs to them (the warehouse-compaction convention).
+    ``compact_every``: fold the INDEX's per-batch dirs whenever the live
+    dir count reaches this many (:mod:`~ballcone_spark.streaming.spool`);
+    the probe's file listing would otherwise grow without bound. Reads
+    are bit-identical before/after, crash points covered by the
+    kill-point suite. ``None`` disables. The decisions dir is NOT folded
+    here: external consumers read it as plain ``batch_id=`` parquet, so
+    its lifecycle belongs to them (the warehouse-compaction convention).
 
     Returns the StreamingQuery."""
-    reader = _spool_reader(spark, clean_source, archive_dir)
-    if max_files_per_trigger is not None:
-        # the ingest stream's backpressure knob (catch-up drains in
-        # trigger-sized bites); availableNow respects it too
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.load(spool_dir)
-    docs = raw.select(
-        F.get_json_object("value", "$.doc_id").cast("long").alias("doc_id"),
-        F.get_json_object("value", "$.text").alias("text"),
-    ).where(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
+    docs = spool.parse_docs(
+        spool.read(spark, spool_dir, max_files_per_trigger)
+    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         sigs = batch_signatures(batch_df).localCheckpoint(eager=True)
@@ -442,23 +367,11 @@ def start_dedup_stream(
         decisions = incremental_dedup_batch(sigs, hist)
         state.write_batch(decisions, decisions_dir, batch_id, n_rows)
         state.write_batch(_bands(sigs), index_dir, batch_id, n_rows * N_BANDS)
-        if compact_every is not None:
-            # per-trigger cadence: sweep only at fold time so retired
-            # dirs keep a full compaction interval of reader grace
-            state.fold(spark, index_dir, every=compact_every,
-                       sweep_when="fold")
 
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("ballcone_dedup_stream")
+    return spool.start(
+        docs, process_batch, checkpoint_dir, "ballcone_dedup_stream",
+        trigger_seconds, available_now, compact_every, [(index_dir, {})],
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    with _scheduler_pool(spark, scheduler_pool):
-        return writer.start()
 
 
 # --------------------------------------------------------------------- #

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ballcone_spark.sources.enrich import enrich
 from ballcone_spark.sources.syslog import parse_datagrams
+from ballcone_spark.streaming import spool
 
 __all__ = [
     "ingest_pipeline",
@@ -95,7 +96,6 @@ def start_file_ingest(
     archive_dir: str | None = None,
     query_name: str = "ballcone_ingest",
     service_shard: str | None = None,
-    scheduler_pool: str | None = None,
 ):
     """Start the micro-batch ingest from a spool directory of datagram
     text files (written by the UDP bridge or any log shipper).
@@ -103,32 +103,12 @@ def start_file_ingest(
     Returns the StreamingQuery. ``available_now=True`` drains whatever
     is in the spool and stops — the test/backfill mode.
 
-    ``scheduler_pool`` (r15, VERDICT r14 #5): same first-class FAIR
-    pool assignment as the four spool-stream starters — the ingest
-    stream joins the cohabitation envelope as a third co-resident, and
-    §6ay's remedy (latency-sensitive consumers in their own pool)
-    must apply to it the same way.
-
-    ``clean_source`` (r12): what happens to a spool file once its
-    micro-batch COMMITS — ``"delete"`` (default), ``"archive"`` (moved
-    under ``archive_dir``), or ``None`` (retain — the pre-r12
-    behavior). The spool is a transport buffer: the bridge rolls a new
-    file every 5 s, so an uncleaned spool grows by ~17 k files/day and
-    the file source re-lists ALL of them every trigger — the same
-    unbounded-state class the stream state folds (§6ae) close, one
-    layer down. Spark deletes only files whose batch has committed, so
-    a crash-replayed batch still finds its input; pass ``None`` if the
-    directory doubles as an archive someone else reads.
-
-    ``max_files_per_trigger`` is the backpressure knob: after a stall
-    (restart, long GC, compaction pause) the file source would
-    otherwise take EVERY accumulated spool file into one catch-up
-    micro-batch, spiking batchDuration far past the trigger and
-    holding the warehouse append open for the whole backlog; bounding
-    files-per-trigger drains the backlog in trigger-sized bites so
-    per-batch latency stays flat while throughput catches up.
-    (availableNow respects the same bound — its drain becomes several
-    bounded batches instead of one monster.)
+    ``clean_source`` (``"delete"`` by default, ``"archive"`` under
+    ``archive_dir``, or ``None`` to keep the files) and
+    ``max_files_per_trigger`` (the backpressure bound, unbounded by
+    default) are the spool source's options; their rationale is in
+    :mod:`~ballcone_spark.streaming.spool`. Pass ``clean_source=None``
+    if the spool doubles as an archive someone else reads.
 
     ``hot_partition_rows`` is the hot-partition escape hatch (BASELINE
     §6r / VERDICT r10 #2): the 1-file-per-partition-per-batch invariant
@@ -171,16 +151,9 @@ def start_file_ingest(
             raise ValueError(
                 f"service_shard must match ^\\w+$ (got {service_shard!r})"
             )
-    # shared validation + option wiring with the analytical streams
-    # (one copy of the clean_source contract — review r12 #5); only the
-    # DEFAULT differs: "delete" here (the warehouse holds the rows),
-    # None there (their spools can be the only copy of the raw text)
-    from ballcone_spark.streaming.dedup_stream import _spool_reader
-
-    reader = _spool_reader(spark, clean_source, archive_dir)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.load(spool_dir)
+    raw = spool.read(
+        spark, spool_dir, max_files_per_trigger, clean_source, archive_dir
+    )
     facts = ingest_pipeline(raw, geoip_ranges=geoip_ranges)
 
     # ``service_shard`` (r12, §6aj): one ingest stream PER SERVICE into
@@ -295,19 +268,10 @@ def start_file_ingest(
         finally:
             batch_df.unpersist()
 
-    writer = (
-        facts.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+    return spool.start(
+        facts, write_batch, checkpoint_dir, query_name, trigger_seconds,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    from ballcone_spark.streaming.dedup_stream import _scheduler_pool
-
-    with _scheduler_pool(spark, scheduler_pool):
-        return writer.start()
 
 
 def compact_warehouse(

@@ -63,10 +63,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ballcone_spark.operators.semantic_dedup import TAU, _route_np
-from ballcone_spark.streaming import state
-from ballcone_spark.streaming.dedup_stream import (
-    SPOOL_MAX_FILES_PER_TRIGGER,
-)
+from ballcone_spark.streaming import spool, state
 
 __all__ = [
     "start_semantic_dedup_stream",
@@ -1007,18 +1004,15 @@ def start_semantic_dedup_stream(
     books=None,
     eps: float = 0.15,
     compact_every: int | None = 64,
-    clean_source: str | None = None,
-    archive_dir: str | None = None,
-    max_files_per_trigger: int | None = SPOOL_MAX_FILES_PER_TRIGGER,
-    scheduler_pool: str | None = None,
+    max_files_per_trigger: int | None = spool.SPOOL_MAX_FILES_PER_TRIGGER,
 ):
     """Stream JSON-lines ``{"vec_id": ..., "e": [...]}`` files through
     the incremental SemDeDup rule against a frozen centroid set.
 
     ``max_files_per_trigger`` (r14): spool backpressure — defaults to
-    :data:`~ballcone_spark.streaming.dedup_stream
-    .SPOOL_MAX_FILES_PER_TRIGGER`, bounding cold-start backlogs to
-    steady-state-sized micro-batches; the decision gram is
+    :data:`~ballcone_spark.streaming.spool.SPOOL_MAX_FILES_PER_TRIGGER`,
+    bounding cold-start backlogs to steady-state-sized micro-batches
+    (:mod:`~ballcone_spark.streaming.spool`); the decision gram is
     O(b·(h+b)) in the BATCH size b, so one backlog-sized batch is
     exactly the memory spike the rectangular kernel exists to avoid.
     ``None`` opts out.
@@ -1040,11 +1034,9 @@ def start_semantic_dedup_stream(
     for its lifetime (exact-mode batches have null codes the
     compressed screen cannot score).
 
-    ``compact_every`` (r12): fold the INDEX's per-batch dirs through
-    :func:`~ballcone_spark.streaming.state.fold` when the live dir
-    count reaches this many —
-    previously nothing in the loop folded, so a long-running stream
-    paid an ever-growing dir listing per trigger. Fold rows are sorted
+    ``compact_every`` (r12): fold the INDEX's per-batch dirs when the
+    live dir count reaches this many
+    (:mod:`~ballcone_spark.streaming.spool`). Fold rows are sorted
     by ``cluster_id`` so the per-cluster history probe prunes row
     groups. The DECISIONS dir folds too (each vec_id is decided exactly
     once — first-seen, never revisited — so a plain concat fold is
@@ -1062,12 +1054,7 @@ def start_semantic_dedup_stream(
     cmat = np.array([v for _, v in cents], dtype=np.float64)
     cmat = (cmat / np.sqrt((cmat * cmat).sum(axis=1))[:, None]).T
 
-    from ballcone_spark.streaming.dedup_stream import _spool_reader
-
-    reader = _spool_reader(spark, clean_source, archive_dir)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.load(spool_dir)
+    raw = spool.read(spark, spool_dir, max_files_per_trigger)
     vecs = raw.select(
         F.get_json_object("value", "$.vec_id").cast("long").alias("vec_id"),
         F.from_json(
@@ -1075,7 +1062,7 @@ def start_semantic_dedup_stream(
         ).alias("e"),
     ).where(F.col("vec_id").isNotNull() & F.col("e").isNotNull())
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(batch_df: DataFrame, batch_id: int) -> bool:
         routed = _route_np(batch_df, ids, cmat)
         if compressed:
             routed = _with_codes(routed, books)
@@ -1090,7 +1077,7 @@ def start_semantic_dedup_stream(
         routed = routed.localCheckpoint(eager=False)
         rows = routed.select("cluster_id").collect()
         if not rows:
-            return
+            return False
         batch_clusters = sorted({r[0] for r in rows})
         # explicit read schemas: inference/mergeSchema cost one Spark
         # job per read.parquet — two more jobs per trigger, gone. The
@@ -1116,34 +1103,13 @@ def start_semantic_dedup_stream(
             )
         state.write_batch(decisions, decisions_dir, batch_id, len(rows))
         state.write_batch(routed, index_dir, batch_id, len(rows))
-        if compact_every is not None:
-            state.fold(
-                spark, index_dir, every=compact_every,
-                sort_col="cluster_id", sweep_when="fold",
-            )
-            # decisions fold (r12): each vec_id is decided exactly once
-            # (first-seen, never revisited), so a plain concat fold is
-            # read-equivalent; merge_schema keeps pre-alias partitions
-            # from dropping the canonical column at fold time. External
-            # consumers read via read_semantic_decisions.
-            state.fold(
-                spark, decisions_dir, every=compact_every, sort_col=None,
-                merge_schema=True, sweep_when="fold",
-            )
+        return True
 
-    writer = vecs.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return spool.start(
+        vecs, process_batch, checkpoint_dir, "ballcone_semantic_stream",
+        trigger_seconds, available_now, compact_every,
+        [
+            (index_dir, {"sort_col": "cluster_id"}),
+            (decisions_dir, {"sort_col": None, "merge_schema": True}),
+        ],
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        # continuous deployment mode (the vector live demo's shape) —
-        # previously the non-availableNow path ran with the default
-        # unthrottled trigger
-        writer = writer.trigger(
-            processingTime=f"{trigger_seconds} seconds"
-        )
-    from ballcone_spark.streaming.dedup_stream import _scheduler_pool
-
-    with _scheduler_pool(spark, scheduler_pool):
-        return writer.start()

@@ -5,7 +5,7 @@ from __future__ import annotations
 import datetime
 
 from ballcone_spark.app import Ballcone, days_before, json_value
-from tests.conftest import DAY1, DAY2, GOLDEN_ENTRIES
+from tests.conftest import DAY2, GOLDEN_ENTRIES
 
 
 def test_days_before():

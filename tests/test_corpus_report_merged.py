@@ -13,9 +13,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-import __spark_entry__  # noqa: F401  (canonical registration order —
-# importing operator modules directly at collection time would reorder
-# the registry and break the COVERAGE.md snapshot gate)
 from ballcone_spark.operators.lm_quality import (
     _collect_model,
     bigram_lm_scores_np,

@@ -18,12 +18,12 @@ END = "<!-- REGISTRY-SNAPSHOT-END -->"
 
 def expected_snapshot() -> str:
     """The canonical snapshot block body, derived from the registries."""
-    driver = ", ".join(f"`{n}`" for n in QUERIES)
+    driver = ", ".join(f"`{n}`" for n in sorted(QUERIES))
     extra = ", ".join(f"`{n}`" for n in sorted(EXTRA_QUERIES))
     n_oracled = sum(1 for s in QUERIES.values() if s.oracle is not None)
     return (
         f"\ndriver registry ({len(QUERIES)} entries, {n_oracled} with "
-        f"DuckDB oracles, registration order):\n{driver}\n\n"
+        f"DuckDB oracles):\n{driver}\n\n"
         f"EXTRA registry ({len(EXTRA_QUERIES)} entries, oracle-checked "
         f"locally by tests/test_oracle_diff.py where an oracle exists):\n"
         f"{extra}\n"

@@ -18,7 +18,7 @@ from ballcone_spark.plans.explain import (
     uses_python,
 )
 from ballcone_spark.queries import load_table
-from tests.conftest import DAY1, DAY2, GOLDEN_ENTRIES
+from tests.conftest import DAY1, DAY2
 
 SF = "/root/testdata/sf0.01"
 

@@ -2878,15 +2878,16 @@ def test_decon_backlog_defaults_bounded(spark, tmp_path, monkeypatch):
     import os as _os
 
     from ballcone_spark.streaming import decon_stream as dcs
+    from ballcone_spark.streaming import spool
 
     sig = inspect.signature(dcs.start_decon_stream)
     assert (
         sig.parameters["max_files_per_trigger"].default
-        == dcs.DECON_MAX_FILES_PER_TRIGGER
-        and dcs.DECON_MAX_FILES_PER_TRIGGER is not None
+        == spool.SPOOL_MAX_FILES_PER_TRIGGER
+        and spool.SPOOL_MAX_FILES_PER_TRIGGER is not None
     )
 
-    monkeypatch.setattr(dcs, "DECON_MAX_FILES_PER_TRIGGER", 2)
+    monkeypatch.setattr(spool, "SPOOL_MAX_FILES_PER_TRIGGER", 2)
     dirs = [str(tmp_path / d) for d in ("dg", "bg", "fl")]
     dspool, bspool = tmp_path / "dsp", tmp_path / "bsp"
     dspool.mkdir(), bspool.mkdir()
@@ -2898,7 +2899,7 @@ def test_decon_backlog_defaults_bounded(spark, tmp_path, monkeypatch):
     q = dcs.start_decon_stream(
         spark, str(dspool), str(bspool), *dirs,
         str(tmp_path / "ckpt"), available_now=True, compact_every=None,
-        max_files_per_trigger=dcs.DECON_MAX_FILES_PER_TRIGGER,
+        max_files_per_trigger=spool.SPOOL_MAX_FILES_PER_TRIGGER,
     )
     q.awaitTermination(120)
     batch_dirs = [
@@ -2910,88 +2911,32 @@ def test_decon_backlog_defaults_bounded(spark, tmp_path, monkeypatch):
     assert hist.select("doc_id").distinct().count() == 5
 
 
-def test_stream_starters_scope_scheduler_pool(spark, tmp_path):
-    """r14 (§6ay-addendum made first-class): every spool stream starter
-    takes scheduler_pool= and scopes the FAIR-pool local property to
-    its start() call — the stream-execution thread inherits it, the
-    caller's own property is restored. Pool EFFICACY is the measured
-    §6ay-addendum result; this pins the plumbing: the property
-    round-trips, a pooled stream runs normally, and all four starters
-    expose the parameter."""
+def test_all_spool_streams_bound_backpressure_by_default():
+    """r14 (VERDICT r13 #1 follow-through): every analytical spool
+    stream starter bounds maxFilesPerTrigger by default, at the one
+    shared constant — their probe plans broadcast batch-derived frames
+    (decon doc grams, alias batch gram keys / candidate fps) or build
+    O(b·(h+b)) decision grams under a 'trigger-bounded' invariant that
+    an unbounded cold-start backlog violates. None must be an explicit
+    opt-out, never the default."""
     import inspect
-    import json as _json
 
     from ballcone_spark.streaming.alias_stream import (
         start_chunk_alias_stream,
     )
     from ballcone_spark.streaming.decon_stream import start_decon_stream
     from ballcone_spark.streaming.dedup_stream import start_dedup_stream
-    from ballcone_spark.streaming.ingest import start_file_ingest
     from ballcone_spark.streaming.semantic_stream import (
         start_semantic_dedup_stream,
     )
-
-    for fn in (
-        start_dedup_stream,
-        start_chunk_alias_stream,
-        start_semantic_dedup_stream,
-        start_decon_stream,
-        # r15 (VERDICT r14 #5): the ingest starter joins the pool API
-        # for the three-stream cohabitation envelope
-        start_file_ingest,
-    ):
-        assert (
-            inspect.signature(fn).parameters["scheduler_pool"].default
-            is None
-        ), fn.__name__
-
-    sc = spark.sparkContext
-    sc.setLocalProperty("spark.scheduler.pool", "caller-pool")
-    try:
-        spool = tmp_path / "sp"
-        spool.mkdir()
-        with open(spool / "d0.jsonl", "w") as f:
-            f.write(_json.dumps(
-                {"doc_id": 1, "text": "w1 w2 w3 w4 w5 w6 w7 w8 w9"}
-            ) + "\n")
-        q = start_dedup_stream(
-            spark, str(spool), str(tmp_path / "idx"),
-            str(tmp_path / "dec"), str(tmp_path / "ckpt"),
-            available_now=True, scheduler_pool="stream-pool",
-        )
-        # the caller's own pool survives the scoped start
-        assert sc.getLocalProperty("spark.scheduler.pool") == "caller-pool"
-        q.awaitTermination(120)
-        assert state.read(spark, str(tmp_path / "dec")).count() == 1
-    finally:
-        sc.setLocalProperty("spark.scheduler.pool", None)
-
-
-def test_all_spool_streams_bound_backpressure_by_default():
-    """r14 (VERDICT r13 #1 follow-through): every spool stream starter
-    bounds maxFilesPerTrigger by default — their probe plans broadcast
-    batch-derived frames (decon doc grams, alias batch gram keys /
-    candidate fps) or build O(b·(h+b)) decision grams under a
-    'trigger-bounded' invariant that an unbounded cold-start backlog
-    violates. None must be an explicit opt-out, never the default."""
-    import inspect
-
-    from ballcone_spark.streaming.alias_stream import (
-        start_chunk_alias_stream,
-    )
-    from ballcone_spark.streaming.dedup_stream import (
-        SPOOL_MAX_FILES_PER_TRIGGER,
-        start_dedup_stream,
-    )
-    from ballcone_spark.streaming.semantic_stream import (
-        start_semantic_dedup_stream,
-    )
+    from ballcone_spark.streaming.spool import SPOOL_MAX_FILES_PER_TRIGGER
 
     assert SPOOL_MAX_FILES_PER_TRIGGER is not None
     for fn in (
         start_dedup_stream,
         start_chunk_alias_stream,
         start_semantic_dedup_stream,
+        start_decon_stream,
     ):
         default = inspect.signature(fn).parameters[
             "max_files_per_trigger"
